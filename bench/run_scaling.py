@@ -12,7 +12,8 @@ fixed-seed corpus parquet, so the only variable is executor-thread
 count.  Throughput comes from the job's own E11 metrics line (timed
 inside run_extract: scan → salted shuffle → fused Arrow extract stage →
 partitioned write + lineage commit; excludes JVM/session startup, which
-a real cluster amortizes over hours).
+a real cluster amortizes over hours, but includes the Python UDF
+workers' first start-up, charged at both levels).
 
 Usage:  python bench/run_scaling.py [--docs 8000] [--repeats 2]
 Writes: BENCH/BASELINE.md + prints one JSON line.
@@ -95,7 +96,6 @@ def _run_level(cores: int, corpus: str, out: str, zip_path: str,
         "--input", corpus,
         "--output", out,
         "--partitions", str(cores * parts_per_core),
-        "--warmup",
     ]
     res = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
     if res.returncode != 0:

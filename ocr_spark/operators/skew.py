@@ -111,15 +111,3 @@ def reassemble_chunks(extracted: DataFrame) -> DataFrame:
     )
     return agg.select("doc_id", stitched.alias("spans"), *other)
 
-
-def salted_repartition(df: DataFrame, num_partitions: int,
-                       cfg: ExtractConfig = DEFAULT) -> DataFrame:
-    """Shuffle docs uniformly over num_partitions on hash(doc_id).
-
-    One Exchange; downstream mapInPandas stages see balanced doc counts
-    regardless of input file layout.
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(num_partitions * 8)).cast("int")
-    )
-    return salted.repartition(num_partitions, "_salt").drop("_salt")

@@ -16,11 +16,15 @@ reprocesses only those.
 Physical plan per wave (SURVEY.md §3/EP1):
   BatchScan(parquet, pruned to doc_id+spans)
     → Filter(bucket ∈ wave ∧ bucket ∉ committed)      [partition pruning]
-    → Exchange(hash(_salt))                            [E2 — the ONLY shuffle]
+    → Exchange(hash(bucket))                           [E2 — the ONLY shuffle]
     → MapInPandas(E3–E7 fused, Arrow batches)
     → WriteFiles(partitionBy bucket)
 Lineage aggregates are computed from the files actually written (so the
 checksum covers the sink, not the plan), then the manifest swap commits.
+
+Every entry point — run_extract's waves, stream_extract's micro-batches,
+the sink-less extract_dataframe — runs a wave through ``balanced_extract``
+(shuffle key, chunk choice, sink row hash) and ``commit_wave``.
 """
 
 from __future__ import annotations
@@ -36,7 +40,6 @@ from ocr_spark.operators.skew import (
     bucket_clustered_repartition,
     chunk_spans,
     reassemble_chunks,
-    salted_repartition,
     with_bucket,
 )
 from ocr_spark.sources.formats import (
@@ -85,6 +88,80 @@ def _wave_lineage(spark: SparkSession, wave_dir: str, run_id: str,
     ]
 
 
+def balanced_extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
+                     num_partitions: int | None = None) -> DataFrame:
+    """E2→E7 on ``(doc_id, spans, bucket)``: the one shuffle, the fused
+    extract stage, and the sink columns — ``bucket``, the per-row
+    ``doc_hash`` (formats.lineage_exprs) and ``n_spans`` — computed once,
+    JVM-side, in the write pass, so the per-wave lineage scan reads only
+    those pruned columns.  With cfg.chunk_max_spans set the rows are
+    chunk rows (extra ``chunk_id``); stitch_extracted restitches them."""
+    n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
+    docs = docs.select("doc_id", "spans", "bucket")
+    # ONE exchange, clustered by the salt bucket: balances extraction
+    # work (bucket = uniform hash of doc_id, several buckets per task)
+    # AND pre-clusters rows for the partitionBy("bucket") sink, so the
+    # writer never pays the dynamic-partition sort over wide nested
+    # span rows (measured 10x slower at local[32] when shuffle key and
+    # write partition column disagreed).  With chunk_max_spans set,
+    # mega-docs are first sub-split into bounded chunk rows (E2 weight
+    # variant) and chunk_id joins the shuffle key, so one 500x-median
+    # doc spreads over many tasks instead of becoming the straggler;
+    # chunks of a doc share the bucket dir since bucket = f(doc_id).
+    if cfg.chunk_max_spans:
+        chunked = chunk_spans(docs, cfg.chunk_max_spans)
+        raw = extract_stage(chunked.repartition(n, "bucket", "chunk_id"),
+                            cfg, passthrough={"chunk_id": "int"})
+    else:
+        raw = extract_stage(bucket_clustered_repartition(docs, n), cfg)
+    _, row_hash = lineage_exprs(raw)
+    extracted = with_bucket(raw, cfg).withColumns({
+        # xxhash64 hashes the nested span array directly — 2x cheaper
+        # than serializing through to_json, same determinism
+        "doc_hash": row_hash,
+        "n_spans": F.size("spans"),
+    })
+    if cfg.chunk_max_spans:
+        # Re-cluster the EXTRACTED chunk rows by bucket before the
+        # sink.  Trade-off (round-2 ADVICE): the (bucket, chunk_id)
+        # shuffle above spreads a mega-doc's chunks across tasks —
+        # that's the whole point — but it leaves every writer task
+        # holding rows of MANY buckets, so the partitionBy("bucket")
+        # sink would emit O(num_partitions) small files per bucket
+        # dir and run its dynamic-partition sort over fully
+        # interleaved keys.  One extra Exchange of the extracted
+        # rows restores the unsplit path's sink layout: one file per
+        # bucket per wave, bucket-contiguous sort runs, and the
+        # lineage/verify scans read ~16x fewer files.  The UDF stage
+        # upstream keeps its chunk-level balance either way.
+        extracted = extracted.repartition(n, "bucket")
+    return extracted
+
+
+def commit_wave(spark: SparkSession, tbl: ParquetManifestTable,
+                extracted: DataFrame, run_id: str, watermark: str,
+                buckets: set[int] | None = None, append_runs: bool = False,
+                phase: dict | None = None) -> list[dict]:
+    """E8 write → E9 lineage → atomic commit of the entries of
+    ``buckets`` (a run dir accumulates across the waves of one run;
+    None = all).  Adds write/lineage/commit seconds to ``phase``;
+    returns the committed entries."""
+    t_w = time.time()
+    wave_dir = tbl.write_wave(extracted, run_id)              # E8
+    t_l = time.time()
+    entries = [
+        e for e in _wave_lineage(spark, wave_dir, run_id, watermark)
+        if buckets is None or e["bucket"] in buckets
+    ]                                                         # E9
+    t_c = time.time()
+    tbl.commit(entries, append_runs=append_runs)              # atomic commit
+    if phase is not None:
+        phase["write"] += t_l - t_w
+        phase["lineage"] += t_c - t_l
+        phase["commit"] += time.time() - t_c
+    return entries
+
+
 def run_extract(
     spark: SparkSession,
     docs: DataFrame,
@@ -94,32 +171,16 @@ def run_extract(
     run_id: str | None = None,
     wave_size: int | None = None,
     fail_after_waves: int | None = None,  # test hook for restart tests
-    warmup: bool = False,
 ) -> dict:
     """Run the full pipeline; returns E11 metrics.
 
     Restart semantics: calling run_extract again with the same out_table
     processes only buckets absent from the committed manifest.
-
-    ``warmup=True`` spins up the Python UDF workers (one trivial
-    mapInPandas pass at full parallelism) before the throughput timer
-    starts.  On a long-lived cluster the worker daemons exist before the
-    job's first byte, so a benchmark that charges ~7 s of concurrent
-    pandas imports to a 20 s run would mis-state steady-state
-    throughput; correctness runs leave it off.
     """
-    if warmup:
-        n = num_partitions or spark.sparkContext.defaultParallelism
-
-        def _noop(it):
-            yield from it
-
-        spark.range(0, n, 1, n).mapInPandas(_noop, "id long").count()
     t0 = time.time()
     tbl = open_table(out_table)
     assert isinstance(tbl, ParquetManifestTable) or wave_size is None
     run_id = run_id or uuid.uuid4().hex[:12]
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
     watermark = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
     committed = tbl.committed_buckets()
@@ -134,68 +195,9 @@ def run_extract(
         if fail_after_waves is not None and w_idx >= fail_after_waves:
             raise RuntimeError(f"injected failure before wave {w_idx}")
         wave_docs = docs.filter(F.col("bucket").isin([int(b) for b in wave]))
-        # ONE exchange, clustered by the salt bucket: balances extraction
-        # work (bucket = uniform hash of doc_id, several buckets per task)
-        # AND pre-clusters rows for the partitionBy("bucket") sink, so the
-        # writer never pays the dynamic-partition sort over wide nested
-        # span rows (measured 10x slower at local[32] when shuffle key and
-        # write partition column disagreed).  With chunk_max_spans set,
-        # mega-docs are first sub-split into bounded chunk rows (E2 weight
-        # variant) and chunk_id joins the shuffle key, so one 500x-median
-        # doc spreads over many tasks instead of becoming the straggler;
-        # the sink stores chunk rows (chunks of a doc share the bucket
-        # dir since bucket = f(doc_id)) and whole-document consumers
-        # restitch via stitch_extracted.
-        if cfg.chunk_max_spans:
-            chunked = chunk_spans(
-                wave_docs.select("doc_id", "spans", "bucket"),
-                cfg.chunk_max_spans,
-            )
-            balanced = chunked.repartition(num_partitions, "bucket", "chunk_id")
-            raw = extract_stage(balanced, cfg, passthrough={"chunk_id": "int"})
-        else:
-            balanced = bucket_clustered_repartition(
-                wave_docs.select("doc_id", "spans", "bucket"), num_partitions
-            )
-            raw = extract_stage(balanced, cfg)
-        _, row_hash = lineage_exprs(raw)
-        extracted = with_bucket(raw, cfg).withColumns({
-            # per-row canonical hash + span count, computed ONCE in the
-            # write pass (JVM expressions, post-UDF, shared convention
-            # formats.lineage_exprs) and persisted so the per-wave
-            # lineage scan needs only these pruned columns.  xxhash64
-            # hashes the nested span array directly — 2x cheaper than
-            # serializing through to_json, same determinism.
-            "doc_hash": row_hash,
-            "n_spans": F.size("spans"),
-        })
-        if cfg.chunk_max_spans:
-            # Re-cluster the EXTRACTED chunk rows by bucket before the
-            # sink.  Trade-off (round-2 ADVICE): the (bucket, chunk_id)
-            # shuffle above spreads a mega-doc's chunks across tasks —
-            # that's the whole point — but it leaves every writer task
-            # holding rows of MANY buckets, so the partitionBy("bucket")
-            # sink would emit O(num_partitions) small files per bucket
-            # dir and run its dynamic-partition sort over fully
-            # interleaved keys.  One extra Exchange of the extracted
-            # rows restores the unsplit path's sink layout: one file per
-            # bucket per wave, bucket-contiguous sort runs, and the
-            # lineage/verify scans read ~16x fewer files.  The UDF stage
-            # upstream keeps its chunk-level balance either way.
-            extracted = extracted.repartition(num_partitions, "bucket")
-        t_w = time.time()
-        wave_dir = tbl.write_wave(extracted, run_id)          # E8
-        phase["write"] += time.time() - t_w
-        # run_dir accumulates across waves of this run — keep this wave only
-        t_l = time.time()
-        entries = [
-            e for e in _wave_lineage(spark, wave_dir, run_id, watermark)
-            if e["bucket"] in set(wave)
-        ]  # E9
-        phase["lineage"] += time.time() - t_l
-        t_c = time.time()
-        tbl.commit(entries)                                   # atomic commit
-        phase["commit"] += time.time() - t_c
+        entries = commit_wave(
+            spark, tbl, balanced_extract(wave_docs, cfg, num_partitions),
+            run_id, watermark, buckets=set(wave), phase=phase)
         total_docs += sum(e["doc_count"] for e in entries)
         total_spans += sum(e["span_count"] for e in entries)
 
@@ -215,19 +217,12 @@ def run_extract(
 
 def extract_dataframe(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
                       num_partitions: int | None = None) -> DataFrame:
-    """Sink-less variant (EP2 flagship query): E1→E7 only.  With
-    cfg.chunk_max_spans set, runs the sub-split path and restitches, so
-    the output is document rows either way (chunk path property-tested
-    equal to the unsplit path in tests/test_extract_semantics.py)."""
-    src = docs.select("doc_id", "spans")
-    if cfg.chunk_max_spans:
-        chunked = chunk_spans(src, cfg.chunk_max_spans)
-        if num_partitions:
-            chunked = chunked.repartition(num_partitions, "doc_id", "chunk_id")
-        raw = extract_stage(chunked, cfg, passthrough={"chunk_id": "int"})
-        return reassemble_chunks(raw.select("doc_id", "chunk_id", "spans"))
-    balanced = salted_repartition(src, num_partitions) if num_partitions else src
-    return extract_stage(balanced, cfg)
+    """Sink-less variant (EP2 flagship query): E1→E7 only, through the
+    same balanced extract as the job, returned as document rows either
+    way (chunk path property-tested equal to the unsplit path in
+    tests/test_extract_semantics.py)."""
+    docs = with_bucket(docs.select("doc_id", "spans"), cfg)
+    return stitch_extracted(balanced_extract(docs, cfg, num_partitions))
 
 
 def stitch_extracted(df: DataFrame) -> DataFrame:

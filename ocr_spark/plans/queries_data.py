@@ -898,7 +898,7 @@ def diag_key_skew(spark, sf):
     (key's share × key count — 1.0 is perfectly uniform), flagging keys
     >2× uniform.  This is the profile run BEFORE choosing a shuffle
     strategy: its output decides between a plain hash join, AQE skew
-    handling, or explicit salting (join_salted_skew / salted_repartition
+    handling, or explicit salting (join_salted_skew / pipeline.balanced_extract
     are this repo's consumers of that decision).
 
     100 TB shape: one map-side-combined count agg + a single-row

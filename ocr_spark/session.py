@@ -9,15 +9,18 @@ from pyspark.sql import SparkSession
 
 def get_spark(app: str = "ocr_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """The engine's session.  ``master=None`` keeps the launcher's master
+    (spark-submit --master, or pyspark's local[*] default)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
     # shuffle partitions ≈ cores in local mode (guide: default 200 is wrong
     # for both tiny and huge local data); on a real cluster this is set per
     # job size / AQE coalesces it.
     n_shuffle = shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)
+    b = SparkSession.builder
+    if master is not None:
+        b = b.master(master)
     b = (
-        SparkSession.builder.master(master)
-        .appName(app)
+        b.appName(app)
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -13,6 +13,10 @@ against either of two implementations of one small interface:
     entry is committed, so partially-written runs are invisible and
     restart is idempotent.
 
+Both writers — run_extract's waves and stream_extract's micro-batches —
+reach the table only through plans/pipeline.py:commit_wave (write_wave →
+lineage → commit); every data file is ``SINK_CODEC`` parquet.
+
 Manifest layout:
   <root>/data/run=<run_id>/bucket=<k>/part-*.parquet
   <root>/_manifest.json   {"entries": [{bucket, run_id, path,
@@ -27,10 +31,15 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+# zstd: ~30-40% smaller than snappy on text-heavy spans at similar encode
+# speed — at 10^12-doc scale the sink's byte volume IS the dominant I/O cost
+SINK_CODEC = "zstd"
+
 
 def lineage_exprs(df):
     """The ONE chunk-aware lineage convention, shared by the write path
-    (plans/pipeline.py) and the read-side audit below: returns
+    (pipeline.balanced_extract, which every writer uses) and the
+    read-side audit below: returns
     ``(is_doc_row, row_hash)`` expressions.
 
     A table may MIX doc-granular and chunk rows — a job can be restarted
@@ -209,14 +218,13 @@ class ParquetManifestTable:
             "mergeSchema", "true").parquet(*[e["path"] for e in entries])
         n = num_partitions or spark.sparkContext.defaultParallelism
         out = self.run_dir(run_id)
-        codec = os.environ.get("OCR_SPARK_CODEC", "zstd")
         # "run" is a DISCOVERED partition column (dir layout run=<id>) —
         # persisting it as a data column would collide with discovery on
         # the next read of the compacted files; "bucket" stays because
         # partitionBy consumes it back into the directory layout
         (df.drop("run")
          .repartition(n, "bucket")  # cluster: one file set per bucket
-         .write.mode("append").option("compression", codec)
+         .write.mode("append").option("compression", SINK_CODEC)
          .partitionBy("bucket").parquet(out))
 
         by_bucket: dict[int, dict] = {}
@@ -292,11 +300,7 @@ class ParquetManifestTable:
     # -- I/O ----------------------------------------------------------------
     def write_wave(self, df: DataFrame, run_id: str) -> str:
         out = self.run_dir(run_id)
-        # zstd: ~30-40% smaller than snappy on text-heavy spans at similar
-        # encode speed — at 10^12-doc scale the sink's byte volume IS the
-        # dominant I/O cost; override via OCR_SPARK_CODEC
-        codec = os.environ.get("OCR_SPARK_CODEC", "zstd")
-        (df.write.mode("append").option("compression", codec)
+        (df.write.mode("append").option("compression", SINK_CODEC)
          .partitionBy("bucket").parquet(out))
         return out
 

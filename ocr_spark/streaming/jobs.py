@@ -5,7 +5,9 @@ consumed as a file stream with watermarked tumbling / sliding / session
 windows and stateful dedup, and the extraction pipeline itself runs as a
 micro-batch stream (``stream_extract``) with exactly-once sink commits
 via the manifest table — one manifest run per micro-batch, idempotent
-under Spark's foreachBatch retries.
+under Spark's foreachBatch retries.  Each micro-batch runs the batch
+job's own extract and wave-commit functions (plans/pipeline.py), so the
+two surfaces cannot drift apart.
 
 Everything is the built-in Structured Streaming operator set —
 ``readStream`` → stateless/stateful transformations → ``writeStream`` —
@@ -18,13 +20,14 @@ plans/queries_rel.py; tests/test_streaming.py asserts stream ≡ batch.
 from __future__ import annotations
 
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_spark.config import DEFAULT, ExtractConfig
-from ocr_spark.operators.extract import extract_stage
 from ocr_spark.operators.skew import with_bucket
+from ocr_spark.plans.pipeline import balanced_extract, commit_wave
 from ocr_spark.sources.formats import ParquetManifestTable
 
 
@@ -124,7 +127,10 @@ def stream_extract(spark: SparkSession, docs_dir: str, out_table: str,
     extracted incrementally and committed to the manifest table with
     exactly-once semantics.
 
-    Sink protocol per micro-batch (run_id = batch id):
+    Each micro-batch is one wave of the batch job: the same
+    pipeline.balanced_extract (so cfg.chunk_max_spans applies here too)
+    and pipeline.commit_wave, in its ``append_runs`` mode, under
+    run_id = batch id.  Sink protocol per micro-batch:
       * batch already in the manifest → Spark retried a committed batch →
         no-op;
       * stale uncommitted run dir (crash between write and commit) →
@@ -133,7 +139,6 @@ def stream_extract(spark: SparkSession, docs_dir: str, out_table: str,
     """
     schema = spark.read.parquet(docs_dir).schema
     tbl = ParquetManifestTable(out_table)
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         run_id = f"batch{batch_id:09d}"
@@ -141,18 +146,9 @@ def stream_extract(spark: SparkSession, docs_dir: str, out_table: str,
             return  # retried, already-committed micro-batch
         shutil.rmtree(tbl.run_dir(run_id), ignore_errors=True)
         docs = with_bucket(batch_df.select("doc_id", "spans"), cfg)
-        clustered = docs.repartition(n_parts, "bucket")
-        extracted = with_bucket(extract_stage(clustered, cfg), cfg).withColumns({
-            "doc_hash": F.xxhash64("doc_id", "spans"),
-            "n_spans": F.size("spans"),
-        })
-        wave_dir = tbl.write_wave(extracted, run_id)
-        from ocr_spark.plans.pipeline import _wave_lineage
-
-        import time as _time
-        watermark = _time.strftime("%Y-%m-%dT%H:%M:%SZ", _time.gmtime())
-        tbl.commit(_wave_lineage(spark, wave_dir, run_id, watermark),
-                   append_runs=True)
+        watermark = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        commit_wave(spark, tbl, balanced_extract(docs, cfg, num_partitions),
+                    run_id, watermark, append_runs=True)
 
     q = (
         spark.readStream.schema(schema).parquet(docs_dir)

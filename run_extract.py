@@ -41,22 +41,14 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--fail-after-waves", type=int, default=None,
                     help="test hook: crash after N committed waves")
-    ap.add_argument("--warmup", action="store_true",
-                    help="spin up UDF workers before the throughput timer")
     args = ap.parse_args()
-
-    from pyspark.sql import SparkSession
 
     from ocr_spark.config import ExtractConfig
     from ocr_spark.plans.pipeline import run_extract
+    from ocr_spark.session import get_spark
     from ocr_spark.sources.corpus import generate_interleaved
 
-    spark = SparkSession.builder.appName("ocr_spark_extract").getOrCreate()
-    # sink codec is owned by formats.py (write .option("compression",
-    # $OCR_SPARK_CODEC), default zstd — measured ≈equal write time to
-    # snappy, ~31% smaller files); a per-write option outranks any
-    # session conf, so override via the env var, not --conf
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("ocr_spark_extract")  # keeps spark-submit's --master
     cfg = ExtractConfig(salt_buckets=args.buckets,
                         chunk_max_spans=args.chunk_max_spans,
                         keep_invisible_text=not args.drop_invisible_text,
@@ -71,9 +63,9 @@ def main() -> None:
     metrics = run_extract(
         spark, docs, args.output, cfg=cfg,
         num_partitions=args.partitions, wave_size=args.wave_size,
-        fail_after_waves=args.fail_after_waves, warmup=args.warmup,
+        fail_after_waves=args.fail_after_waves,
     )
-    print(json.dumps(metrics))
+    print(json.dumps({**metrics, "master": spark.sparkContext.master}))
     spark.stop()
 
 

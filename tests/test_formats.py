@@ -48,12 +48,12 @@ _SPAN_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
 
 
 def _commit_wave(spark, tbl, run_id, lo, hi):
-    """Write one micro-batch-style run covering doc ids [lo, hi) — the
-    same write_wave → _wave_lineage → commit(append_runs=True) flow the
-    streaming sink uses (streaming/jobs.py:138-155)."""
+    """Write one micro-batch-style run covering doc ids [lo, hi) through
+    the wave commit the streaming sink uses (pipeline.commit_wave with
+    append_runs=True)."""
     from pyspark.sql import functions as F
 
-    from ocr_spark.plans.pipeline import _wave_lineage
+    from ocr_spark.plans.pipeline import commit_wave
     from ocr_spark.sources.formats import lineage_exprs
 
     rows = [
@@ -68,10 +68,8 @@ def _commit_wave(spark, tbl, run_id, lo, hi):
     _, row_hash = lineage_exprs(df)
     out = df.withColumns({"doc_hash": row_hash,
                           "n_spans": F.size("spans")})
-    wave_dir = tbl.write_wave(out, run_id)
-    entries = _wave_lineage(spark, wave_dir, run_id, "2026-01-01T00:00:00Z")
-    tbl.commit(entries, append_runs=True)
-    return entries
+    return commit_wave(spark, tbl, out, run_id, "2026-01-01T00:00:00Z",
+                       append_runs=True)
 
 
 def _table_key(spark, tbl):

@@ -64,16 +64,20 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir):
 def test_extract_stage_single_exchange_single_python_stage(spark):
     from ocr_spark.operators.extract import extract_stage
     from ocr_spark.operators.skew import bucket_clustered_repartition, with_bucket
+    from ocr_spark.plans.pipeline import balanced_extract
     from ocr_spark.sources.corpus import generate_interleaved
 
     docs = with_bucket(generate_interleaved(spark, 10, seed=1, partitions=2))
-    plan = _plan(extract_stage(bucket_clustered_repartition(docs, 4)))
-    assert plan.count("Exchange") == 1, f"expected exactly 1 shuffle:\n{plan}"
-    assert plan.count("MapInPandas") >= 1
-    # E3–E7 are fused: exactly one Python stage in the extract chain
-    # (corpus generation itself adds one more upstream of the exchange)
-    post_exchange = plan.split("Exchange", 1)[0]
-    assert post_exchange.count("MapInPandas") == 1
+    # the bare stage, and the job's balanced extract on the default path
+    for df in (extract_stage(bucket_clustered_repartition(docs, 4)),
+               balanced_extract(docs, num_partitions=4)):
+        plan = _plan(df)
+        assert plan.count("Exchange") == 1, f"expected exactly 1 shuffle:\n{plan}"
+        assert plan.count("MapInPandas") >= 1
+        # E3–E7 are fused: exactly one Python stage in the extract chain
+        # (corpus generation itself adds one more upstream of the exchange)
+        post_exchange = plan.split("Exchange", 1)[0]
+        assert post_exchange.count("MapInPandas") == 1
 
 
 @pytest.mark.parametrize("name", ["dedup_minhash_lsh", "dedup_ngram_jaccard"])

@@ -154,6 +154,14 @@ def test_dedup_drops_late_duplicates(spark, tmp_path):
     assert out2.filter(F.col("event_id") == 5).count() == 1
 
 
+def _doc_key(df):
+    """Document rows as sorted (doc_id, spans json) pairs."""
+    return sorted(
+        (r["doc_id"], r["j"]) for r in
+        df.select("doc_id", F.to_json("spans").alias("j")).collect()
+    )
+
+
 def test_stream_extract_equals_batch_and_is_exactly_once(spark, tmp_path):
     from ocr_spark.plans.pipeline import extract_dataframe
     from ocr_spark.sources.corpus import generate_interleaved
@@ -168,17 +176,13 @@ def test_stream_extract_equals_batch_and_is_exactly_once(spark, tmp_path):
     stream_extract(spark, src, out, ck, num_partitions=8)
     got = ParquetManifestTable(out).read(spark)
     want = extract_dataframe(spark.read.parquet(src))
-    key = lambda df: sorted(
-        (r["doc_id"], r["j"]) for r in
-        df.select("doc_id", F.to_json("spans").alias("j")).collect()
-    )
-    assert key(got) == key(want)
+    assert _doc_key(got) == _doc_key(want)
 
     # restart with nothing new → no duplicate rows, no new manifest runs
     runs_before = ParquetManifestTable(out).committed_runs()
     stream_extract(spark, src, out, ck, num_partitions=8)
     assert ParquetManifestTable(out).committed_runs() == runs_before
-    assert key(ParquetManifestTable(out).read(spark)) == key(want)
+    assert _doc_key(ParquetManifestTable(out).read(spark)) == _doc_key(want)
 
     # second wave of NEW docs appended to the source → incremental
     # extraction, union of both waves visible, first wave not recomputed
@@ -190,6 +194,31 @@ def test_stream_extract_equals_batch_and_is_exactly_once(spark, tmp_path):
     got2 = ParquetManifestTable(out).read(spark)
     assert got2.count() == 90
     assert len(ParquetManifestTable(out).committed_runs()) > len(runs_before)
+
+
+def test_stream_extract_honours_chunk_max_spans(spark, tmp_path):
+    """stream_extract runs the batch job's balanced extract, so a chunked
+    config commits chunk rows; they verify against the lineage and
+    restitch to the unsplit batch output."""
+    from ocr_spark.config import ExtractConfig
+    from ocr_spark.plans.pipeline import extract_dataframe, stitch_extracted
+    from ocr_spark.sources.corpus import generate_interleaved
+    from ocr_spark.sources.formats import ParquetManifestTable
+
+    src = str(tmp_path / "docs_src")
+    out = str(tmp_path / "out")
+    generate_interleaved(spark, 40, seed=11, partitions=2).write.parquet(src)
+
+    stream_extract(spark, src, out, str(tmp_path / "ck"),
+                   cfg=ExtractConfig(salt_buckets=8, chunk_max_spans=3),
+                   num_partitions=4)
+    tbl = ParquetManifestTable(out)
+    got = tbl.read(spark)
+    assert "chunk_id" in got.columns
+    assert got.filter(F.col("chunk_id") > 0).count() > 0
+    assert tbl.verify(spark) == []
+    assert _doc_key(stitch_extracted(got)) == _doc_key(
+        extract_dataframe(spark.read.parquet(src)))
 
 
 def test_stateful_running_totals_across_restarts(spark, tmp_path):

@@ -10,8 +10,9 @@ on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 Each query is forced end-to-end with a noop-format write (full
 materialization on executors, nothing collected to the driver), so the
 timings cover scan → shuffle → sink, not just plan construction.
-Scaling-efficiency evidence (same job at local[8] vs local[32]) lives in
-bench/run_scaling.py → BENCH/BASELINE.md; this file is the per-round
+Scaling-efficiency evidence (same job at N vs 4N cores) comes from
+bench/run_scaling.py, one bracketed session per run, and the pooled
+verdict in BENCH/BASELINE.md; this file is the per-round
 single-parallelism snapshot the driver records as BENCH_r{N}.json.
 """
 
@@ -305,9 +306,9 @@ def main() -> None:
         "calibration_sec_start": calib_start,
         "calibration_sec_end": calib_end,
         # memory-bandwidth instrument at both ends: the better
-        # contention diagnostic for this host (correlates 0.74 with
-        # multi-core throughput vs 0.42 for the CPU canary —
-        # BENCH/membw_calibration.jsonl); quiet band is >= ~9.2 GB/s
+        # contention diagnostic for this host (a 10-leg sweep correlated
+        # it 0.74 with local[8] throughput vs 0.42 for the CPU canary);
+        # quiet windows read >= ~9.2 GB/s
         "membw_gbps_start": membw_start,
         "membw_gbps_end": membw_end,
         "extract_docs_per_sec": metrics.get("docs_per_sec"),

@@ -1,9 +1,10 @@
 """Extraction-pipeline + multimodal query entries for the driver harness.
 
 The full E1→E7 pipeline runs over the deterministic synthetic interleaved
-corpus (Python payload generation → not ANSI-SQL-expressible → rows-only
-driver check; the real correctness gate for these is the span-sequence
-golden/property suite in tests/).  The restitch ORDERING semantic itself
+corpus.  Python payload parsing is not ANSI-SQL-expressible, so its
+oracle reads a span table materialized by the single-process extractor
+(tests/golden/gen_expected_spans.py); the span-sequence golden/property
+suite in tests/ gates it further.  The restitch ORDERING semantic itself
 (E7 — dense order induced by offset sort) is additionally exposed as an
 oracle-checked query over the flat documents table.
 """
@@ -19,14 +20,6 @@ from pyspark.sql import functions as F
 from ocr_spark.operators.extract import explode_extracted, extract_stage
 from ocr_spark.plans.registry import q, t
 from ocr_spark.sources.corpus import generate_interleaved
-
-
-@q("extract_pipeline")  # Python payload parsing → rows-only (tests/ hold goldens)
-def extract_pipeline(spark, sf):
-    """Flagship: synthesize 300 interleaved docs (deterministic seed),
-    run the fused E3–E7 extraction, return the exploded span table."""
-    docs = generate_interleaved(spark, 300, seed=42, partitions=8, mega_every=100)
-    return explode_extracted(extract_stage(docs)).orderBy("doc_id", "span_order")
 
 
 _EXPECTED_SPANS = os.path.join(

@@ -77,16 +77,6 @@ _CHANGED_THIS_ROUND = [
 ]
 
 
-#: never-checked operators whose FIRST driver row is deliberately
-#: deferred to the next round — ONLY legitimate while the window is
-#: genuinely saturated (round 4 was: 9 changed + 20 first-rows + all 21
-#: r01-stale rotations).  Round 5's window has room for every
-#: never-checked entry, so the list is empty; the scoping in
-#: check_order and tests/test_registry_window.py re-arms the hard
-#: never-checked gate automatically.
-_DEFER_FIRST_CHECK: list[str] = []
-
-
 def _check_history() -> dict[str, int]:
     """name → newest round with a driver CORRECTNESS row, parsed from
     the repo-root CORRECTNESS_r*.json files the driver writes each
@@ -111,38 +101,17 @@ def _check_history() -> dict[str, int]:
     return newest
 
 
-#: the round whose window saturation justified _DEFER_FIRST_CHECK;
-#: deferral applies ONLY while this is the newest CORRECTNESS round —
-#: the single source of truth for check_order AND the window tests
-#: (tests/test_registry_window.py), so the scoping can never drift
-#: between the scheduler and its gates.
-_DEFERRAL_ROUND = 3
-
-
-def active_deferrals() -> set:
-    """Deferred-first-check names, scoped to the saturating round: the
-    moment a newer CORRECTNESS file appears, deferred entries fall back
-    to ordinary never-checked (first in priority group 1) and the hard
-    never-checked gates re-arm automatically."""
-    newest = _check_history()
-    latest = max(newest.values(), default=0)
-    return set(_DEFER_FIRST_CHECK) if latest == _DEFERRAL_ROUND else set()
-
-
 def check_order(names) -> list[str]:
     """The driver-check ordering for ``names``: changed-this-round
     first (stale rows), then never-checked, then oldest-rowed first;
     registration index breaks ties deterministically."""
     newest = _check_history()
     changed = {n: i for i, n in enumerate(_CHANGED_THIS_ROUND)}
-    deferred = active_deferrals()
     orig = {n: i for i, n in enumerate(names)}
 
     def key(n):
         if n in changed:
             return (0, changed[n], 0)
-        if n in deferred and n not in newest:
-            return (2, 0, orig[n])  # first row deferred one round
         return (1, newest.get(n, 0), orig[n])
 
     return sorted(names, key=key)

@@ -4,9 +4,9 @@
 The straight-line single-process extractor (make_docs + extract_doc —
 the same independent path that produced extract_seed42_n120.json) runs
 over the deterministic seed-42 corpus with the EXACT knobs the
-``extract_pipeline`` query uses (n=300, mega_every=100), and the result
-is written as a flat parquet.  DuckDB reads it with ``read_parquet``,
-which turns the previously rows-only extraction pipeline into a full
+``extract_pipeline_checked`` query uses (n=300, mega_every=100), and the
+result is written as a flat parquet.  DuckDB reads it with
+``read_parquet``, which makes the extraction pipeline a full
 rows+schema+value-hash driver check: the Spark cluster run must equal
 this independently materialized table cell-for-cell.
 

@@ -75,3 +75,37 @@ def test_real_headline_names_fit():
     line = bench.compact_line(payload)
     assert len(line) < 2000
     assert json.loads(line)["queries_total"] == len(names)
+
+
+def _run_scaling():
+    import importlib.util
+
+    path = Path(__file__).resolve().parents[1] / "bench" / "run_scaling.py"
+    spec = importlib.util.spec_from_file_location("run_scaling", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _legs(*docs_per_sec):
+    return [{"docs_per_sec": v} for v in docs_per_sec]
+
+
+def test_bracketed_pair_math():
+    """Each 4N leg is judged against the mean of its two N neighbours;
+    the session number is the median of those pair efficiencies."""
+    pairs, median = _run_scaling().bracketed_pairs(
+        _legs(1000, 3600, 800, 2880, 800))
+    assert pairs == [
+        # 3600 / (4 * 900), 3600 / 4000, 3600 / 3200, |1000 - 800| / 900
+        {"hi_leg": 1, "eff": 1.0, "eff_vs_before": 0.9,
+         "eff_vs_after": 1.125, "lo_spread": 0.222},
+        {"hi_leg": 3, "eff": 0.9, "eff_vs_before": 0.9,
+         "eff_vs_after": 0.9, "lo_spread": 0.0},
+    ]
+    assert median == 0.95  # even pair count: mean of the middle two
+
+    pairs, median = _run_scaling().bracketed_pairs(
+        _legs(100, 320, 100, 400, 100, 280, 100))
+    assert [p["eff"] for p in pairs] == [0.8, 1.0, 0.7]
+    assert median == 0.8  # odd pair count: the middle pair

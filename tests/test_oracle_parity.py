@@ -25,9 +25,8 @@ def duck(sf_dir):
 
 def test_registry_shape():
     assert len(QUERIES) >= 40, f"operator surface too small: {len(QUERIES)}"
-    assert set(ORACLES) <= set(QUERIES)
-    # most of the surface must be oracle-checked, not rows-only
-    assert len(ORACLES) >= 0.75 * len(QUERIES)
+    # every registered query is oracle-checked; none is rows-only
+    assert set(ORACLES) == set(QUERIES)
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -52,9 +51,3 @@ def test_oracle_parity(name, spark, sf_dir, duck):
     df = QUERIES[name](spark, sf_dir)
     res = compare(df, duck, ORACLES[name])
     assert res["match"], f"{name}: {res['diff']} (rows {res['rows_spark']}/{res['rows_duck']})"
-
-
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    assert df.count() >= 0 and len(df.schema) > 0

@@ -23,46 +23,11 @@ def test_changed_this_round_inside_window():
         f"stand): {missing}")
 
 
-def _active_deferrals() -> set:
-    """The registry's own scoping (single source of truth — round-4
-    ADVICE flagged the test re-deriving it; a drifted copy would make
-    the gates enforce a different set than check_order uses)."""
-    return registry.active_deferrals()
-
-
 def test_never_checked_inside_window():
     newest = registry._check_history()
     win = set(_window())
-    never = [n for n in registry.QUERIES if n not in newest]
-    deferred = _active_deferrals()
-    missing = [n for n in never if n not in win and n not in deferred]
+    missing = [n for n in registry.QUERIES if n not in newest and n not in win]
     assert not missing, f"never-checked queries outside window: {missing}"
-
-
-def test_deferral_only_under_saturation():
-    """_DEFER_FIRST_CHECK may hold only never-checked entries, and only
-    while the window is genuinely full of higher-priority work: every
-    slot must be a changed / first-row / staleness-bound rotation entry.
-    If a slack slot exists, deferral is unjustified and must fail."""
-    newest = registry._check_history()
-    if not newest:
-        return
-    deferred = registry._DEFER_FIRST_CHECK
-    rowed = [n for n in deferred if n in newest]
-    assert not rowed, f"deferred entries already have driver rows: {rowed}"
-    if not deferred:
-        return
-    latest = max(newest.values())
-    win = _window()
-    # a slot is justified by: changed impl, first row needed, or a green
-    # row that would breach the 2-round staleness bound if skipped now
-    slack = [n for n in win
-             if n not in registry._CHANGED_THIS_ROUND
-             and n in newest
-             and (latest + 1) - newest[n] <= 2]
-    assert not slack, (
-        f"window holds skippable entries while first checks are "
-        f"deferred: {slack}")
 
 
 def _staleness_bound() -> int:
@@ -91,14 +56,13 @@ def test_stalest_rows_inside_window():
     win = set(_window())
 
     hard = set(registry._CHANGED_THIS_ROUND) | {
-        n for n in registry.QUERIES
-        if n not in newest and n not in _active_deferrals()}
+        n for n in registry.QUERIES if n not in newest}
     missing_hard = sorted(hard - win)
     assert not missing_hard, (
         f"changed/never-checked queries outside window: {missing_hard}")
 
     # overflow = green-rowed entries the window can't refresh this round
-    # (no-row entries are covered by the hard/deferral gates above)
+    # (no-row entries are covered by the hard gate above)
     overflow = sorted(n for n in registry.QUERIES
                       if n not in win and n in newest and newest[n] < latest)
     bound = _staleness_bound()

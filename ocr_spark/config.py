@@ -76,9 +76,9 @@ class ExtractConfig:
     # chunks of <= this many spans before the UDF stage, bounding
     # per-task work even for 500x-median mega-docs (skew.chunk_spans).
     # None = no sub-split (doc granularity; goldens pinned to this).
-    # The sink then stores chunk rows (extra chunk_id column); readers
-    # that need whole documents restitch via pipeline.stitch_extracted —
-    # one JVM flatten+renumber shuffle keyed on doc_id.
+    # balanced_extract restitches the chunks before the sink (one more
+    # exchange, on bucket), so the table, its lineage and every reader
+    # see the same whole-document rows and checksums either way.
     chunk_max_spans: int | None = None
 
 

@@ -31,7 +31,7 @@ def extract_stage(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
 
     ``passthrough`` maps extra column names to their DDL types; they ride
     through the Arrow batch untouched (used by the mega-doc chunk path to
-    keep chunk_id attached to each sub-document)."""
+    keep chunk_id and bucket attached to each sub-document)."""
     import pandas as pd
 
     extra = passthrough or {}

@@ -96,18 +96,17 @@ def chunk_spans(df: DataFrame, max_spans: int) -> DataFrame:
 def reassemble_chunks(extracted: DataFrame) -> DataFrame:
     """E7 grouped restitch for the chunk path: collect a document's
     extracted chunks, order by chunk_id, flatten, re-number ``order``
-    densely — all JVM (collect_list + sort_array + flatten + transform),
-    one shuffle keyed on doc_id."""
+    densely — all JVM (collect_list + sort_array + flatten + transform).
+    Columns other than doc_id/chunk_id/spans join the group key, so a
+    per-doc column such as ``bucket`` lets an input already clustered on
+    it group without another shuffle."""
     other = [c for c in extracted.columns
              if c not in ("doc_id", "chunk_id", "spans")]
-    agg = extracted.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("chunk_id", "spans"))).alias("_cs"),
-        *[F.first(c).alias(c) for c in other],
-    )
+    agg = extracted.groupBy("doc_id", *other).agg(
+        F.sort_array(F.collect_list(F.struct("chunk_id", "spans"))).alias("_cs"))
     stitched = F.expr(
         "transform(flatten(transform(_cs, x -> x.spans)), (s, i) ->"
         " struct(s.kind as kind, s.text as text,"
         " s.media_ref as media_ref, i as order))"
     )
     return agg.select("doc_id", stitched.alias("spans"), *other)
-

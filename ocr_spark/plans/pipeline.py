@@ -7,11 +7,11 @@ only."  Reference code: REF:unavailable (SURVEY.md §0).
 
 Unit of commit = salt bucket (stable pure function of doc_id — physical
 partition ids would not survive a parallelism change; see
-operators/skew.py).  Work proceeds in waves of buckets; each wave is
-written to its own run directory and committed to the manifest
-atomically, so a crash loses at most the in-flight wave and a restart
-anti-joins pending buckets against committed lineage (E10) and
-reprocesses only those.
+operators/skew.py).  Work proceeds in waves of buckets; every wave of a
+run appends its bucket directories to the run's one directory, and the
+wave's buckets are committed to the manifest atomically, so a crash
+loses at most the in-flight wave and a restart anti-joins pending
+buckets against committed lineage (E10) and reprocesses only those.
 
 Physical plan per wave (SURVEY.md §3/EP1):
   BatchScan(parquet, pruned to doc_id+spans)
@@ -19,6 +19,9 @@ Physical plan per wave (SURVEY.md §3/EP1):
     → Exchange(hash(bucket))                           [E2 — the ONLY shuffle]
     → MapInPandas(E3–E7 fused, Arrow batches)
     → WriteFiles(partitionBy bucket)
+With chunk_max_spans set, the Exchange is on (bucket, chunk_id) and a
+second Exchange(hash(bucket)) feeds the chunk restitch before the sink,
+so the table stores the same whole-document rows either way.
 Lineage aggregates are computed from the files actually written (so the
 checksum covers the sink, not the plan), then the manifest swap commits.
 
@@ -50,24 +53,26 @@ from ocr_spark.sources.formats import (
 
 
 def _wave_lineage(spark: SparkSession, wave_dir: str, run_id: str,
-                  watermark: str) -> list[dict]:
+                  watermark: str, buckets: set[int] | None) -> list[dict]:
     # The per-doc hash + span count were computed JVM-side in the write
     # pass and stored as plain int64 columns, so this verification scan
     # prunes to three tiny columns — it never re-deserializes the nested
     # span payloads (measured: the old to_json re-read was a fixed ~7s
-    # that did not scale with cores and dominated Amdahl overhead).
-    df = spark.read.option("basePath", wave_dir).parquet(wave_dir)
-    # shared chunk-aware convention (formats.lineage_exprs): doc rows are
-    # the chunk_id==0 (or null) rows, so documents are counted without a
-    # countDistinct — whose extra distinct pass is pure fixed overhead.
-    # The checksum here reads the STORED doc_hash column (cheap pruned
-    # scan — the write pass computed it with the same lineage_exprs
-    # hash); the deep payload-rehash lives in ParquetManifestTable.verify.
-    is_doc, _ = lineage_exprs(df)
+    # that did not scale with cores and dominated Amdahl overhead).  The
+    # explicit schema skips footer inference, and the bucket filter
+    # prunes the scan to this wave's directories: earlier waves of the
+    # run share wave_dir and are never re-read.  The checksum reads the
+    # STORED doc_hash column; the deep payload-rehash lives in
+    # ParquetManifestTable.verify.
+    df = (spark.read.schema("doc_hash BIGINT, n_spans INT")
+          .option("basePath", wave_dir).parquet(wave_dir))
+    if buckets is not None:
+        # one SQL IN list: Column.isin makes a py4j round trip per value
+        df = df.where(f"bucket IN ({', '.join(map(str, sorted(buckets)))})")
     rows = (
         df.groupBy("bucket")
         .agg(
-            F.count(F.when(is_doc, 1)).alias("doc_count"),
+            F.count("*").alias("doc_count"),
             F.sum("n_spans").alias("span_count"),
             # order-insensitive per-bucket checksum over canonical doc payloads
             F.expr("bit_xor(doc_hash)").alias("checksum"),
@@ -90,52 +95,40 @@ def _wave_lineage(spark: SparkSession, wave_dir: str, run_id: str,
 
 def balanced_extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
                      num_partitions: int | None = None) -> DataFrame:
-    """E2→E7 on ``(doc_id, spans, bucket)``: the one shuffle, the fused
-    extract stage, and the sink columns — ``bucket``, the per-row
+    """E2→E7 on ``(doc_id, spans, bucket)``: the shuffle, the fused
+    extract stage, and the sink columns — ``bucket``, the per-doc
     ``doc_hash`` (formats.lineage_exprs) and ``n_spans`` — computed once,
     JVM-side, in the write pass, so the per-wave lineage scan reads only
-    those pruned columns.  With cfg.chunk_max_spans set the rows are
-    chunk rows (extra ``chunk_id``); stitch_extracted restitches them."""
+    those pruned columns.  Rows are whole documents on either path."""
     n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
     docs = docs.select("doc_id", "spans", "bucket")
-    # ONE exchange, clustered by the salt bucket: balances extraction
-    # work (bucket = uniform hash of doc_id, several buckets per task)
-    # AND pre-clusters rows for the partitionBy("bucket") sink, so the
-    # writer never pays the dynamic-partition sort over wide nested
-    # span rows (measured 10x slower at local[32] when shuffle key and
-    # write partition column disagreed).  With chunk_max_spans set,
-    # mega-docs are first sub-split into bounded chunk rows (E2 weight
-    # variant) and chunk_id joins the shuffle key, so one 500x-median
-    # doc spreads over many tasks instead of becoming the straggler;
-    # chunks of a doc share the bucket dir since bucket = f(doc_id).
     if cfg.chunk_max_spans:
+        # E2 weight variant: mega-docs are sub-split into bounded chunk
+        # rows and chunk_id joins the shuffle key, so one 500x-median doc
+        # spreads over many tasks instead of becoming the straggler.  The
+        # second exchange, on bucket, restitches each doc (its chunks
+        # share a bucket, so the (doc_id, bucket) grouping needs no
+        # further shuffle) and leaves the sink the unsplit path's layout.
         chunked = chunk_spans(docs, cfg.chunk_max_spans)
-        raw = extract_stage(chunked.repartition(n, "bucket", "chunk_id"),
-                            cfg, passthrough={"chunk_id": "int"})
+        raw = extract_stage(chunked.repartition(n, "bucket", "chunk_id"), cfg,
+                            passthrough={"chunk_id": "int", "bucket": "int"})
+        extracted = reassemble_chunks(raw.repartition(n, "bucket"))
     else:
+        # ONE exchange, clustered by the salt bucket: balances extraction
+        # work (bucket = uniform hash of doc_id, several buckets per task)
+        # AND pre-clusters rows for the partitionBy("bucket") sink, so the
+        # writer never pays the dynamic-partition sort over wide nested
+        # span rows (measured 10x slower at local[32] when shuffle key and
+        # write partition column disagreed).
         raw = extract_stage(bucket_clustered_repartition(docs, n), cfg)
-    _, row_hash = lineage_exprs(raw)
-    extracted = with_bucket(raw, cfg).withColumns({
+        extracted = with_bucket(raw, cfg)
+    _, doc_hash = lineage_exprs(extracted)
+    return extracted.withColumns({
         # xxhash64 hashes the nested span array directly — 2x cheaper
         # than serializing through to_json, same determinism
-        "doc_hash": row_hash,
+        "doc_hash": doc_hash,
         "n_spans": F.size("spans"),
     })
-    if cfg.chunk_max_spans:
-        # Re-cluster the EXTRACTED chunk rows by bucket before the
-        # sink.  Trade-off (round-2 ADVICE): the (bucket, chunk_id)
-        # shuffle above spreads a mega-doc's chunks across tasks —
-        # that's the whole point — but it leaves every writer task
-        # holding rows of MANY buckets, so the partitionBy("bucket")
-        # sink would emit O(num_partitions) small files per bucket
-        # dir and run its dynamic-partition sort over fully
-        # interleaved keys.  One extra Exchange of the extracted
-        # rows restores the unsplit path's sink layout: one file per
-        # bucket per wave, bucket-contiguous sort runs, and the
-        # lineage/verify scans read ~16x fewer files.  The UDF stage
-        # upstream keeps its chunk-level balance either way.
-        extracted = extracted.repartition(n, "bucket")
-    return extracted
 
 
 def commit_wave(spark: SparkSession, tbl: ParquetManifestTable,
@@ -149,10 +142,7 @@ def commit_wave(spark: SparkSession, tbl: ParquetManifestTable,
     t_w = time.time()
     wave_dir = tbl.write_wave(extracted, run_id)              # E8
     t_l = time.time()
-    entries = [
-        e for e in _wave_lineage(spark, wave_dir, run_id, watermark)
-        if buckets is None or e["bucket"] in buckets
-    ]                                                         # E9
+    entries = _wave_lineage(spark, wave_dir, run_id, watermark, buckets)  # E9
     t_c = time.time()
     tbl.commit(entries, append_runs=append_runs)              # atomic commit
     if phase is not None:
@@ -179,7 +169,6 @@ def run_extract(
     """
     t0 = time.time()
     tbl = open_table(out_table)
-    assert isinstance(tbl, ParquetManifestTable) or wave_size is None
     run_id = run_id or uuid.uuid4().hex[:12]
     watermark = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
@@ -218,18 +207,7 @@ def run_extract(
 def extract_dataframe(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
                       num_partitions: int | None = None) -> DataFrame:
     """Sink-less variant (EP2 flagship query): E1→E7 only, through the
-    same balanced extract as the job, returned as document rows either
-    way (chunk path property-tested equal to the unsplit path in
-    tests/test_extract_semantics.py)."""
+    same balanced extract as the job (chunk path property-tested equal
+    to the unsplit path in tests/test_extract_semantics.py)."""
     docs = with_bucket(docs.select("doc_id", "spans"), cfg)
-    return stitch_extracted(balanced_extract(docs, cfg, num_partitions))
-
-
-def stitch_extracted(df: DataFrame) -> DataFrame:
-    """Whole-document view of a stored extraction table: if the table
-    holds chunk rows (chunk_max_spans path), restitch them — JVM
-    collect/sort/flatten/renumber, one shuffle on doc_id; a doc-granular
-    table passes through untouched."""
-    if "chunk_id" not in df.columns:
-        return df.select("doc_id", "spans")
-    return reassemble_chunks(df.select("doc_id", "chunk_id", "spans"))
+    return balanced_extract(docs, cfg, num_partitions).select("doc_id", "spans")

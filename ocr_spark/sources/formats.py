@@ -15,7 +15,9 @@ against either of two implementations of one small interface:
 
 Both writers — run_extract's waves and stream_extract's micro-batches —
 reach the table only through plans/pipeline.py:commit_wave (write_wave →
-lineage → commit); every data file is ``SINK_CODEC`` parquet.
+lineage → commit); every data file is ``SINK_CODEC`` parquet and every
+row one whole document ``(doc_id, spans, bucket, doc_hash, n_spans)``,
+whatever the chunking config of the run that wrote it.
 
 Manifest layout:
   <root>/data/run=<run_id>/bucket=<k>/part-*.parquet
@@ -36,29 +38,16 @@ from pyspark.sql import DataFrame, SparkSession
 SINK_CODEC = "zstd"
 
 
-def lineage_exprs(df):
-    """The ONE chunk-aware lineage convention, shared by the write path
+def lineage_exprs(df: DataFrame):
+    """The ONE lineage convention, shared by the write path
     (pipeline.balanced_extract, which every writer uses) and the
-    read-side audit below: returns
-    ``(is_doc_row, row_hash)`` expressions.
-
-    A table may MIX doc-granular and chunk rows — a job can be restarted
-    with a different ``chunk_max_spans`` and process only the buckets
-    missing from the manifest — so the decision is PER ROW (null
-    chunk_id = doc-granular row), never per table: ONLY null-chunk rows
-    hash without the chunk term; every non-null chunk_id (including 0)
-    includes it, so a doc's chunk-0 row and a doc-granular row for the
-    same doc hash differently by design.  doc_count counts chunk_id==0
-    rows (one per doc) plus null-chunk rows."""
+    read-side audit below: returns ``(is_doc_row, row_hash)``
+    expressions.  Every stored row is one whole document, so
+    ``is_doc_row`` is always true and a bucket's doc count is its row
+    count; ``df`` does not change the expressions."""
     from pyspark.sql import functions as F
 
-    if "chunk_id" not in df.columns:
-        return F.lit(True), F.xxhash64("doc_id", "spans")
-    is_doc = F.col("chunk_id").isNull() | (F.col("chunk_id") == 0)
-    row_hash = F.when(
-        F.col("chunk_id").isNull(), F.xxhash64("doc_id", "spans")
-    ).otherwise(F.xxhash64("doc_id", "chunk_id", "spans"))
-    return is_doc, row_hash
+    return F.lit(True), F.xxhash64("doc_id", "spans")
 
 
 class ParquetManifestTable:
@@ -208,14 +197,12 @@ class ParquetManifestTable:
         import fcntl
         import uuid
 
-        from pyspark.sql import functions as F  # noqa: F401
-
         entries = self._load()["entries"]
         if not entries:
             return {"compacted_entries": 0, "run_id": None}
         run_id = f"compact{uuid.uuid4().hex[:12]}"
-        df = spark.read.option("basePath", self.data_dir).option(
-            "mergeSchema", "true").parquet(*[e["path"] for e in entries])
+        df = spark.read.option("basePath", self.data_dir).parquet(
+            *[e["path"] for e in entries])
         n = num_partitions or spark.sparkContext.defaultParallelism
         out = self.run_dir(run_id)
         # "run" is a DISCOVERED partition column (dir layout run=<id>) —
@@ -356,12 +343,9 @@ class ParquetManifestTable:
         entries = self._load()["entries"]
         if not entries:
             return []
-        # mergeSchema: a table can mix doc-granular and chunk runs, and
-        # without merging, whether chunk_id is visible would depend on
-        # which file Spark samples for the schema
-        df = spark.read.option("basePath", self.data_dir).option(
-            "mergeSchema", "true").parquet(*[e["path"] for e in entries])
-        is_doc, row_hash = lineage_exprs(df)
+        df = spark.read.option("basePath", self.data_dir).parquet(
+            *[e["path"] for e in entries])
+        _, row_hash = lineage_exprs(df)
         run_col = F.regexp_extract(F.input_file_name(), r"run=([^/]+)", 1)
         actual = {
             (int(r["bucket"]), r["run_id"]): r
@@ -369,7 +353,7 @@ class ParquetManifestTable:
             .withColumn("_rh", row_hash)
             .groupBy("bucket", "run_id")
             .agg(
-                F.count(F.when(is_doc, 1)).alias("doc_count"),
+                F.count("*").alias("doc_count"),
                 F.sum(F.size("spans")).alias("span_count"),
                 F.expr("bit_xor(_rh)").alias("checksum"),
             )

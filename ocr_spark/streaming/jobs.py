@@ -128,8 +128,9 @@ def stream_extract(spark: SparkSession, docs_dir: str, out_table: str,
     exactly-once semantics.
 
     Each micro-batch is one wave of the batch job: the same
-    pipeline.balanced_extract (so cfg.chunk_max_spans applies here too)
-    and pipeline.commit_wave, in its ``append_runs`` mode, under
+    pipeline.balanced_extract (cfg.chunk_max_spans bounds per-task work
+    here too; committed rows are whole documents either way) and
+    pipeline.commit_wave, in its ``append_runs`` mode, under
     run_id = batch id.  Sink protocol per micro-batch:
       * batch already in the manifest → Spark retried a committed batch →
         no-op;

@@ -24,7 +24,10 @@ import json
 def main() -> None:
     ap = argparse.ArgumentParser(description="interleaved-document extraction job")
     ap.add_argument("--input", required=True, help="parquet path or synthetic:N")
-    ap.add_argument("--output", required=True, help="output table root (or iceberg:<ident>)")
+    ap.add_argument("--output", required=True,
+                    help="output table root, or iceberg:<ident>, which "
+                         "needs a live Iceberg catalog (its manifest "
+                         "lineage is not implemented: NotImplementedError)")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--buckets", type=int, default=256)
     ap.add_argument("--wave-size", type=int, default=None)

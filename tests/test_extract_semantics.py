@@ -336,31 +336,75 @@ def test_pdf_stream_keyword_inside_body_not_a_segment():
     ]
 
 
-def test_verify_handles_mixed_chunked_and_plain_runs(spark, tmp_path):
-    """A table can hold doc-granular runs AND chunk runs (restart with a
-    different chunk_max_spans processes only missing buckets).  The
-    audit must apply the per-ROW convention — a whole-table decision
-    would flag every healthy bucket of the other mode as corrupt."""
+def test_chunked_and_unchunked_runs_commit_identical_lineage(spark, tmp_path):
+    """Chunking is private to balanced_extract: an unchunked run, a
+    chunked run, and an unchunked crash resumed chunked (the restart
+    processes only the missing buckets) commit the same per-bucket
+    (doc_count, span_count, checksum) entries, and each table passes
+    its payload-rehash audit."""
     from ocr_spark.config import ExtractConfig
     from ocr_spark.plans.pipeline import run_extract
     from ocr_spark.sources.corpus import generate_interleaved
     from ocr_spark.sources.formats import ParquetManifestTable
 
-    out = str(tmp_path / "t")
-    docs = generate_interleaved(spark, 60, seed=11, partitions=4)
-    # run 1: doc-granular, crash after 1 of 2 waves
-    try:
-        run_extract(spark, docs, out, cfg=ExtractConfig(salt_buckets=8),
-                    num_partitions=4, wave_size=4, fail_after_waves=1)
-    except RuntimeError:
-        pass
-    # run 2 (restart): remaining buckets processed CHUNKED
-    m = run_extract(spark, docs, out,
-                    cfg=ExtractConfig(salt_buckets=8, chunk_max_spans=3),
-                    num_partitions=4)
+    plain = ExtractConfig(salt_buckets=8)
+    chunked = ExtractConfig(salt_buckets=8, chunk_max_spans=3)
+    docs = generate_interleaved(spark, 60, seed=11, partitions=4,
+                                mega_every=20).localCheckpoint()
+    run_extract(spark, docs, str(tmp_path / "plain"), cfg=plain,
+                num_partitions=4)
+    run_extract(spark, docs, str(tmp_path / "chunked"), cfg=chunked,
+                num_partitions=4)
+    mixed = str(tmp_path / "mixed")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extract(spark, docs, mixed, cfg=plain, num_partitions=4,
+                    wave_size=4, fail_after_waves=1)
+    m = run_extract(spark, docs, mixed, cfg=chunked, num_partitions=4)
     assert m["skipped_buckets"] == 4
+
+    lineage = {}
+    for name in ("plain", "chunked", "mixed"):
+        tbl = ParquetManifestTable(str(tmp_path / name))
+        assert "chunk_id" not in tbl.read(spark).columns
+        assert tbl.verify(spark) == [], f"{name} table failed its audit"
+        lineage[name] = sorted(
+            (e["bucket"], e["doc_count"], e["span_count"], e["checksum"])
+            for e in tbl.lineage())
+    assert len(lineage["plain"]) == 8
+    assert lineage["plain"] == lineage["chunked"] == lineage["mixed"]
+
+
+def test_wave_lineage_reads_only_its_own_buckets(spark, tmp_path):
+    """Every wave of a run appends to one run directory; a wave's
+    lineage scan must read only that wave's buckets.  A resume under
+    the same run_id whose earlier bucket file is unreadable still
+    commits its own buckets."""
+    import glob
+
+    from ocr_spark.config import ExtractConfig
+    from ocr_spark.plans.pipeline import run_extract
+    from ocr_spark.sources.corpus import generate_interleaved
+    from ocr_spark.sources.formats import ParquetManifestTable
+
+    cfg = ExtractConfig(salt_buckets=8)
+    docs = generate_interleaved(spark, 60, seed=13, partitions=4)
+    out = str(tmp_path / "t")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extract(spark, docs, out, cfg=cfg, num_partitions=4,
+                    run_id="r1", wave_size=4, fail_after_waves=1)
     tbl = ParquetManifestTable(out)
-    assert tbl.verify(spark) == [], "mixed-mode table failed its audit"
+    first = sorted(tbl.lineage(), key=lambda e: e["bucket"])
+    assert [e["bucket"] for e in first] == [0, 1, 2, 3]
+    # corrupt every committed bucket's files, not just one: schema
+    # inference must not be what touches them either
+    for e in first:
+        for f in glob.glob(os.path.join(e["path"], "*.parquet")):
+            with open(f, "wb") as fh:
+                fh.write(b"not a parquet file")
+    m = run_extract(spark, docs, out, cfg=cfg, num_partitions=4,
+                    run_id="r1", wave_size=4)
+    assert m["skipped_buckets"] == 4 and m["docs"] > 0
+    assert sorted(e["bucket"] for e in tbl.lineage()) == list(range(8))
 
 
 def test_pdf_multi_page_document_order():

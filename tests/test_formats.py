@@ -41,6 +41,17 @@ def test_iceberg_append_needs_catalog(spark):
         IcebergTable("prod_cat.corpus.spans").write_plan(df).append()
 
 
+def test_run_extract_to_iceberg_raises_not_implemented(spark):
+    """The Iceberg table has no manifest lineage yet, so the job must
+    refuse it up front, whatever its wave size."""
+    from ocr_spark.plans.pipeline import run_extract
+
+    df = spark.createDataFrame([], _SPAN_SCHEMA)
+    for wave_size in (None, 4):
+        with pytest.raises(NotImplementedError):
+            run_extract(spark, df, "iceberg:db.t", wave_size=wave_size)
+
+
 # -- compaction / vacuum (small-files maintenance) ---------------------------
 
 _SPAN_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"

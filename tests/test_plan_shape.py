@@ -96,18 +96,23 @@ def test_gram_build_reused_not_recomputed(name, spark, sf_dir):
     assert "ReusedExchange" in plan, f"gram build recomputed per consumer in {name}"
 
 
-def test_chunked_extract_single_exchange_single_python_stage(spark):
-    from ocr_spark.operators.extract import extract_stage
-    from ocr_spark.operators.skew import chunk_spans, with_bucket
+def test_chunked_balanced_extract_two_exchanges_single_python_stage(spark):
+    """The chunk path plans the (bucket, chunk_id) exchange, the fused
+    stage, and one bucket exchange that both restitches the chunks and
+    clusters the sink — the (doc_id, bucket) grouping reuses it."""
+    from ocr_spark.config import ExtractConfig
+    from ocr_spark.operators.skew import with_bucket
+    from ocr_spark.plans.pipeline import balanced_extract
     from ocr_spark.sources.corpus import generate_interleaved
 
     docs = with_bucket(generate_interleaved(spark, 10, seed=1, partitions=2))
-    chunked = chunk_spans(docs.select("doc_id", "spans", "bucket"), 8)
-    balanced = chunked.repartition(4, "bucket", "chunk_id")
-    plan = _plan(extract_stage(balanced, passthrough={"chunk_id": "int"}))
-    assert plan.count("Exchange") == 1, f"expected exactly 1 shuffle:\n{plan}"
-    post_exchange = plan.split("Exchange", 1)[0]
-    assert post_exchange.count("MapInPandas") == 1
+    plan = _plan(balanced_extract(docs, ExtractConfig(chunk_max_spans=8),
+                                  num_partitions=4))
+    assert plan.count("Exchange") == 2, f"expected exactly 2 shuffles:\n{plan}"
+    # the plan prints top-down: the text above the last "Exchange" runs
+    # after the first shuffle (corpus generation adds a MapInPandas below)
+    after_first = plan.rsplit("Exchange", 1)[0]
+    assert after_first.count("MapInPandas") == 1
 
 
 @pytest.mark.parametrize("name", sorted(registry.QUERIES))

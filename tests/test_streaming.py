@@ -198,10 +198,10 @@ def test_stream_extract_equals_batch_and_is_exactly_once(spark, tmp_path):
 
 def test_stream_extract_honours_chunk_max_spans(spark, tmp_path):
     """stream_extract runs the batch job's balanced extract, so a chunked
-    config commits chunk rows; they verify against the lineage and
-    restitch to the unsplit batch output."""
+    config restitches before the sink: the table holds whole-document
+    rows that verify against the lineage and equal the batch output."""
     from ocr_spark.config import ExtractConfig
-    from ocr_spark.plans.pipeline import extract_dataframe, stitch_extracted
+    from ocr_spark.plans.pipeline import extract_dataframe
     from ocr_spark.sources.corpus import generate_interleaved
     from ocr_spark.sources.formats import ParquetManifestTable
 
@@ -214,10 +214,9 @@ def test_stream_extract_honours_chunk_max_spans(spark, tmp_path):
                    num_partitions=4)
     tbl = ParquetManifestTable(out)
     got = tbl.read(spark)
-    assert "chunk_id" in got.columns
-    assert got.filter(F.col("chunk_id") > 0).count() > 0
+    assert "chunk_id" not in got.columns
     assert tbl.verify(spark) == []
-    assert _doc_key(stitch_extracted(got)) == _doc_key(
+    assert _doc_key(got) == _doc_key(
         extract_dataframe(spark.read.parquet(src)))
 
 

@@ -83,7 +83,6 @@ def _wave_lineage(spark: SparkSession, wave_dir: str, run_id: str,
         {
             "bucket": int(r["bucket"]),
             "run_id": run_id,
-            "path": f"{wave_dir}/bucket={int(r['bucket'])}",
             "doc_count": int(r["doc_count"]),
             "span_count": int(r["span_count"]),
             "checksum": format(r["checksum"] & (2**64 - 1), "016x"),

@@ -1,17 +1,18 @@
-"""Table-format shim: Iceberg in production, Parquet+manifest in-sandbox.
+"""Table-format shim: a Parquet+manifest table shaped like Iceberg.
 
 Spec: BASELINE.json:6/:14 — read/write Iceberg tables with per-partition
 lineage enabling idempotent restart.  The sandbox has no Iceberg runtime
-jar and no network (SURVEY.md §0/§4.4), so the same pipeline code runs
-against either of two implementations of one small interface:
+jar and no network (SURVEY.md §0/§4.4), so the pipeline runs against
+``ParquetManifestTable`` only:
 
-  * ``IcebergTable``     — ``spark.read.format("iceberg")`` / ``writeTo``;
-    selected when the Iceberg catalog is configured (production path).
   * ``ParquetManifestTable`` — a Parquet directory plus an atomically
     swapped JSON manifest that provides the snapshot semantics lineage
     needs: a (bucket, run) only exists for readers once its manifest
     entry is committed, so partially-written runs are invisible and
     restart is idempotent.
+  * ``IcebergTable`` — a plan-construction contract only: it builds the
+    production ``spark.read.format("iceberg")`` / ``writeTo`` plans, but
+    has no lineage, so ``run_extract`` refuses it before any write.
 
 Both writers — run_extract's waves and stream_extract's micro-batches —
 reach the table only through plans/pipeline.py:commit_wave (write_wave →
@@ -19,17 +20,32 @@ lineage → commit); every data file is ``SINK_CODEC`` parquet and every
 row one whole document ``(doc_id, spans, bucket, doc_hash, n_spans)``,
 whatever the chunking config of the run that wrote it.
 
-Manifest layout:
+Table layout (``run_dir`` and ``bucket_dir`` derive the data paths):
   <root>/data/run=<run_id>/bucket=<k>/part-*.parquet
-  <root>/_manifest.json   {"entries": [{bucket, run_id, path,
-                            doc_count, span_count, checksum, watermark}]}
+  <root>/_manifest.lock   the writers' flock
+  <root>/_manifest.json   the whole table state and its history:
+    snapshot_id     the last commit's id
+    entries         live [{bucket, run_id, snapshot, doc_count,
+                    span_count, checksum, watermark}]; ``snapshot`` is
+                    the commit that added the entry
+    removed         compacted-away entries not yet vacuumed: the same
+                    fields plus ``removed``, the compaction's snapshot
+    absorbed_runs   run ids a compaction absorbed (zombie guard)
+    expired_before  the oldest snapshot vacuum() left readable
+Snapshot s is the filter ``snapshot <= s < removed`` over both lists, so
+no per-snapshot copy of the manifest is kept.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import glob
 import json
 import os
+import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,32 +75,39 @@ class ParquetManifestTable:
     # -- manifest ----------------------------------------------------------
     def _load(self) -> dict:
         if not os.path.exists(self.manifest_path):
-            return {"entries": []}
+            return {"snapshot_id": 0, "entries": [], "removed": [],
+                    "absorbed_runs": [], "expired_before": 1}
         with open(self.manifest_path) as f:
             return json.load(f)
 
-    def _store(self, m: dict) -> None:
+    @contextlib.contextmanager
+    def _update(self):
+        """Locked load-modify-store of the manifest: yields the loaded
+        dict and, if the body returns, swaps the modified dict in.  Two
+        concurrent writers would otherwise lose each other's entries
+        (Iceberg gets this from optimistic snapshot CAS; the parquet
+        shim uses an advisory file lock — same writer-side guarantee)."""
         os.makedirs(self.root, exist_ok=True)
-        # snapshot history (Iceberg snapshot-log semantics): every
-        # committed manifest version is archived under _snapshots/<id>,
-        # so read(as_of=<id>) can time-travel until vacuum() expires the
-        # snapshot.  _store only runs under the writer lock, so the id
-        # increment cannot race.
-        m["snapshot_id"] = self._load().get("snapshot_id", 0) + 1
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(m, f, indent=1)
-        snap_dir = os.path.join(self.root, "_snapshots")
-        os.makedirs(snap_dir, exist_ok=True)
-        snap = os.path.join(snap_dir, f"{m['snapshot_id']:08d}.json")
-        fd2, tmp2 = tempfile.mkstemp(dir=snap_dir, suffix=".snap.tmp")
-        with os.fdopen(fd2, "w") as f:
-            json.dump(m, f, indent=1)
-        # archive first: a crash between the two renames leaves an orphan
-        # snapshot file with an id the next commit recomputes and
-        # overwrites — never a manifest pointing at a missing snapshot
-        os.replace(tmp2, snap)
-        os.replace(tmp, self.manifest_path)  # atomic swap = commit point
+        with open(os.path.join(self.root, "_manifest.lock"), "w") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            m = self._load()
+            yield m
+            fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
+            with os.fdopen(fd, "w") as f:
+                json.dump(m, f, indent=1)
+            os.replace(tmp, self.manifest_path)  # atomic swap = commit point
+
+    def _as_of(self, m: dict, snapshot_id: int) -> list[dict]:
+        """The entries live at ``snapshot_id``: added at or before it and
+        not yet removed by a compaction (Iceberg's per-entry snapshot
+        stamps)."""
+        if not m["expired_before"] <= snapshot_id <= m["snapshot_id"]:
+            raise FileNotFoundError(
+                f"snapshot {snapshot_id} not found (expired by vacuum, or "
+                f"never committed) in {self.root}")
+        return ([e for e in m["entries"] if e["snapshot"] <= snapshot_id]
+                + [e for e in m["removed"]
+                   if e["snapshot"] <= snapshot_id < e["removed"]])
 
     def committed_buckets(self) -> set[int]:
         return {e["bucket"] for e in self._load()["entries"]}
@@ -97,8 +120,13 @@ class ParquetManifestTable:
     def run_dir(self, run_id: str) -> str:
         return os.path.join(self.data_dir, f"run={run_id}")
 
+    def bucket_dir(self, run_id: str, bucket: int) -> str:
+        """Where the files of entry (bucket, run) live."""
+        return os.path.join(self.run_dir(run_id), f"bucket={bucket}")
+
     def commit(self, entries: list[dict], append_runs: bool = False) -> None:
-        """Append bucket entries idempotently.
+        """Append bucket entries idempotently, stamped with the new
+        snapshot id.
 
         Batch mode (default): a bucket appears at most once in the
         manifest — a retried wave or a concurrent run cannot
@@ -106,69 +134,40 @@ class ParquetManifestTable:
         the idempotency key is (bucket, run) so one run per micro-batch
         can append new data for the same bucket, while a retried
         micro-batch (same run_id) stays a no-op."""
-        # the load-modify-store below must be mutually exclusive or two
-        # concurrent committers lose each other's entries (Iceberg gets
-        # this from optimistic snapshot CAS; the parquet shim uses an
-        # advisory file lock — same writer-side guarantee)
-        import fcntl
-
-        os.makedirs(self.root, exist_ok=True)
-        with open(os.path.join(self.root, "_manifest.lock"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            m = self._load()
+        with self._update() as m:
             if append_runs:
                 have = {(e["bucket"], e["run_id"]) for e in m["entries"]}
                 # a zombie committer (crashed between write and commit,
                 # resumed after a compaction absorbed its run) must not
                 # resurrect entries pointing at vacuumed directories
-                gone = set(m.get("absorbed_runs", []))
+                gone = set(m["absorbed_runs"])
                 new = [e for e in entries
                        if (e["bucket"], e["run_id"]) not in have
                        and e["run_id"] not in gone]
             else:
                 have = {e["bucket"] for e in m["entries"]}
                 new = [e for e in entries if e["bucket"] not in have]
-            m["entries"].extend(new)
-            self._store(m)
+            m["snapshot_id"] += 1
+            m["entries"] += [{**e, "snapshot": m["snapshot_id"]} for e in new]
 
     def snapshots(self) -> list[dict]:
         """Available snapshot versions, oldest first: one dict per
-        archived manifest (id, entry count, run ids) — the Iceberg
-        snapshot-log equivalent.  Snapshots expired by vacuum() are
-        absent."""
-        import glob as _glob
-
+        commit (id, entry count, run ids) — the Iceberg snapshot-log
+        equivalent.  Snapshots expired by vacuum() are absent."""
+        m = self._load()
         out = []
-        for p in sorted(_glob.glob(
-                os.path.join(self.root, "_snapshots", "*.json"))):
-            try:
-                with open(p) as f:
-                    m = json.load(f)
-            except Exception:
-                continue
-            out.append({
-                "snapshot_id": m.get("snapshot_id"),
-                "n_entries": len(m["entries"]),
-                "runs": sorted({e["run_id"] for e in m["entries"]}),
-            })
+        for s in range(m["expired_before"], m["snapshot_id"] + 1):
+            entries = self._as_of(m, s)
+            out.append({"snapshot_id": s, "n_entries": len(entries),
+                        "runs": sorted({e["run_id"] for e in entries})})
         return out
-
-    def _snapshot_entries(self, snapshot_id: int) -> list[dict]:
-        p = os.path.join(self.root, "_snapshots", f"{snapshot_id:08d}.json")
-        if not os.path.exists(p):
-            raise FileNotFoundError(
-                f"snapshot {snapshot_id} not found (expired by vacuum, or "
-                f"never committed) in {self.root}")
-        with open(p) as f:
-            return json.load(f)["entries"]
 
     def committed_runs(self) -> set[str]:
         """Run ids with committed data, INCLUDING runs whose files were
         absorbed by a compaction — a retried streaming micro-batch whose
         run was compacted away must still see itself as committed."""
         m = self._load()
-        return {e["run_id"] for e in m["entries"]} | set(
-            m.get("absorbed_runs", []))
+        return {e["run_id"] for e in m["entries"]} | set(m["absorbed_runs"])
 
     # -- maintenance ---------------------------------------------------------
     def compact(self, spark: SparkSession,
@@ -188,23 +187,21 @@ class ParquetManifestTable:
           entries' checksums == checksum of the merged rows), so the
           compacted entries still verify() against a full payload rehash
           without recomputing anything at compact time;
+        - time-travel-preserving: the replaced entries move to
+          ``removed``, stamped with this snapshot, so earlier snapshots
+          stay readable until vacuum() deletes their files;
         - streaming-idempotent: absorbed run ids are recorded so a
           retried micro-batch stays a no-op after its files are gone;
         - crash-safe: a crash before the swap leaves the manifest (and
           readers) untouched; the orphan half-written run dir is removed
           by vacuum().
         """
-        import fcntl
-        import uuid
-
         entries = self._load()["entries"]
         if not entries:
             return {"compacted_entries": 0, "run_id": None}
         run_id = f"compact{uuid.uuid4().hex[:12]}"
-        df = spark.read.option("basePath", self.data_dir).parquet(
-            *[e["path"] for e in entries])
+        df = self._read(spark, entries)
         n = num_partitions or spark.sparkContext.defaultParallelism
-        out = self.run_dir(run_id)
         # "run" is a DISCOVERED partition column (dir layout run=<id>) —
         # persisting it as a data column would collide with discovery on
         # the next read of the compacted files; "bucket" stays because
@@ -212,7 +209,7 @@ class ParquetManifestTable:
         (df.drop("run")
          .repartition(n, "bucket")  # cluster: one file set per bucket
          .write.mode("append").option("compression", SINK_CODEC)
-         .partitionBy("bucket").parquet(out))
+         .partitionBy("bucket").parquet(self.run_dir(run_id)))
 
         by_bucket: dict[int, dict] = {}
         for e in entries:
@@ -223,65 +220,53 @@ class ParquetManifestTable:
             b["span_count"] += e["span_count"]
             b["ck"] ^= int(e["checksum"], 16)  # xor folds across runs
             b["watermark"] = max(b["watermark"], e["watermark"])
-        new_entries = [
-            {
-                "bucket": k,
-                "run_id": run_id,
-                "path": f"{out}/bucket={k}",
-                "doc_count": b["doc_count"],
-                "span_count": b["span_count"],
-                "checksum": format(b["ck"] & (2**64 - 1), "016x"),
-                "watermark": b["watermark"],
-            }
-            for k, b in sorted(by_bucket.items())
-        ]
         snap_keys = {(e["bucket"], e["run_id"]) for e in entries}
-        with open(os.path.join(self.root, "_manifest.lock"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            m = self._load()
+        with self._update() as m:
+            m["snapshot_id"] += 1
+            s = m["snapshot_id"]
+            m["removed"] += [{**e, "removed": s} for e in m["entries"]
+                             if (e["bucket"], e["run_id"]) in snap_keys]
             # entries committed since our snapshot survive untouched
-            keep = [e for e in m["entries"]
-                    if (e["bucket"], e["run_id"]) not in snap_keys]
-            absorbed = sorted(
-                {e["run_id"] for e in entries}
-                | set(m.get("absorbed_runs", [])))
-            self._store({"entries": keep + new_entries,
-                         "absorbed_runs": absorbed})
+            m["entries"] = [
+                e for e in m["entries"]
+                if (e["bucket"], e["run_id"]) not in snap_keys
+            ] + [
+                {
+                    "bucket": k,
+                    "run_id": run_id,
+                    "snapshot": s,
+                    "doc_count": b["doc_count"],
+                    "span_count": b["span_count"],
+                    "checksum": format(b["ck"] & (2**64 - 1), "016x"),
+                    "watermark": b["watermark"],
+                }
+                for k, b in sorted(by_bucket.items())
+            ]
+            m["absorbed_runs"] = sorted(
+                {e["run_id"] for e in entries} | set(m["absorbed_runs"]))
         return {"compacted_entries": len(entries),
-                "buckets": len(new_entries), "run_id": run_id}
+                "buckets": len(by_bucket), "run_id": run_id}
 
     def vacuum(self) -> list[str]:
-        """Delete run directories no longer referenced by the manifest
+        """Expire the snapshots that read compacted-away entries, then
+        delete the run directories no live entry references
         (post-compaction cleanup; also removes half-written runs left by
-        a crash BEFORE their commit).  Must not race a live writer whose
-        wave is written but not yet committed — run it from the
-        maintenance job, not concurrently with ingestion (the Iceberg
-        path gets retention semantics from expire_snapshots)."""
-        import glob as _glob
-        import shutil
-
-        live = {os.path.normpath(e["path"]).rsplit("/bucket=", 1)[0]
-                for e in self._load()["entries"]}
+        a crash BEFORE their commit).  Expiry comes first, as in
+        Iceberg's expire_snapshots before orphan-file deletion: a crash
+        between the two steps leaves only orphan directories, which the
+        next vacuum() removes.  Must not race a live writer whose wave
+        is written but not yet committed — run it from the maintenance
+        job, not concurrently with ingestion."""
+        with self._update() as m:
+            m["expired_before"] = max(
+                [m["expired_before"]] + [e["removed"] for e in m["removed"]])
+            m["removed"] = []
+            live = {self.run_dir(e["run_id"]) for e in m["entries"]}
         removed = []
-        for d in _glob.glob(os.path.join(self.data_dir, "run=*")):
-            if os.path.normpath(d) not in live:
+        for d in glob.glob(os.path.join(glob.escape(self.data_dir), "run=*")):
+            if d not in live:
                 shutil.rmtree(d, ignore_errors=True)
                 removed.append(d)
-        # expire snapshots whose entries reference a removed run dir —
-        # they can no longer be read as-of (Iceberg: expire_snapshots
-        # precedes orphan-file deletion; here file deletion drives the
-        # expiry, same end state)
-        gone = {os.path.normpath(d) for d in removed}
-        for p in _glob.glob(os.path.join(self.root, "_snapshots", "*.json")):
-            try:
-                with open(p) as f:
-                    snap_entries = json.load(f)["entries"]
-            except Exception:
-                continue
-            refs = {os.path.normpath(e["path"]).rsplit("/bucket=", 1)[0]
-                    for e in snap_entries}
-            if refs & gone:
-                os.remove(p)
         return removed
 
     # -- I/O ----------------------------------------------------------------
@@ -291,39 +276,40 @@ class ParquetManifestTable:
          .partitionBy("bucket").parquet(out))
         return out
 
+    def _read(self, spark: SparkSession, entries: list[dict]) -> DataFrame:
+        return spark.read.option("basePath", self.data_dir).parquet(
+            *[self.bucket_dir(e["run_id"], e["bucket"]) for e in entries])
+
     def read(self, spark: SparkSession,
              as_of: int | None = None) -> DataFrame:
-        """Union of committed (bucket, run) paths only — uncommitted files
-        are invisible (snapshot isolation).  ``as_of`` time-travels to an
-        archived snapshot version (``snapshots()`` lists them); valid
-        until vacuum() expires snapshots whose files a compaction
-        absorbed — exactly Iceberg's read-as-of + expire_snapshots
-        contract."""
-        entries = (self._load()["entries"] if as_of is None
-                   else self._snapshot_entries(as_of))
+        """Union of committed (bucket, run) directories only —
+        uncommitted files are invisible (snapshot isolation).  ``as_of``
+        time-travels to an earlier snapshot (``snapshots()`` lists
+        them); valid until vacuum() expires snapshots whose files a
+        compaction absorbed — exactly Iceberg's read-as-of +
+        expire_snapshots contract."""
+        m = self._load()
+        entries = m["entries"] if as_of is None else self._as_of(m, as_of)
         if not entries:
             raise FileNotFoundError(f"no committed data in {self.root}")
-        paths = [e["path"] for e in entries]
-        return spark.read.option("basePath", self.data_dir).parquet(*paths)
+        return self._read(spark, entries)
 
     def read_incremental(self, spark: SparkSession,
                          since: int) -> DataFrame:
         """Rows committed AFTER snapshot ``since`` (Iceberg incremental
-        read): the set difference of manifest entries keyed on
-        (bucket, run), so a downstream consumer can process only new
-        data per poll without replaying the table.  Compacted-away
-        entries never re-appear as 'new': a compaction rewrites OLD rows
-        under a new run id, so consumers should poll between
-        maintenance windows or track doc-level watermarks on top."""
-        have = {(e["bucket"], e["run_id"])
-                for e in self._snapshot_entries(since)}
-        new = [e for e in self._load()["entries"]
-               if (e["bucket"], e["run_id"]) not in have]
+        read): the live entries stamped with a later snapshot, so a
+        downstream consumer can process only new data per poll without
+        replaying the table.  A compaction re-stamps OLD rows with its
+        own snapshot, so they re-appear as 'new': consumers should poll
+        between maintenance windows or track doc-level watermarks on
+        top."""
+        m = self._load()
+        self._as_of(m, since)  # raises for an expired or unknown snapshot
+        new = [e for e in m["entries"] if e["snapshot"] > since]
         if not new:
             raise FileNotFoundError(
                 f"no entries committed after snapshot {since} in {self.root}")
-        return spark.read.option("basePath", self.data_dir).parquet(
-            *[e["path"] for e in new])
+        return self._read(spark, new)
 
     def verify(self, spark: SparkSession) -> list[dict]:
         """Integrity audit: RE-COMPUTE each committed (bucket, run)'s
@@ -343,8 +329,7 @@ class ParquetManifestTable:
         entries = self._load()["entries"]
         if not entries:
             return []
-        df = spark.read.option("basePath", self.data_dir).parquet(
-            *[e["path"] for e in entries])
+        df = self._read(spark, entries)
         _, row_hash = lineage_exprs(df)
         run_col = F.regexp_extract(F.input_file_name(), r"run=([^/]+)", 1)
         actual = {
@@ -379,8 +364,11 @@ class ParquetManifestTable:
 
 
 class IcebergTable:
-    """Production path (requires iceberg-spark-runtime on the classpath +
-    a configured catalog; unavailable in-sandbox — SURVEY.md §4.4)."""
+    """Plan-construction contract for the production Iceberg path: it
+    builds the read and write plans, whose execution needs
+    iceberg-spark-runtime and a configured catalog (unavailable
+    in-sandbox — SURVEY.md §4.4).  It keeps no lineage, so run_extract
+    refuses it at committed_buckets() before any write."""
 
     def __init__(self, identifier: str) -> None:
         self.identifier = identifier
@@ -393,10 +381,6 @@ class IcebergTable:
         construct the production write plan without a live catalog
         (plan construction needs no Iceberg jar; only execution does)."""
         return df.writeTo(self.identifier).option("write-format", "parquet")
-
-    def write_wave(self, df: DataFrame, run_id: str) -> str:
-        self.write_plan(df).append()
-        return self.identifier
 
     def committed_buckets(self) -> set[int]:  # via snapshot summary in prod
         raise NotImplementedError("requires a live Iceberg catalog")

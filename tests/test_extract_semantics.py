@@ -398,7 +398,8 @@ def test_wave_lineage_reads_only_its_own_buckets(spark, tmp_path):
     # corrupt every committed bucket's files, not just one: schema
     # inference must not be what touches them either
     for e in first:
-        for f in glob.glob(os.path.join(e["path"], "*.parquet")):
+        for f in glob.glob(os.path.join(
+                tbl.bucket_dir(e["run_id"], e["bucket"]), "*.parquet")):
             with open(f, "wb") as fh:
                 fh.write(b"not a parquet file")
     m = run_extract(spark, docs, out, cfg=cfg, num_partitions=4,

@@ -5,6 +5,9 @@ open_table dispatch."""
 
 from __future__ import annotations
 
+import multiprocessing
+import os
+
 import pytest
 
 from ocr_spark.sources.formats import (
@@ -165,8 +168,9 @@ def test_compact_empty_table_is_noop(spark, tmp_path):
 
 
 def test_snapshot_time_travel(spark, tmp_path):
-    """Every commit archives a manifest version; read(as_of=id) sees the
-    table exactly as of that commit (Iceberg read-as-of)."""
+    """Every commit is a snapshot; read(as_of=id) sees the table exactly
+    as of that commit (Iceberg read-as-of).  Entries hold no absolute
+    paths, so a moved table still reads, time-travels and verifies."""
     tbl = ParquetManifestTable(str(tmp_path / "t"))
     _commit_wave(spark, tbl, "batch000000001", 0, 30)
     after_w1 = _table_key(spark, tbl)
@@ -184,6 +188,18 @@ def test_snapshot_time_travel(spark, tmp_path):
         (r["doc_id"], tuple(tuple(s) for s in r["spans"]))
         for r in tbl.read(spark, as_of=s2).select("doc_id", "spans").collect())
     assert trav2 == after_w2
+
+    moved = str(tmp_path / "moved")
+    os.rename(tbl.root, moved)
+    tbl = ParquetManifestTable(moved)
+    assert sorted(os.listdir(moved)) == [
+        "_manifest.json", "_manifest.lock", "data"]
+    assert _table_key(spark, tbl) == after_w2
+    assert sorted(
+        (r["doc_id"], tuple(tuple(s) for s in r["spans"]))
+        for r in tbl.read(spark, as_of=s1).select("doc_id", "spans").collect()
+    ) == after_w1
+    assert tbl.verify(spark) == []
 
 
 def test_vacuum_expires_snapshots(spark, tmp_path):
@@ -227,3 +243,58 @@ def test_incremental_read_between_snapshots(spark, tmp_path):
     s2 = tbl.snapshots()[-1]["snapshot_id"]
     with pytest.raises(FileNotFoundError, match="no entries committed"):
         tbl.read_incremental(spark, since=s2)
+
+
+# -- manifest history and writer lock (Spark-free) ---------------------------
+
+
+def _entries(run_id, n_buckets):
+    return [{"bucket": b, "run_id": run_id, "doc_count": 1, "span_count": 5,
+             "checksum": f"{b:016x}", "watermark": "2026-01-01T00:00:00Z"}
+            for b in range(n_buckets)]
+
+
+def _tree_bytes(root):
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, files in os.walk(root) for f in files)
+
+
+def test_history_bytes_grow_linearly(tmp_path):
+    """Snapshots are filters over the one manifest, not copies of it:
+    doubling the commits of a streaming table about doubles its bytes
+    on disk (a full manifest copy per commit quadruples them)."""
+    tbl = ParquetManifestTable(str(tmp_path / "t"))
+    size = {}
+    for c in range(1, 81):
+        tbl.commit(_entries(f"batch{c:09d}", 84), append_runs=True)
+        if c in (40, 80):
+            size[c] = _tree_bytes(tbl.root)
+    assert not os.path.exists(os.path.join(tbl.root, "_snapshots"))
+    assert sorted(os.listdir(tbl.root)) == ["_manifest.json", "_manifest.lock"]
+    assert size[80] <= 2.5 * size[40], size
+
+
+def _commit_ten_runs(root, worker, go):
+    go.wait(60)
+    tbl = ParquetManifestTable(root)
+    for i in range(10):
+        tbl.commit(_entries(f"w{worker}run{i}", 8), append_runs=True)
+
+
+def test_concurrent_committers_lose_nothing(tmp_path):
+    """The writer lock serialises load-modify-store: four processes
+    committing at once keep every entry and get one snapshot id each."""
+    root = str(tmp_path / "t")
+    ctx = multiprocessing.get_context("spawn")
+    go = ctx.Event()
+    procs = [ctx.Process(target=_commit_ten_runs, args=(root, w, go))
+             for w in range(4)]
+    for p in procs:
+        p.start()
+    go.set()  # release the workers together so their commits overlap
+    for p in procs:
+        p.join(timeout=120)
+    assert [(p.is_alive(), p.exitcode) for p in procs] == [(False, 0)] * 4
+    tbl = ParquetManifestTable(root)
+    assert len(tbl.lineage()) == 4 * 10 * 8
+    assert [s["snapshot_id"] for s in tbl.snapshots()] == list(range(1, 41))

@@ -47,6 +47,7 @@ from ocr_spark.operators.skew import (
 )
 from ocr_spark.sources.formats import (
     ParquetManifestTable,
+    checksum_hex,
     lineage_exprs,
     open_table,
 )
@@ -85,7 +86,7 @@ def _wave_lineage(spark: SparkSession, wave_dir: str, run_id: str,
             "run_id": run_id,
             "doc_count": int(r["doc_count"]),
             "span_count": int(r["span_count"]),
-            "checksum": format(r["checksum"] & (2**64 - 1), "016x"),
+            "checksum": checksum_hex(r["checksum"]),
             "watermark": watermark,
         }
         for r in rows

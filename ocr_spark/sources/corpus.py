@@ -17,8 +17,9 @@ from __future__ import annotations
 
 import hashlib
 import random
+from dataclasses import dataclass
 
-from ocr_spark.functions.pdfx import write_pdf
+from ocr_spark.functions.pdfx import write_pdf_encrypted, write_pdf_pages
 
 _VOCAB = [
     "alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf", "hotel",
@@ -88,15 +89,99 @@ def _html_payload(rng: random.Random, doc_id: str, heft: int = 1,
     )
 
 
-def _pdf_payload(rng: random.Random, heft: int = 1,
-                 compress: bool = False, xref_stream: bool = False,
-                 type0: bool = False, form_xobject: bool = False,
-                 link_rng: random.Random | None = None,
-                 ocr_rng: random.Random | None = None,
-                 field_rng: random.Random | None = None,
-                 encrypted: bool = False, rc4: bool = False,
-                 outline_rng: random.Random | None = None,
-                 aes: str | None = None, artifact: bool = False) -> str:
+@dataclass(frozen=True)
+class CorpusSpec:
+    """The generator's knobs.  ``make_doc``, ``make_docs`` and
+    ``generate_interleaved`` take each field as a keyword argument.
+
+    Each variant knob (``compress_every`` … ``artifact_every``) set to N
+    applies its variant to every span whose document index + span index
+    is a multiple of N; 0 = never.  The defaults reproduce the pinned
+    goldens bit-for-bit: a variant draws only from its own forked rng
+    (or from none), so switching it on leaves every other draw — and
+    every other span — unchanged."""
+
+    # every Nth document (index > 0) gets 50× the spans: the mega-doc
+    # tail that skews the shuffle (E2, BASELINE.json:6)
+    mega_every: int = 1000
+    # multiplies per-payload content volume (text words, HTML paragraphs,
+    # PDF text blocks) without touching span counts; heft>1 yields
+    # KB-to-tens-of-KB documents whose compute/byte ratio matches real
+    # OCR inputs (the benchmarks use heft=5)
+    heft: int = 1
+    # flate-encode the PDF's content streams (the real-world default);
+    # extraction must give identical spans either way
+    compress_every: int = 0
+    # PDF 1.5+ layout: cross-reference stream + object stream (the
+    # modern-producer default)
+    xref_every: int = 0
+    # text shown through a synthetic Type0/Identity-H font + ToUnicode
+    # CMap (subset-embedded fonts); needs the structured parse, so these
+    # spans are always also written in the xref-stream layout
+    type0_every: int = 0
+    # page content moved into a /Subtype /Form XObject invoked from a thin
+    # wrapper stream (the letterhead/stamp layout); classic xref only —
+    # the writer has no form+xref-stream combination, though the reader
+    # resolves forms through either layout
+    form_every: int = 0
+    # a data <table> (caption + 2-4 rows of 3 cells) in the HTML span's
+    # content div
+    html_table_every: int = 0
+    # 1-2 /Annots link annotations; classic xref only
+    pdf_link_every: int = 0
+    # a scanned-page OCR layer: full-page image + invisible ``3 Tr`` text
+    ocr_layer_every: int = 0
+    # 1-2 filled AcroForm text-field widgets; classic xref only
+    field_every: int = 0
+    # /Encrypt trailer + XOR-scrambled streams with no key: extraction
+    # must emit zero spans for these payloads
+    encrypted_every: int = 0
+    # 1-3 /Outlines bookmark titles, one possibly non-latin-1 (UTF-16BE
+    # titles), emitted as a leading 'toc' span; classic xref only
+    outline_every: int = 0
+    # REALLY encrypted: standard security handler RC4 V=1/R=2, empty user
+    # password; classic xref only, not on encrypted_every spans;
+    # extraction must decrypt these and reproduce the rc4-off twin corpus
+    rc4_every: int = 0
+    # likewise AES-encrypted, cycling /AESV2 (AES-128 crypt filter),
+    # V=4 /CFM /V2 and PDF 2.0 /AESV3 (AES-256, R=6) by span index, so
+    # all three handler generations appear; classic xref only, not on
+    # encrypted_every or rc4_every spans
+    aes_every: int = 0
+    # content streams under a non-Flate /Filter chain, cycling LZWDecode,
+    # [ASCII85Decode FlateDecode], ASCIIHexDecode and RunLengthDecode by
+    # span index (the older-producer / ASCII-armored slice); overrides
+    # compress_every, not on encrypted_every spans
+    filter_every: int = 0
+    # running header and footer tagged ``/Artifact … BDC … EMC`` (the
+    # tagged-producer variant, PDF 32000 §14.8.2.2) plus a mid-page
+    # watermark only the tag identifies: extraction must drop exactly
+    # those under the default keep_artifacts=False and reproduce the
+    # untagged twin under keep_artifacts=True
+    artifact_every: int = 0
+
+
+def _every(n: int, k: int) -> bool:
+    return bool(n) and k % n == 0
+
+
+def _pdf_payload(rng: random.Random, spec: CorpusSpec, k: int, fork) -> str:
+    """One PDF span's bytes.  ``k`` = document index + span index picks
+    the variants; ``fork(tag)`` builds a variant's own rng."""
+    type0 = _every(spec.type0_every, k)
+    xref_stream = type0 or _every(spec.xref_every, k)
+    classic = not xref_stream
+    encrypted = _every(spec.encrypted_every, k)
+    rc4 = classic and not encrypted and _every(spec.rc4_every, k)
+    # (V, crypt filter): AES-128 /AESV2, V=4 /V2, AES-256 /AESV3 (R=6)
+    aes = (((4, "AESV2"), (4, "V2"), (5, "AESV2"))[k // spec.aes_every % 3]
+           if classic and not (encrypted or rc4) and _every(spec.aes_every, k)
+           else None)
+    compress = (("LZWDecode", "ASCII85Decode+FlateDecode",
+                 "ASCIIHexDecode", "RunLengthDecode")[k // spec.filter_every % 4]
+                if not encrypted and _every(spec.filter_every, k)
+                else _every(spec.compress_every, k))
+    artifact = _every(spec.artifact_every, k)
     blocks = [
         {"kind": "header", "x": 72, "y": 760, "lines": [f"Page header {_words(rng, 2)}"]},
     ]
@@ -113,7 +198,7 @@ def _pdf_payload(rng: random.Random, heft: int = 1,
                        "lines": ["DRAFT - internal review copy"],
                        "artifact": "Watermark"})
     y = 700
-    for _ in range(rng.randint(1, 3) * heft):
+    for _ in range(rng.randint(1, 3) * spec.heft):
         n_lines = rng.randint(2, 6)
         blocks.append({
             "kind": "text", "x": 72, "y": y,
@@ -131,10 +216,10 @@ def _pdf_payload(rng: random.Random, heft: int = 1,
         y -= 14 * 3 + 40
     if rng.random() < 0.3:
         blocks.append({"kind": "figure", "x": 100, "y": max(y - 90, 60), "w": 120, "h": 80})
-    # link annotations drawn from a SEPARATE forked rng (link_rng=None →
-    # rng draw order, and therefore the pinned goldens, bit-identical);
-    # classic layout only — /Annots emission lives in the classic writer
-    if link_rng is not None and not xref_stream:
+    # link annotations; classic layout only — /Annots emission lives in
+    # the classic writer
+    if classic and _every(spec.pdf_link_every, k):
+        link_rng = fork("lnk")
         for _ in range(link_rng.randint(1, 2)):
             blocks.append({
                 "kind": "link", "x": 72,
@@ -143,120 +228,55 @@ def _pdf_payload(rng: random.Random, heft: int = 1,
                 "uri": f"https://ref.example/{_words(link_rng, 1)}"
                        f"/{link_rng.randint(0, 999)}",
             })
-    # scanned-page OCR layer (forked rng): a full-page image figure with
-    # the recognized text painted invisibly (3 Tr) over it — extraction
+    # scanned-page OCR layer: a full-page image figure with the
+    # recognized text painted invisibly (3 Tr) over it — extraction
     # keeps the text (keep_invisible_text default) plus the page figure
-    if ocr_rng is not None:
+    if _every(spec.ocr_layer_every, k):
+        ocr_rng = fork("ocr")
         blocks.append({"kind": "figure", "x": 0, "y": 0, "w": 612, "h": 792})
         blocks.append({
             "kind": "text", "x": 72, "y": max(y, 120), "invisible": True,
             "lines": [_words(ocr_rng, ocr_rng.randint(4, 9))
                       for _ in range(ocr_rng.randint(2, 4))],
         })
-    # filled AcroForm text fields (forked rng; classic layout only —
-    # widget /Annots emission lives in the classic writer, like links)
-    if field_rng is not None and not xref_stream:
-        for k in range(field_rng.randint(1, 2)):
+    # filled AcroForm text fields; classic layout only, like links
+    if classic and _every(spec.field_every, k):
+        field_rng = fork("fld")
+        for f in range(field_rng.randint(1, 2)):
             blocks.append({
                 "kind": "field", "x": 72,
-                "y": max(y - 20 * k - field_rng.randint(0, 40), 48),
+                "y": max(y - 20 * f - field_rng.randint(0, 40), 48),
                 "name": _words(field_rng, 1),
                 "value": _words(field_rng, field_rng.randint(1, 4)),
             })
     blocks.append({"kind": "footer", "x": 72, "y": 30, "lines": ["p. 1"],
                    **({"artifact": "Footer"} if artifact else {})})
-    # /Outlines bookmarks (forked rng): 1-3 titles, incl. a non-latin-1
-    # one so the UTF-16BE title path is exercised corpus-wide
+    if encrypted:
+        return write_pdf_encrypted(blocks, compress=compress).decode("latin-1")
     outlines = None
-    if outline_rng is not None:
+    if classic and _every(spec.outline_every, k):
+        outline_rng = fork("toc")
         outlines = [f"{_words(outline_rng, 2)} — §{outline_rng.randint(1, 9)}"
                     for _ in range(outline_rng.randint(1, 3))]
-    if encrypted:
-        from ocr_spark.functions.pdfx import write_pdf_encrypted
-        return write_pdf_encrypted(blocks, compress=compress).decode("latin-1")
-    from ocr_spark.functions.pdfx import write_pdf_pages
     raw = write_pdf_pages([blocks], compress=compress,
                           xref_stream=xref_stream, type0=type0,
-                          form_xobject=form_xobject,
+                          form_xobject=classic and _every(spec.form_every, k),
                           outlines=outlines)
     if rc4:
         from ocr_spark.functions.pdfcrypt import encrypt_pdf_rc4
         raw = encrypt_pdf_rc4(raw)
     elif aes is not None:
         from ocr_spark.functions.pdfcrypt import encrypt_pdf_aes
-        raw = encrypt_pdf_aes(raw, v=5 if aes == "AESV3" else 4,
-                              cfm="V2" if aes == "V2" else "AESV2")
+        v, cfm = aes
+        raw = encrypt_pdf_aes(raw, v=v, cfm=cfm)
     return raw.decode("latin-1")
 
 
-def make_doc(i: int, seed: int = 42, mega_every: int = 1000,
-             heft: int = 1, compress_every: int = 0,
-             xref_every: int = 0, type0_every: int = 0,
-             form_every: int = 0, html_table_every: int = 0,
-             pdf_link_every: int = 0, ocr_layer_every: int = 0,
-             field_every: int = 0, encrypted_every: int = 0,
-             outline_every: int = 0, rc4_every: int = 0,
-             aes_every: int = 0, filter_every: int = 0,
-             artifact_every: int = 0) -> dict:
-    """Pure function (seed, i) → one interleaved document row.
-
-    ``heft`` multiplies per-payload content volume (paragraphs / PDF text
-    blocks) without touching span counts or the RNG draw ORDER of the
-    default path, so heft=1 output is bit-identical to the historical
-    corpus (goldens pinned) while heft>1 yields KB-to-tens-of-KB
-    documents whose compute/byte ratio matches real OCR inputs (bench
-    uses heft=5).  ``compress_every=N`` flate-encodes every Nth PDF
-    span's content stream (0 = never — default, corpus bit-identical to
-    the pinned goldens); the real-world default is compressed, and the
-    extractor must produce identical spans either way
-    (tests/test_extract_semantics.py asserts it corpus-wide).
-    ``xref_every=N`` likewise writes every Nth PDF span in the PDF 1.5+
-    layout (cross-reference stream + object stream — the modern-producer
-    default) and ``type0_every=N`` shows every Nth PDF span's text
-    through a synthetic Type0/Identity-H font + ToUnicode CMap (subset
-    embedded fonts — requires the structured parse, so type0 spans are
-    always also written xref_stream); 0 = never (corpus bit-identical
-    to the pinned goldens).  ``form_every=N`` moves every Nth PDF
-    span's page content into a /Subtype /Form XObject invoked from a
-    thin wrapper stream (the letterhead/stamp layout); form spans stay
-    classic-xref — the synthetic writer doesn't emit the
-    form+xref-stream combination, though the READER resolves forms
-    through either xref layout (object lookup is layout-independent).
-    ``html_table_every=N`` inserts a data <table> (caption + 2-4 rows
-    of 3 cells, drawn from a forked rng) into every Nth HTML span's
-    content div; ``pdf_link_every=N`` adds 1-2 /Annots link annotations
-    (forked rng, classic-xref spans only) to every Nth PDF span;
-    ``ocr_layer_every=N`` gives every Nth PDF span a scanned-page OCR
-    layer (full-page image + invisible ``3 Tr`` text, forked rng);
-    ``field_every=N`` adds 1-2 filled AcroForm text-field widgets
-    (forked rng, classic-xref spans only); ``encrypted_every=N`` writes
-    every Nth PDF span ENCRYPTED (/Encrypt trailer + XOR-scrambled
-    streams) — extraction must emit zero spans for those payloads;
-    ``outline_every=N`` adds 1-3 /Outlines bookmark titles (forked rng,
-    classic-xref spans only; one title may be non-latin-1, exercising
-    UTF-16BE titles) emitted as a leading 'toc' span;
-    ``rc4_every=N`` REALLY encrypts every Nth PDF span (standard
-    security handler RC4 V=1/R=2, empty user password, classic-xref
-    spans only) — unlike ``encrypted_every``, extraction must DECRYPT
-    these and emit spans identical to the rc4-off twin corpus;
-    ``aes_every=N`` likewise AES-encrypts every Nth PDF span, cycling
-    /AESV2 (AES-128 crypt filter), V=4 /CFM /V2, and PDF 2.0 /AESV3
-    (AES-256 R=6) by span index so all three handler generations are
-    exercised corpus-wide; ``filter_every=N`` writes every Nth PDF
-    span's content streams under a non-Flate /Filter chain, cycling
-    LZWDecode, [ASCII85Decode FlateDecode], ASCIIHexDecode, and
-    RunLengthDecode by span index (the older-producer / ASCII-armored
-    corpus slice); ``artifact_every=N`` tags every Nth PDF span's
-    running header and footer as ``/Artifact … BDC … EMC`` marked
-    content (the tagged-producer variant, PDF 32000 §14.8.2.2) —
-    extraction must DROP exactly those two blocks under the default
-    ``keep_artifacts=False`` and reproduce the untagged twin under
-    ``keep_artifacts=True``; 0 = never (default, goldens
-    bit-identical)."""
+def _make_doc(i: int, seed: int, spec: CorpusSpec) -> dict:
     doc_id = f"doc{i:08d}"
     rng = _rng(seed, "doc", i)
     n = 1 + min(int(rng.lognormvariate(0.8, 0.7)), 40)
-    if mega_every and i % mega_every == 0 and i > 0:
+    if i > 0 and _every(spec.mega_every, i):
         n *= 50  # mega-doc tail → skew for E2
     spans, offset = [], 0
     for j in range(n):
@@ -264,54 +284,18 @@ def make_doc(i: int, seed: int = 42, mega_every: int = 1000,
         srng = _rng(seed, "span", i, j)
         r = srng.random()
         if r < 0.45:
-            sp = {"kind": "text", "text": _words(srng, srng.randint(5, 30) * heft),
+            sp = {"kind": "text", "text": _words(srng, srng.randint(5, 30) * spec.heft),
                   "media_ref": None, "offset": offset}
         elif r < 0.70:
             trng = (_rng(seed, "tbl", i, j)
-                    if html_table_every and (i + j) % html_table_every == 0
-                    else None)
+                    if _every(spec.html_table_every, i + j) else None)
             sp = {"kind": "html",
-                  "text": _html_payload(srng, doc_id, heft, table_rng=trng),
+                  "text": _html_payload(srng, doc_id, spec.heft, table_rng=trng),
                   "media_ref": None, "offset": offset}
         elif r < 0.85:
-            comp = bool(compress_every) and (i + j) % compress_every == 0
-            xrs = bool(xref_every) and (i + j) % xref_every == 0
-            t0f = bool(type0_every) and (i + j) % type0_every == 0
-            frm = (bool(form_every) and (i + j) % form_every == 0
-                   and not (xrs or t0f))
-            lrng = (_rng(seed, "lnk", i, j)
-                    if pdf_link_every and (i + j) % pdf_link_every == 0
-                    else None)
-            orng = (_rng(seed, "ocr", i, j)
-                    if ocr_layer_every and (i + j) % ocr_layer_every == 0
-                    else None)
-            frng = (_rng(seed, "fld", i, j)
-                    if field_every and (i + j) % field_every == 0
-                    else None)
-            enc = bool(encrypted_every) and (i + j) % encrypted_every == 0
-            rc4 = (bool(rc4_every) and (i + j) % rc4_every == 0
-                   and not (xrs or t0f) and not enc)
-            aes = (("AESV2", "V2", "AESV3")[(i + j) // aes_every % 3]
-                   if aes_every and (i + j) % aes_every == 0
-                   and not (xrs or t0f) and not (enc or rc4) else None)
-            flt = (("LZWDecode", "ASCII85Decode+FlateDecode",
-                    "ASCIIHexDecode", "RunLengthDecode")
-                   [(i + j) // filter_every % 4]
-                   if filter_every and (i + j) % filter_every == 0
-                   and not enc else None)
-            art = bool(artifact_every) and (i + j) % artifact_every == 0
-            trng2 = (_rng(seed, "toc", i, j)
-                     if outline_every and (i + j) % outline_every == 0
-                     and not (xrs or t0f) else None)
             sp = {"kind": "pdf_bytes",
-                  "text": _pdf_payload(srng, heft,
-                                       compress=flt if flt else comp,
-                                       xref_stream=xrs or t0f, type0=t0f,
-                                       form_xobject=frm, link_rng=lrng,
-                                       ocr_rng=orng, field_rng=frng,
-                                       encrypted=enc, rc4=rc4,
-                                       outline_rng=trng2, aes=aes,
-                                       artifact=art),
+                  "text": _pdf_payload(srng, spec, i + j,
+                                       lambda tag: _rng(seed, tag, i, j)),
                   "media_ref": None, "offset": offset}
         else:
             sp = {"kind": "media", "text": None,
@@ -320,41 +304,35 @@ def make_doc(i: int, seed: int = 42, mega_every: int = 1000,
     return {"doc_id": doc_id, "spans": spans}
 
 
-def make_docs(n_docs: int, seed: int = 42, mega_every: int = 1000,
-              heft: int = 1, compress_every: int = 0,
-              xref_every: int = 0, type0_every: int = 0,
-              form_every: int = 0, html_table_every: int = 0,
-              pdf_link_every: int = 0, ocr_layer_every: int = 0,
-              field_every: int = 0, encrypted_every: int = 0,
-              outline_every: int = 0, rc4_every: int = 0,
-              aes_every: int = 0, filter_every: int = 0,
-              artifact_every: int = 0) -> list[dict]:
+def make_doc(i: int, seed: int = 42, **knobs) -> dict:
+    """Pure function (seed, i, knobs) → one interleaved document row;
+    ``knobs`` are ``CorpusSpec`` fields, and an unknown one raises
+    TypeError."""
+    return _make_doc(i, seed, CorpusSpec(**knobs))
+
+
+def make_docs(n_docs: int, seed: int = 42, **knobs) -> list[dict]:
     """Driver-side generation for small test fixtures (pure Python)."""
-    return [make_doc(i, seed, mega_every, heft, compress_every, xref_every,
-                     type0_every, form_every, html_table_every,
-                     pdf_link_every, ocr_layer_every, field_every,
-                     encrypted_every, outline_every, rc4_every, aes_every,
-                     filter_every, artifact_every)
-            for i in range(n_docs)]
+    spec = CorpusSpec(**knobs)
+    return [_make_doc(i, seed, spec) for i in range(n_docs)]
 
 
 def generate_interleaved(spark, n_docs: int, seed: int = 42,
-                         partitions: int | None = None, mega_every: int = 1000,
-                         heft: int = 1, compress_every: int = 0,
-                         xref_every: int = 0):
+                         partitions: int | None = None, **knobs):
     """Distributed generation: spark.range → mapInPandas (scales to any n).
 
-    No driver-side materialization; each task builds its id-range of docs.
+    No driver-side materialization; each task builds its id-range of docs,
+    row-for-row equal to ``make_docs``.  The spec is built here, so an
+    unknown knob raises TypeError before any job starts.
     """
     import pandas as pd
 
+    spec = CorpusSpec(**knobs)
     rng_df = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
 
     def gen(batches):
         for pdf in batches:
-            rows = [make_doc(int(i), seed, mega_every, heft,
-                             compress_every, xref_every)
-                    for i in pdf["id"]]
+            rows = [_make_doc(int(i), seed, spec) for i in pdf["id"]]
             yield pd.DataFrame({
                 "doc_id": [r["doc_id"] for r in rows],
                 "spans": [

@@ -66,6 +66,12 @@ def lineage_exprs(df: DataFrame):
     return F.lit(True), F.xxhash64("doc_id", "spans")
 
 
+def checksum_hex(x: int) -> str:
+    """A manifest entry's ``checksum``: a bucket's xor of row hashes
+    (signed 64-bit in Spark) as 16 unsigned hex digits."""
+    return format(x & (2**64 - 1), "016x")
+
+
 class ParquetManifestTable:
     def __init__(self, root: str) -> None:
         self.root = root
@@ -237,7 +243,7 @@ class ParquetManifestTable:
                     "snapshot": s,
                     "doc_count": b["doc_count"],
                     "span_count": b["span_count"],
-                    "checksum": format(b["ck"] & (2**64 - 1), "016x"),
+                    "checksum": checksum_hex(b["ck"]),
                     "watermark": b["watermark"],
                 }
                 for k, b in sorted(by_bucket.items())
@@ -353,7 +359,7 @@ class ParquetManifestTable:
                 else {
                     "doc_count": int(a["doc_count"]),
                     "span_count": int(a["span_count"]),
-                    "checksum": format(a["checksum"] & (2**64 - 1), "016x"),
+                    "checksum": checksum_hex(a["checksum"]),
                 }
             )
             want = {k: e[k] for k in ("doc_count", "span_count", "checksum")}

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ocr_spark.config import DEFAULT, ExtractConfig
 from ocr_spark.operators.skew import with_bucket
 from ocr_spark.plans.pipeline import balanced_extract, commit_wave
+from ocr_spark.sources.corpus import SPAN_SCHEMA_DDL
 from ocr_spark.sources.formats import ParquetManifestTable
 
 
@@ -137,8 +138,11 @@ def stream_extract(spark: SparkSession, docs_dir: str, out_table: str,
       * stale uncommitted run dir (crash between write and commit) →
         removed, then rewritten — commits are whole-batch atomic, so a
         run_id is either fully committed or absent.
+
+    The input schema is pinned to ``corpus.SPAN_SCHEMA_DDL`` (the input
+    contract), not inferred, so the job also runs on a landing directory
+    that has no file yet: it commits nothing until the first one lands.
     """
-    schema = spark.read.parquet(docs_dir).schema
     tbl = ParquetManifestTable(out_table)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -152,7 +156,7 @@ def stream_extract(spark: SparkSession, docs_dir: str, out_table: str,
                     run_id, watermark, append_runs=True)
 
     q = (
-        spark.readStream.schema(schema).parquet(docs_dir)
+        spark.readStream.schema(SPAN_SCHEMA_DDL).parquet(docs_dir)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)

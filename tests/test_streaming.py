@@ -220,6 +220,31 @@ def test_stream_extract_honours_chunk_max_spans(spark, tmp_path):
         extract_dataframe(spark.read.parquet(src)))
 
 
+def test_stream_extract_starts_on_an_empty_landing_directory(spark, tmp_path):
+    """A streaming job normally starts before its first file lands: the
+    input schema is the pinned contract, not inferred from the files, so
+    an empty directory commits nothing and the first files are picked up
+    by the next call."""
+    from ocr_spark.plans.pipeline import extract_dataframe
+    from ocr_spark.sources.corpus import generate_interleaved
+    from ocr_spark.sources.formats import ParquetManifestTable
+
+    src = str(tmp_path / "docs_src")
+    os.makedirs(src)
+    out = str(tmp_path / "out")
+    ck = str(tmp_path / "ck")
+    stream_extract(spark, src, out, ck, num_partitions=4)
+    tbl = ParquetManifestTable(out)
+    assert tbl.committed_runs() == set()
+
+    generate_interleaved(spark, 40, seed=5, partitions=2).write.mode(
+        "append").parquet(src)
+    stream_extract(spark, src, out, ck, num_partitions=4)
+    assert _doc_key(tbl.read(spark)) == _doc_key(
+        extract_dataframe(spark.read.parquet(src)))
+    assert tbl.verify(spark) == []
+
+
 def test_stateful_running_totals_across_restarts(spark, tmp_path):
     """applyInPandasWithState: per-user totals must accumulate across
     micro-batches AND across a query restart (state store recovery from

@@ -298,3 +298,21 @@ def test_concurrent_committers_lose_nothing(tmp_path):
     tbl = ParquetManifestTable(root)
     assert len(tbl.lineage()) == 4 * 10 * 8
     assert [s["snapshot_id"] for s in tbl.snapshots()] == list(range(1, 41))
+
+
+def test_bucket_directories_are_listed_on_the_driver(spark, tmp_path):
+    """A wave's lineage scan reads one directory per bucket.  Listing 64
+    of them starts no Spark job (above 32 paths Spark's default is a
+    listing job with one task per directory)."""
+    wave = str(tmp_path / "run=r")
+    (spark.range(64)
+     .selectExpr("id AS doc_hash", "1 AS n_spans", "CAST(id AS INT) AS bucket")
+     .write.partitionBy("bucket").parquet(wave))
+    sc = spark.sparkContext
+    sc.setJobGroup("listing", "bucket directory listing")
+    try:
+        df = spark.read.schema("doc_hash BIGINT, n_spans INT").parquet(wave)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("listing") == []
+    assert df.select("bucket").distinct().count() == 64

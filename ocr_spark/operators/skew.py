@@ -39,12 +39,9 @@ def bucket_clustered_repartition(df: DataFrame, num_partitions: int) -> DataFram
 
     The bucket is a uniform hash of doc_id, so with salt_buckets >= ~4x
     num_partitions each task draws several buckets and mega-doc skew
-    averages out — same balancing as a fine-grained salt.  The payoff of
-    using the bucket as the shuffle key: a downstream
-    ``partitionBy("bucket")`` sink finds every bucket's rows in a single
-    task, so the file committer skips the dynamic-partition sort over
-    wide nested span rows (measured 10x write slowdown at local[32] when
-    the shuffle key and the write partition column disagreed).
+    averages out — same balancing as a fine-grained salt.  The sink
+    writes one file per task with ``bucket`` as a data column, so this
+    exchange is there for balance only.
     """
     return df.repartition(num_partitions, "bucket")
 

@@ -7,18 +7,19 @@ only."  Reference code: REF:unavailable (SURVEY.md §0).
 
 Unit of commit = salt bucket (stable pure function of doc_id — physical
 partition ids would not survive a parallelism change; see
-operators/skew.py).  Work proceeds in waves of buckets; every wave of a
-run appends its bucket directories to the run's one directory, and the
-wave's buckets are committed to the manifest atomically, so a crash
-loses at most the in-flight wave and a restart anti-joins pending
-buckets against committed lineage (E10) and reprocesses only those.
+operators/skew.py).  Work proceeds in waves of buckets; every wave
+writes one file per task into its own fresh directory of the run
+(``bucket`` stays a data column), and the wave's buckets are committed
+to the manifest atomically, so a crash loses at most the in-flight wave
+and a restart anti-joins pending buckets against committed lineage
+(E10) and reprocesses only those, into a new wave directory.
 
 Physical plan per wave (SURVEY.md §3/EP1):
   BatchScan(parquet, pruned to doc_id+spans)
     → Filter(bucket ∈ wave ∧ bucket ∉ committed)      [partition pruning]
     → Exchange(hash(bucket))                           [E2 — the ONLY shuffle]
     → MapInPandas(E3–E7 fused, Arrow batches)
-    → WriteFiles(partitionBy bucket)
+    → WriteFiles(run=<id>/wave=<w>/, one file per task)
 With chunk_max_spans set, the Exchange is on (bucket, chunk_id) and a
 second Exchange(hash(bucket)) feeds the chunk restitch before the sink,
 so the table stores the same whole-document rows either way.
@@ -50,28 +51,32 @@ from ocr_spark.sources.formats import (
     checksum_hex,
     lineage_exprs,
     open_table,
+    wave_name,
 )
 
 
 def _wave_lineage(spark: SparkSession, wave_dir: str, run_id: str,
-                  watermark: str, buckets: set[int] | None) -> list[dict]:
+                  watermark: str) -> list[dict]:
     # The per-doc hash + span count were computed JVM-side in the write
     # pass and stored as plain int64 columns, so this verification scan
     # prunes to three tiny columns — it never re-deserializes the nested
     # span payloads (measured: the old to_json re-read was a fixed ~7s
     # that did not scale with cores and dominated Amdahl overhead).  The
-    # explicit schema skips footer inference, and the bucket filter
-    # prunes the scan to this wave's directories: earlier waves of the
-    # run share wave_dir and are never re-read.  The checksum reads the
-    # STORED doc_hash column; the deep payload-rehash lives in
-    # ParquetManifestTable.verify.
-    df = (spark.read.schema("doc_hash BIGINT, n_spans INT")
-          .option("basePath", wave_dir).parquet(wave_dir))
-    if buckets is not None:
-        # one SQL IN list: Column.isin makes a py4j round trip per value
-        df = df.where(f"bucket IN ({', '.join(map(str, sorted(buckets)))})")
+    # explicit schema skips footer inference.  wave_dir is this wave's
+    # own directory and holds only its buckets (every writer filters its
+    # input to them), so earlier waves of the run are never re-read.  The
+    # checksum reads the STORED doc_hash column; the deep payload-rehash
+    # lives in ParquetManifestTable.verify.  coalesce(1) makes the scan
+    # and the aggregate one single-task stage with no shuffle: a wave's
+    # lineage columns are 16 bytes a document, and on a busy 4-core host
+    # the extra stage (4 scan tasks, an exchange, an adaptive re-plan)
+    # made stream increments' throughput spread 1.3x wider run to run.
+    wave = wave_name(wave_dir)
     rows = (
-        df.groupBy("bucket")
+        spark.read.schema("bucket INT, doc_hash BIGINT, n_spans INT")
+        .parquet(wave_dir)
+        .coalesce(1)
+        .groupBy("bucket")
         .agg(
             F.count("*").alias("doc_count"),
             F.sum("n_spans").alias("span_count"),
@@ -84,6 +89,7 @@ def _wave_lineage(spark: SparkSession, wave_dir: str, run_id: str,
         {
             "bucket": int(r["bucket"]),
             "run_id": run_id,
+            "wave": wave,
             "doc_count": int(r["doc_count"]),
             "span_count": int(r["span_count"]),
             "checksum": checksum_hex(r["checksum"]),
@@ -115,11 +121,7 @@ def balanced_extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
         extracted = reassemble_chunks(raw.repartition(n, "bucket"))
     else:
         # ONE exchange, clustered by the salt bucket: balances extraction
-        # work (bucket = uniform hash of doc_id, several buckets per task)
-        # AND pre-clusters rows for the partitionBy("bucket") sink, so the
-        # writer never pays the dynamic-partition sort over wide nested
-        # span rows (measured 10x slower at local[32] when shuffle key and
-        # write partition column disagreed).
+        # work (bucket = uniform hash of doc_id, several buckets per task).
         raw = extract_stage(bucket_clustered_repartition(docs, n), cfg)
         extracted = with_bucket(raw, cfg)
     _, doc_hash = lineage_exprs(extracted)
@@ -133,16 +135,16 @@ def balanced_extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
 
 def commit_wave(spark: SparkSession, tbl: ParquetManifestTable,
                 extracted: DataFrame, run_id: str, watermark: str,
-                buckets: set[int] | None = None, append_runs: bool = False,
+                append_runs: bool = False,
                 phase: dict | None = None) -> list[dict]:
-    """E8 write → E9 lineage → atomic commit of the entries of
-    ``buckets`` (a run dir accumulates across the waves of one run;
-    None = all).  Adds write/lineage/commit seconds to ``phase``;
-    returns the committed entries."""
+    """E8 write into a fresh wave directory → E9 lineage of that
+    directory → atomic commit of its entries.  Adds write/lineage/commit
+    seconds to ``phase``; returns the wave's lineage entries (in batch
+    mode, commit skips those of buckets another run committed first)."""
     t_w = time.time()
     wave_dir = tbl.write_wave(extracted, run_id)              # E8
     t_l = time.time()
-    entries = _wave_lineage(spark, wave_dir, run_id, watermark, buckets)  # E9
+    entries = _wave_lineage(spark, wave_dir, run_id, watermark)  # E9
     t_c = time.time()
     tbl.commit(entries, append_runs=append_runs)              # atomic commit
     if phase is not None:
@@ -186,7 +188,7 @@ def run_extract(
         wave_docs = docs.filter(F.col("bucket").isin([int(b) for b in wave]))
         entries = commit_wave(
             spark, tbl, balanced_extract(wave_docs, cfg, num_partitions),
-            run_id, watermark, buckets=set(wave), phase=phase)
+            run_id, watermark, phase=phase)
         total_docs += sum(e["doc_count"] for e in entries)
         total_spans += sum(e["span_count"] for e in entries)
 

@@ -40,12 +40,13 @@ def get_spark(app: str = "ocr_spark", master: str | None = None,
         # (uncompressed): at corpus scale the 31% smaller files are pure
         # storage + downstream-scan savings for free
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # list a read's paths on the driver, not in a Spark job: a wave's
-        # lineage scan reads one directory per bucket (up to 256), and
+        # list a read's paths on the driver, not in a Spark job: read,
+        # verify and compact read one directory per committed wave, and
         # above the default threshold of 32 paths Spark launches a listing
         # job with one task per directory.  The manifest tables live on a
         # local (POSIX) filesystem, where that job cost 0.4-0.5 s of a
-        # 1.8 s stream increment (100 docs, 4 cores) and the driver lists
+        # 1.8 s stream increment (100 docs, 4 cores, when each lineage
+        # scan still read one directory per bucket) and the driver lists
         # the same directories in milliseconds
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
                 "4096")

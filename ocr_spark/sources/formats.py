@@ -20,14 +20,18 @@ lineage → commit); every data file is ``SINK_CODEC`` parquet and every
 row one whole document ``(doc_id, spans, bucket, doc_hash, n_spans)``,
 whatever the chunking config of the run that wrote it.
 
-Table layout (``run_dir`` and ``bucket_dir`` derive the data paths):
-  <root>/data/run=<run_id>/bucket=<k>/part-*.parquet
+Table layout (``run_dir`` and ``wave_dir`` derive the data paths):
+  <root>/data/run=<run_id>/wave=<wave>/part-*.parquet
+                          one file per write task; ``bucket`` is a data
+                          column, so the 256 salt buckets stay the commit
+                          unit without being 256 directories of tiny files
   <root>/_manifest.lock   the writers' flock
   <root>/_manifest.json   the whole table state and its history:
     snapshot_id     the last commit's id
-    entries         live [{bucket, run_id, snapshot, doc_count,
-                    span_count, checksum, watermark}]; ``snapshot`` is
-                    the commit that added the entry
+    entries         live [{bucket, run_id, wave, snapshot, doc_count,
+                    span_count, checksum, watermark}]; ``wave`` names the
+                    directory the entry's rows live in, ``snapshot`` the
+                    commit that added the entry
     removed         compacted-away entries not yet vacuumed: the same
                     fields plus ``removed``, the compaction's snapshot
     absorbed_runs   run ids a compaction absorbed (zombie guard)
@@ -64,6 +68,12 @@ def lineage_exprs(df: DataFrame):
     from pyspark.sql import functions as F
 
     return F.lit(True), F.xxhash64("doc_id", "spans")
+
+
+def wave_name(wave_dir: str) -> str:
+    """The ``wave`` a manifest entry stores for a directory that
+    ``write_wave`` returned."""
+    return os.path.basename(wave_dir).removeprefix("wave=")
 
 
 def checksum_hex(x: int) -> str:
@@ -126,9 +136,9 @@ class ParquetManifestTable:
     def run_dir(self, run_id: str) -> str:
         return os.path.join(self.data_dir, f"run={run_id}")
 
-    def bucket_dir(self, run_id: str, bucket: int) -> str:
-        """Where the files of entry (bucket, run) live."""
-        return os.path.join(self.run_dir(run_id), f"bucket={bucket}")
+    def wave_dir(self, run_id: str, wave: str) -> str:
+        """Where the files of the entries of ``wave`` live."""
+        return os.path.join(self.run_dir(run_id), f"wave={wave}")
 
     def commit(self, entries: list[dict], append_runs: bool = False) -> None:
         """Append bucket entries idempotently, stamped with the new
@@ -178,10 +188,10 @@ class ParquetManifestTable:
     # -- maintenance ---------------------------------------------------------
     def compact(self, spark: SparkSession,
                 num_partitions: int | None = None) -> dict:
-        """Rewrite all committed data into ONE run with one file set per
-        bucket, then swap the manifest atomically — the small-files
-        maintenance every long-lived wave/micro-batch table needs (the
-        Iceberg path gets this from rewrite_data_files).
+        """Rewrite all committed data into one wave of ONE run, each
+        bucket's rows in one file, then swap the manifest atomically —
+        the small-files maintenance every long-lived wave/micro-batch
+        table needs (the Iceberg path gets this from rewrite_data_files).
 
         Correctness properties (tests/test_formats.py):
         - snapshot-isolated: readers see either the old entries or the
@@ -206,16 +216,13 @@ class ParquetManifestTable:
         if not entries:
             return {"compacted_entries": 0, "run_id": None}
         run_id = f"compact{uuid.uuid4().hex[:12]}"
-        df = self._read(spark, entries)
         n = num_partitions or spark.sparkContext.defaultParallelism
         # "run" is a DISCOVERED partition column (dir layout run=<id>) —
         # persisting it as a data column would collide with discovery on
-        # the next read of the compacted files; "bucket" stays because
-        # partitionBy consumes it back into the directory layout
-        (df.drop("run")
-         .repartition(n, "bucket")  # cluster: one file set per bucket
-         .write.mode("append").option("compression", SINK_CODEC)
-         .partitionBy("bucket").parquet(self.run_dir(run_id)))
+        # the next read of the compacted files
+        wave = wave_name(self.write_wave(
+            self._read(spark, entries).drop("run").repartition(n, "bucket"),
+            run_id))
 
         by_bucket: dict[int, dict] = {}
         for e in entries:
@@ -240,6 +247,7 @@ class ParquetManifestTable:
                 {
                     "bucket": k,
                     "run_id": run_id,
+                    "wave": wave,
                     "snapshot": s,
                     "doc_count": b["doc_count"],
                     "span_count": b["span_count"],
@@ -255,40 +263,54 @@ class ParquetManifestTable:
 
     def vacuum(self) -> list[str]:
         """Expire the snapshots that read compacted-away entries, then
-        delete the run directories no live entry references
-        (post-compaction cleanup; also removes half-written runs left by
-        a crash BEFORE their commit).  Expiry comes first, as in
-        Iceberg's expire_snapshots before orphan-file deletion: a crash
-        between the two steps leaves only orphan directories, which the
-        next vacuum() removes.  Must not race a live writer whose wave
-        is written but not yet committed — run it from the maintenance
-        job, not concurrently with ingestion."""
+        delete the run and wave directories no live entry references
+        (post-compaction cleanup; also removes half-written waves left by
+        a crash BEFORE their commit, inside a resumed run too).  Expiry
+        comes first, as in Iceberg's expire_snapshots before orphan-file
+        deletion: a crash between the two steps leaves only orphan
+        directories, which the next vacuum() removes.  Must not race a
+        live writer whose wave is written but not yet committed — run it
+        from the maintenance job, not concurrently with ingestion."""
         with self._update() as m:
             m["expired_before"] = max(
                 [m["expired_before"]] + [e["removed"] for e in m["removed"]])
             m["removed"] = []
-            live = {self.run_dir(e["run_id"]) for e in m["entries"]}
-        removed = []
-        for d in glob.glob(os.path.join(glob.escape(self.data_dir), "run=*")):
-            if d not in live:
-                shutil.rmtree(d, ignore_errors=True)
-                removed.append(d)
+            live = {self.wave_dir(e["run_id"], e["wave"])
+                    for e in m["entries"]}
+        live_runs = {os.path.dirname(w) for w in live}
+        runs = os.path.join(glob.escape(self.data_dir), "run=*")
+        removed = ([d for d in glob.glob(runs) if d not in live_runs]
+                   + [w for w in glob.glob(os.path.join(runs, "wave=*"))
+                      if os.path.dirname(w) in live_runs and w not in live])
+        for d in removed:
+            shutil.rmtree(d, ignore_errors=True)
         return removed
 
     # -- I/O ----------------------------------------------------------------
     def write_wave(self, df: DataFrame, run_id: str) -> str:
-        out = self.run_dir(run_id)
-        (df.write.mode("append").option("compression", SINK_CODEC)
-         .partitionBy("bucket").parquet(out))
+        """Write ``df`` as plain parquet, one file per task, into a fresh
+        wave directory of run ``run_id``; returns that directory.  Fresh
+        on every call, so a run resumed under the same id never appends
+        into a crashed attempt's files.  The name starts with a letter,
+        so partition discovery reads ``wave`` as a string in every
+        table."""
+        out = self.wave_dir(run_id, f"w{uuid.uuid4().hex[:12]}")
+        df.write.option("compression", SINK_CODEC).parquet(out)
         return out
 
     def _read(self, spark: SparkSession, entries: list[dict]) -> DataFrame:
-        return spark.read.option("basePath", self.data_dir).parquet(
-            *[self.bucket_dir(e["run_id"], e["bucket"]) for e in entries])
+        """The rows of ``entries``: their distinct wave directories,
+        filtered to the committed (wave, bucket) pairs, because in batch
+        mode a wave can hold a bucket that another run committed first."""
+        waves = sorted({self.wave_dir(e["run_id"], e["wave"])
+                        for e in entries})
+        pairs = ", ".join(f"('{e['wave']}', {e['bucket']})" for e in entries)
+        return (spark.read.option("basePath", self.data_dir).parquet(*waves)
+                .where(f"(wave, bucket) IN ({pairs})").drop("wave"))
 
     def read(self, spark: SparkSession,
              as_of: int | None = None) -> DataFrame:
-        """Union of committed (bucket, run) directories only —
+        """Union of committed (bucket, run) entries only —
         uncommitted files are invisible (snapshot isolation).  ``as_of``
         time-travels to an earlier snapshot (``snapshots()`` lists
         them); valid until vacuum() expires snapshots whose files a

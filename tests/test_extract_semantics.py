@@ -237,6 +237,8 @@ def test_manifest_verify_detects_tampering(spark, tmp_path):
     import glob
     import os as _os
 
+    import pyarrow.parquet as pq
+
     from ocr_spark.config import ExtractConfig
     from ocr_spark.plans.pipeline import run_extract
     from ocr_spark.sources.corpus import generate_interleaved
@@ -249,11 +251,16 @@ def test_manifest_verify_detects_tampering(spark, tmp_path):
     tbl = ParquetManifestTable(out)
     assert tbl.verify(spark) == []
 
-    victim = sorted(glob.glob(f"{out}/data/run=*/bucket=*/*.parquet"))[0]
+    # the first file holding rows (task 0 writes a file even when empty)
+    victim = next(f for f in sorted(glob.glob(
+        f"{out}/data/run=*/**/*.parquet", recursive=True))
+        if pq.read_metadata(f).num_rows)
+    stored = set(pq.read_table(victim, columns=["bucket"])["bucket"]
+                 .to_pylist())
     _os.remove(victim)
     bad = tbl.verify(spark)
     assert bad, "verify() missed a deleted data file"
-    assert str(bad[0]["bucket"]) in victim
+    assert {b["bucket"] for b in bad} == stored
 
 
 def test_manifest_verify_detects_payload_corruption(spark, tmp_path):
@@ -276,9 +283,12 @@ def test_manifest_verify_detects_payload_corruption(spark, tmp_path):
     tbl = ParquetManifestTable(out)
     assert tbl.verify(spark) == []
 
-    # flip one span's text in one file, keeping every other column
-    # (including the persisted doc_hash) byte-identical
-    victim = sorted(glob.glob(f"{out}/data/run=*/bucket=*/*.parquet"))[0]
+    # flip one span's text in the first file holding rows (task 0 writes
+    # a file even when empty), keeping every other column (including the
+    # persisted doc_hash) byte-identical
+    victim = next(f for f in sorted(glob.glob(
+        f"{out}/data/run=*/**/*.parquet", recursive=True))
+        if pq.read_metadata(f).num_rows)
     # drop Hadoop's local-FS .crc sidecar: object stores don't have it,
     # and the point of this test is that OUR lineage layer catches the
     # corruption, not the local filesystem's courtesy checksum
@@ -290,14 +300,14 @@ def test_manifest_verify_detects_payload_corruption(spark, tmp_path):
     t = pq.read_table(victim)
     data = t.to_pydict()
     spans = data["spans"]
-    for row in spans:
+    for i, row in enumerate(spans):
         if row:
             row[0]["text"] = "CORRUPTED"
             break
     pq.write_table(t.from_pydict(data, schema=t.schema), victim)
     bad = tbl.verify(spark)
     assert bad, "verify() trusted stored hashes and missed payload corruption"
-    assert str(bad[0]["bucket"]) in victim
+    assert [b["bucket"] for b in bad] == [data["bucket"][i]]
 
 
 def test_pdf_multi_stream_no_phantom_segment():
@@ -375,10 +385,10 @@ def test_chunked_and_unchunked_runs_commit_identical_lineage(spark, tmp_path):
 
 
 def test_wave_lineage_reads_only_its_own_buckets(spark, tmp_path):
-    """Every wave of a run appends to one run directory; a wave's
-    lineage scan must read only that wave's buckets.  A resume under
-    the same run_id whose earlier bucket file is unreadable still
-    commits its own buckets."""
+    """Every wave of a run writes its own directory; a wave's lineage
+    scan must read only that wave's buckets.  A resume under the same
+    run_id whose earlier wave's files are unreadable still commits its
+    own buckets."""
     import glob
 
     from ocr_spark.config import ExtractConfig
@@ -395,17 +405,126 @@ def test_wave_lineage_reads_only_its_own_buckets(spark, tmp_path):
     tbl = ParquetManifestTable(out)
     first = sorted(tbl.lineage(), key=lambda e: e["bucket"])
     assert [e["bucket"] for e in first] == [0, 1, 2, 3]
-    # corrupt every committed bucket's files, not just one: schema
+    # corrupt every committed wave's files, not just one: schema
     # inference must not be what touches them either
-    for e in first:
-        for f in glob.glob(os.path.join(
-                tbl.bucket_dir(e["run_id"], e["bucket"]), "*.parquet")):
-            with open(f, "wb") as fh:
-                fh.write(b"not a parquet file")
+    files = {f for e in first for f in glob.glob(os.path.join(
+        tbl.wave_dir(e["run_id"], e["wave"]), "*.parquet"))}
+    assert files
+    for f in files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file")
     m = run_extract(spark, docs, out, cfg=cfg, num_partitions=4,
                     run_id="r1", wave_size=4)
     assert m["skipped_buckets"] == 4 and m["docs"] > 0
     assert sorted(e["bucket"] for e in tbl.lineage()) == list(range(8))
+
+
+def test_wave_lineage_is_one_single_task_stage(spark, tmp_path):
+    """A wave's lineage scan and aggregate run as one job of one stage
+    with one task, however many files the wave holds: no shuffle."""
+    from ocr_spark.plans.pipeline import _wave_lineage
+
+    wave = str(tmp_path / "run=r" / "wave=wtest")
+    (spark.range(0, 64, 1, 4)
+     .selectExpr("CAST(id % 8 AS INT) AS bucket", "id AS doc_hash",
+                 "2 AS n_spans")
+     .write.parquet(wave))
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage", "wave lineage")
+    try:
+        entries = _wave_lineage(spark, wave, "r", "wm")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup("lineage")
+              for s in tracker.getJobInfo(j).stageIds]
+    assert len(stages) == 1
+    assert tracker.getStageInfo(stages[0]).numTasks == 1
+    assert sorted((e["bucket"], e["wave"], e["doc_count"], e["span_count"])
+                  for e in entries) == [(b, "wtest", 8, 16) for b in range(8)]
+
+
+def _json_rows(df):
+    return sorted((r["doc_id"], r["j"]) for r in
+                  df.select("doc_id", F.to_json("spans").alias("j")).collect())
+
+
+def test_resume_after_a_crash_between_write_and_commit(spark, tmp_path,
+                                                       monkeypatch):
+    """A wave written but never committed must not leak into a resume
+    under the same run_id: the resumed wave writes a fresh directory, so
+    the table holds each document once, and vacuum() removes the crashed
+    attempt's wave from the live run."""
+    from ocr_spark.config import ExtractConfig
+    from ocr_spark.plans.pipeline import extract_dataframe, run_extract
+    from ocr_spark.sources.corpus import generate_interleaved
+    from ocr_spark.sources.formats import ParquetManifestTable
+
+    cfg = ExtractConfig(salt_buckets=8)
+    docs = generate_interleaved(spark, 60, seed=13, partitions=4)
+    out = str(tmp_path / "t")
+    commit, calls = ParquetManifestTable.commit, []
+
+    def crash_on_second_commit(self, entries, append_runs=False):
+        calls.append(len(entries))
+        if len(calls) == 2:
+            raise RuntimeError("injected crash before commit")
+        return commit(self, entries, append_runs)
+
+    monkeypatch.setattr(ParquetManifestTable, "commit",
+                        crash_on_second_commit)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_extract(spark, docs, out, cfg=cfg, num_partitions=4,
+                    run_id="r1", wave_size=4)
+    monkeypatch.undo()
+    run_extract(spark, docs, out, cfg=cfg, num_partitions=4, run_id="r1",
+                wave_size=4)
+
+    tbl = ParquetManifestTable(out)
+    want = _json_rows(extract_dataframe(docs, cfg, num_partitions=4))
+    assert len(want) == 60
+    assert _json_rows(tbl.read(spark)) == want
+    assert sum(e["doc_count"] for e in tbl.lineage()) == 60
+    assert tbl.verify(spark) == []
+    removed = tbl.vacuum()
+    assert [os.path.basename(os.path.dirname(d)) for d in removed] == [
+        "run=r1"]
+    assert _json_rows(tbl.read(spark)) == want
+
+
+def test_readers_skip_buckets_another_run_committed_first(spark, tmp_path):
+    """In batch mode commit keeps a bucket's first entry only, so a wave
+    can hold rows of buckets it never committed: run r1 commits buckets
+    0-3, then a one-wave run r2 writes all 8 and commits 4-7.  Reads and
+    the audit must see r2's rows of buckets 4-7 only."""
+    from ocr_spark.config import ExtractConfig
+    from ocr_spark.operators.skew import with_bucket
+    from ocr_spark.plans.pipeline import (
+        balanced_extract,
+        commit_wave,
+        extract_dataframe,
+        run_extract,
+    )
+    from ocr_spark.sources.corpus import generate_interleaved
+    from ocr_spark.sources.formats import ParquetManifestTable
+
+    cfg = ExtractConfig(salt_buckets=8)
+    docs = generate_interleaved(spark, 60, seed=13, partitions=4)
+    out = str(tmp_path / "t")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extract(spark, docs, out, cfg=cfg, num_partitions=4,
+                    run_id="r1", wave_size=4, fail_after_waves=1)
+    tbl = ParquetManifestTable(out)
+    commit_wave(spark, tbl,
+                balanced_extract(with_bucket(docs, cfg), cfg, 4),
+                "r2", "2026-01-01T00:00:00Z")
+    assert sorted((e["run_id"], e["bucket"]) for e in tbl.lineage()) == [
+        ("r1", b) for b in range(4)] + [("r2", b) for b in range(4, 8)]
+
+    got = _json_rows(tbl.read(spark))
+    assert len({d for d, _ in got}) == len(got)
+    assert got == _json_rows(extract_dataframe(docs, cfg, num_partitions=4))
+    assert tbl.verify(spark) == []
 
 
 def test_pdf_multi_page_document_order():

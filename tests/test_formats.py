@@ -139,6 +139,13 @@ def test_compact_merges_runs_preserving_lineage(spark, tmp_path):
     assert _table_key(spark, tbl) == before
     assert tbl.verify(spark) == []
 
+    # an orphan wave inside a live run (a crashed attempt of a resumed
+    # run) goes too; the run's committed wave stays
+    orphan_wave = tbl.wave_dir(res["run_id"], "wcrashed00000")
+    os.makedirs(orphan_wave)
+    assert tbl.vacuum() == [orphan_wave]
+    assert _table_key(spark, tbl) == before
+
 
 def test_compact_is_repeatable_and_append_continues(spark, tmp_path):
     """A compacted table keeps accepting new runs, and a SECOND
@@ -301,9 +308,9 @@ def test_concurrent_committers_lose_nothing(tmp_path):
 
 
 def test_bucket_directories_are_listed_on_the_driver(spark, tmp_path):
-    """A wave's lineage scan reads one directory per bucket.  Listing 64
-    of them starts no Spark job (above 32 paths Spark's default is a
-    listing job with one task per directory)."""
+    """read, verify and compact read one directory per committed wave.
+    Listing 64 directories starts no Spark job (above 32 paths Spark's
+    default is a listing job with one task per directory)."""
     wave = str(tmp_path / "run=r")
     (spark.range(64)
      .selectExpr("id AS doc_hash", "1 AS n_spans", "CAST(id AS INT) AS bucket")

@@ -13,4 +13,10 @@ tokenize, layout classification, boilerplate strip) → offset-order
 restitch → write spans + per-partition lineage (idempotent restart).
 """
 
+from ocr_spark import zipcache
+
+# every engine UDF unpickles into a module under ocr_spark, so this runs
+# once in each Python worker that executes one (see zipcache)
+zipcache.install()
+
 __version__ = "0.1.0"

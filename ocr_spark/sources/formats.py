@@ -140,9 +140,10 @@ class ParquetManifestTable:
         """Where the files of the entries of ``wave`` live."""
         return os.path.join(self.run_dir(run_id), f"wave={wave}")
 
-    def commit(self, entries: list[dict], append_runs: bool = False) -> None:
+    def commit(self, entries: list[dict],
+               append_runs: bool = False) -> list[dict]:
         """Append bucket entries idempotently, stamped with the new
-        snapshot id.
+        snapshot id; returns the entries kept, as stored.
 
         Batch mode (default): a bucket appears at most once in the
         manifest — a retried wave or a concurrent run cannot
@@ -164,7 +165,9 @@ class ParquetManifestTable:
                 have = {e["bucket"] for e in m["entries"]}
                 new = [e for e in entries if e["bucket"] not in have]
             m["snapshot_id"] += 1
-            m["entries"] += [{**e, "snapshot": m["snapshot_id"]} for e in new]
+            kept = [{**e, "snapshot": m["snapshot_id"]} for e in new]
+            m["entries"] += kept
+        return kept
 
     def snapshots(self) -> list[dict]:
         """Available snapshot versions, oldest first: one dict per

@@ -495,8 +495,9 @@ def test_resume_after_a_crash_between_write_and_commit(spark, tmp_path,
 def test_readers_skip_buckets_another_run_committed_first(spark, tmp_path):
     """In batch mode commit keeps a bucket's first entry only, so a wave
     can hold rows of buckets it never committed: run r1 commits buckets
-    0-3, then a one-wave run r2 writes all 8 and commits 4-7.  Reads and
-    the audit must see r2's rows of buckets 4-7 only."""
+    0-3, then a one-wave run r2 writes all 8 and commits 4-7.  Reads,
+    the audit and commit_wave's returned entries (which run_extract sums
+    into its metrics) must see r2's rows of buckets 4-7 only."""
     from ocr_spark.config import ExtractConfig
     from ocr_spark.operators.skew import with_bucket
     from ocr_spark.plans.pipeline import (
@@ -515,11 +516,14 @@ def test_readers_skip_buckets_another_run_committed_first(spark, tmp_path):
         run_extract(spark, docs, out, cfg=cfg, num_partitions=4,
                     run_id="r1", wave_size=4, fail_after_waves=1)
     tbl = ParquetManifestTable(out)
-    commit_wave(spark, tbl,
-                balanced_extract(with_bucket(docs, cfg), cfg, 4),
-                "r2", "2026-01-01T00:00:00Z")
-    assert sorted((e["run_id"], e["bucket"]) for e in tbl.lineage()) == [
+    kept = commit_wave(spark, tbl,
+                       balanced_extract(with_bucket(docs, cfg), cfg, 4),
+                       "r2", "2026-01-01T00:00:00Z")
+    lineage = tbl.lineage()
+    assert sorted((e["run_id"], e["bucket"]) for e in lineage) == [
         ("r1", b) for b in range(4)] + [("r2", b) for b in range(4, 8)]
+    assert sorted(e["bucket"] for e in kept) == list(range(4, 8))
+    assert kept == [e for e in lineage if e["run_id"] == "r2"]
 
     got = _json_rows(tbl.read(spark))
     assert len({d for d, _ in got}) == len(got)

@@ -64,13 +64,11 @@ class ExtractConfig:
     # ---- skew handling (E2) ----
     # Stable bucket count for lineage/restart AND the salted shuffle key:
     # bucket = pmod(xxhash64(doc_id), salt_buckets) is a uniform hash, so
-    # clustering the one Exchange by bucket both balances work (keep
-    # buckets >= ~4x the max expected task parallelism so each task gets
-    # several buckets and mega-docs average out) and lets the partitioned
-    # sink write each bucket dir from a single task — avoiding the
-    # dynamic-partition sort of wide nested rows, which dominated runtime
-    # (measured 10x write slowdown at local[32] when the shuffle key and
-    # the write partition column disagreed).
+    # clustering the one Exchange by bucket balances work (keep buckets
+    # >= ~4x the max expected task parallelism so each task gets several
+    # buckets and mega-docs average out).  The sink writes one file per
+    # task with ``bucket`` as a data column, so the bucket is the commit
+    # unit without being a directory.
     salt_buckets: int = 256
     # E2 weight variant: split a document's offset-sorted spans into
     # chunks of <= this many spans before the UDF stage, bounding

@@ -26,11 +26,11 @@ from pyspark.sql import DataFrame, functions as F
 from ocr_spark.config import DEFAULT, ExtractConfig
 
 
-def with_bucket(df: DataFrame, cfg: ExtractConfig = DEFAULT,
-                num_buckets: int | None = None) -> DataFrame:
+def with_bucket(df: DataFrame, cfg: ExtractConfig = DEFAULT) -> DataFrame:
     """Stable salt bucket column (pure function of doc_id)."""
-    k = num_buckets or cfg.salt_buckets
-    return df.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(k)).cast("int"))
+    return df.withColumn(
+        "bucket",
+        F.pmod(F.xxhash64("doc_id"), F.lit(cfg.salt_buckets)).cast("int"))
 
 
 def bucket_clustered_repartition(df: DataFrame, num_partitions: int) -> DataFrame:

@@ -26,7 +26,7 @@ so the table stores the same whole-document rows either way.
 Lineage aggregates are computed from the files actually written (so the
 checksum covers the sink, not the plan), then the manifest swap commits.
 
-Every entry point — run_extract's waves, stream_extract's micro-batches,
+Every entry point — run_extract's waves, stream_extract's increments,
 the sink-less extract_dataframe — runs a wave through ``balanced_extract``
 (shuffle key, chunk choice, sink row hash) and ``commit_wave``.
 """
@@ -135,18 +135,20 @@ def balanced_extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
 
 def commit_wave(spark: SparkSession, tbl: ParquetManifestTable,
                 extracted: DataFrame, run_id: str, watermark: str,
-                append_runs: bool = False,
+                consumed: list[str] | None = None,
                 phase: dict | None = None) -> list[dict]:
     """E8 write into a fresh wave directory → E9 lineage of that
-    directory → atomic commit of its entries.  Adds write/lineage/commit
-    seconds to ``phase``; returns the entries the commit kept (in batch
-    mode, commit skips those of buckets another run committed first)."""
+    directory → atomic commit of its entries, and of ``consumed``, the
+    input files of a stream increment (ParquetManifestTable.commit).
+    Adds write/lineage/commit seconds to ``phase``; returns the entries
+    the commit kept (in batch mode, commit skips those of buckets
+    another run committed first; in stream mode, all or none)."""
     t_w = time.time()
     wave_dir = tbl.write_wave(extracted, run_id)              # E8
     t_l = time.time()
     entries = _wave_lineage(spark, wave_dir, run_id, watermark)  # E9
     t_c = time.time()
-    kept = tbl.commit(entries, append_runs=append_runs)       # atomic commit
+    kept = tbl.commit(entries, consumed)                      # atomic commit
     if phase is not None:
         phase["write"] += t_l - t_w
         phase["lineage"] += t_c - t_l

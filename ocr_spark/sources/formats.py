@@ -14,7 +14,7 @@ jar and no network (SURVEY.md §0/§4.4), so the pipeline runs against
     production ``spark.read.format("iceberg")`` / ``writeTo`` plans, but
     has no lineage, so ``run_extract`` refuses it before any write.
 
-Both writers — run_extract's waves and stream_extract's micro-batches —
+Both writers — run_extract's waves and stream_extract's increments —
 reach the table only through plans/pipeline.py:commit_wave (write_wave →
 lineage → commit); every data file is ``SINK_CODEC`` parquet and every
 row one whole document ``(doc_id, spans, bucket, doc_hash, n_spans)``,
@@ -34,7 +34,8 @@ Table layout (``run_dir`` and ``wave_dir`` derive the data paths):
                     commit that added the entry
     removed         compacted-away entries not yet vacuumed: the same
                     fields plus ``removed``, the compaction's snapshot
-    absorbed_runs   run ids a compaction absorbed (zombie guard)
+    consumed        the input files stream_extract's commits extracted,
+                    recorded in the swap that commits their entries
     expired_before  the oldest snapshot vacuum() left readable
 Snapshot s is the filter ``snapshot <= s < removed`` over both lists, so
 no per-snapshot copy of the manifest is kept.
@@ -92,7 +93,7 @@ class ParquetManifestTable:
     def _load(self) -> dict:
         if not os.path.exists(self.manifest_path):
             return {"snapshot_id": 0, "entries": [], "removed": [],
-                    "absorbed_runs": [], "expired_before": 1}
+                    "consumed": [], "expired_before": 1}
         with open(self.manifest_path) as f:
             return json.load(f)
 
@@ -110,7 +111,9 @@ class ParquetManifestTable:
             yield m
             fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
             with os.fdopen(fd, "w") as f:
-                json.dump(m, f, indent=1)
+                # json.dump always runs the pure-Python encoder; dumps
+                # runs the C one, about 4x faster on a 2,335-entry manifest
+                f.write(json.dumps(m))
             os.replace(tmp, self.manifest_path)  # atomic swap = commit point
 
     def _as_of(self, m: dict, snapshot_id: int) -> list[dict]:
@@ -141,29 +144,27 @@ class ParquetManifestTable:
         return os.path.join(self.run_dir(run_id), f"wave={wave}")
 
     def commit(self, entries: list[dict],
-               append_runs: bool = False) -> list[dict]:
+               consumed: list[str] | None = None) -> list[dict]:
         """Append bucket entries idempotently, stamped with the new
         snapshot id; returns the entries kept, as stored.
 
-        Batch mode (default): a bucket appears at most once in the
-        manifest — a retried wave or a concurrent run cannot
-        double-commit a bucket.  Streaming mode (``append_runs=True``):
-        the idempotency key is (bucket, run) so one run per micro-batch
-        can append new data for the same bucket, while a retried
-        micro-batch (same run_id) stays a no-op."""
+        Batch mode (``consumed`` None): a bucket appears at most once in
+        the manifest — a retried wave or a concurrent run cannot
+        double-commit a bucket.  Stream mode: ``consumed`` names the
+        input files the entries were extracted from, and the same swap
+        records them, so the manifest is the stream's only log.  If any
+        of them is consumed already (a retried or raced increment),
+        nothing is kept; otherwise every entry is appended, whatever
+        buckets earlier increments committed."""
         with self._update() as m:
-            if append_runs:
-                have = {(e["bucket"], e["run_id"]) for e in m["entries"]}
-                # a zombie committer (crashed between write and commit,
-                # resumed after a compaction absorbed its run) must not
-                # resurrect entries pointing at vacuumed directories
-                gone = set(m["absorbed_runs"])
-                new = [e for e in entries
-                       if (e["bucket"], e["run_id"]) not in have
-                       and e["run_id"] not in gone]
-            else:
+            if consumed is None:
                 have = {e["bucket"] for e in m["entries"]}
                 new = [e for e in entries if e["bucket"] not in have]
+            elif set(consumed).isdisjoint(m["consumed"]):
+                new = entries
+                m["consumed"] += consumed
+            else:
+                new = []
             m["snapshot_id"] += 1
             kept = [{**e, "snapshot": m["snapshot_id"]} for e in new]
             m["entries"] += kept
@@ -182,18 +183,20 @@ class ParquetManifestTable:
         return out
 
     def committed_runs(self) -> set[str]:
-        """Run ids with committed data, INCLUDING runs whose files were
-        absorbed by a compaction — a retried streaming micro-batch whose
-        run was compacted away must still see itself as committed."""
-        m = self._load()
-        return {e["run_id"] for e in m["entries"]} | set(m["absorbed_runs"])
+        """The run ids of the live entries."""
+        return {e["run_id"] for e in self._load()["entries"]}
+
+    def consumed_files(self) -> set[str]:
+        """The input files stream commits recorded as extracted; a
+        compaction keeps them."""
+        return set(self._load()["consumed"])
 
     # -- maintenance ---------------------------------------------------------
     def compact(self, spark: SparkSession,
                 num_partitions: int | None = None) -> dict:
         """Rewrite all committed data into one wave of ONE run, each
         bucket's rows in one file, then swap the manifest atomically —
-        the small-files maintenance every long-lived wave/micro-batch
+        the small-files maintenance every long-lived wave/increment
         table needs (the Iceberg path gets this from rewrite_data_files).
 
         Correctness properties (tests/test_formats.py):
@@ -209,8 +212,8 @@ class ParquetManifestTable:
         - time-travel-preserving: the replaced entries move to
           ``removed``, stamped with this snapshot, so earlier snapshots
           stay readable until vacuum() deletes their files;
-        - streaming-idempotent: absorbed run ids are recorded so a
-          retried micro-batch stays a no-op after its files are gone;
+        - streaming-idempotent: the consumed input files stay in the
+          manifest, so a retried increment still commits nothing;
         - crash-safe: a crash before the swap leaves the manifest (and
           readers) untouched; the orphan half-written run dir is removed
           by vacuum().
@@ -259,8 +262,6 @@ class ParquetManifestTable:
                 }
                 for k, b in sorted(by_bucket.items())
             ]
-            m["absorbed_runs"] = sorted(
-                {e["run_id"] for e in entries} | set(m["absorbed_runs"]))
         return {"compacted_entries": len(entries),
                 "buckets": len(by_bucket), "run_id": run_id}
 

@@ -1,25 +1,26 @@
-"""Structured Streaming surface (SURVEY.md §2.3).
+"""Streaming surface (SURVEY.md §2.3).
 
 Streams are first-class in the engine: the ``events`` table can be
 consumed as a file stream with watermarked tumbling / sliding / session
-windows and stateful dedup, and the extraction pipeline itself runs as a
-micro-batch stream (``stream_extract``) with exactly-once sink commits
-via the manifest table — one manifest run per micro-batch, idempotent
-under Spark's foreachBatch retries.  Each micro-batch runs the batch
-job's own extract and wave-commit functions (plans/pipeline.py), so the
-two surfaces cannot drift apart.
+windows and stateful dedup, and the extraction pipeline itself runs
+incrementally (``stream_extract``) with exactly-once commits via the
+manifest table — one manifest run per increment, whose commit records
+the input files it consumed, so a retry commits nothing.  Each
+increment runs the batch job's own extract and wave-commit functions
+(plans/pipeline.py), so the two surfaces cannot drift apart.
 
-Everything is the built-in Structured Streaming operator set —
-``readStream`` → stateless/stateful transformations → ``writeStream`` —
-so watermark handling, state store management, and incremental
-execution come from Spark, not hand-rolled code.  Batch twins of the
+The events operators are the built-in Structured Streaming operator set
+— ``readStream`` → stateless/stateful transformations → ``writeStream``
+— so watermark handling, state store management, and incremental
+execution come from Spark, not hand-rolled code.  ``stream_extract``
+needs none of that: it keeps no state but the manifest, and lists its
+landing directory on the driver.  Batch twins of the
 window aggregations (oracle-checked against DuckDB) live in
 plans/queries_rel.py; tests/test_streaming.py asserts stream ≡ batch.
 """
 
 from __future__ import annotations
 
-import shutil
 import time
 import uuid
 
@@ -123,46 +124,43 @@ def run_available_now(sdf: DataFrame, checkpoint: str,
 def stream_extract(spark: SparkSession, docs_dir: str, out_table: str,
                    checkpoint: str, cfg: ExtractConfig = DEFAULT,
                    num_partitions: int | None = None) -> None:
-    """The extraction pipeline as a Structured Streaming job: new
-    interleaved-document parquet files landing in ``docs_dir`` are
-    extracted incrementally and committed to the manifest table with
-    exactly-once semantics.
+    """Incremental extraction: the interleaved-document parquet files
+    landed in ``docs_dir`` that the manifest table has not consumed yet
+    are extracted and committed with exactly-once semantics.
 
-    Each micro-batch is one wave of the batch job: the same
+    The manifest is the stream's only log.  Each call lists the landed
+    files on the driver (Spark's own hidden-file rules skip ``_SUCCESS``
+    and ``.crc``), drops those the manifest has consumed, and runs the
+    rest as one wave of the batch job: the same
     pipeline.balanced_extract (cfg.chunk_max_spans bounds per-task work
     here too; committed rows are whole documents either way) and
-    pipeline.commit_wave, in its ``append_runs`` mode, under
-    run_id = batch id.  Sink protocol per micro-batch:
-      * batch already in the manifest → Spark retried a committed batch →
-        no-op;
-      * stale uncommitted run dir (crash between write and commit) →
-        removed, then rewritten — commits are whole-batch atomic, so a
-        run_id is either fully committed or absent.
+    pipeline.commit_wave, under a fresh run id.  The commit records the
+    wave's input files in the same manifest swap as its entries:
+      * a retried or raced increment finds its files consumed and
+        commits nothing;
+      * a crash between write and commit leaves the files unconsumed,
+        so the next call rewrites them into a fresh wave, and vacuum()
+        removes the orphan one.
+    Landed files must be immutable and renamed into place whole (as
+    Spark's file source also assumes): a file is consumed by its path,
+    so one still being written would be committed half-read.
 
     The input schema is pinned to ``corpus.SPAN_SCHEMA_DDL`` (the input
     contract), not inferred, so the job also runs on a landing directory
     that has no file yet: it commits nothing until the first one lands.
+    ``checkpoint`` is unused: nothing is written there, and existing
+    callers that pass it keep working.
     """
     tbl = ParquetManifestTable(out_table)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        run_id = f"batch{batch_id:09d}"
-        if run_id in tbl.committed_runs():
-            return  # retried, already-committed micro-batch
-        shutil.rmtree(tbl.run_dir(run_id), ignore_errors=True)
-        docs = with_bucket(batch_df.select("doc_id", "spans"), cfg)
-        watermark = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        commit_wave(spark, tbl, balanced_extract(docs, cfg, num_partitions),
-                    run_id, watermark, append_runs=True)
-
-    q = (
-        spark.readStream.schema(SPAN_SCHEMA_DDL).parquet(docs_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    reader = spark.read.schema(SPAN_SCHEMA_DDL)
+    new = sorted(set(reader.parquet(docs_dir).inputFiles())
+                 - tbl.consumed_files())
+    if not new:
+        return
+    docs = with_bucket(reader.parquet(*new), cfg)
+    watermark = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+    commit_wave(spark, tbl, balanced_extract(docs, cfg, num_partitions),
+                f"stream{uuid.uuid4().hex[:12]}", watermark, consumed=new)
 
 
 def running_user_totals(stream: DataFrame) -> DataFrame:

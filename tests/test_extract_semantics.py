@@ -465,11 +465,11 @@ def test_resume_after_a_crash_between_write_and_commit(spark, tmp_path,
     out = str(tmp_path / "t")
     commit, calls = ParquetManifestTable.commit, []
 
-    def crash_on_second_commit(self, entries, append_runs=False):
+    def crash_on_second_commit(self, entries, consumed=None):
         calls.append(len(entries))
         if len(calls) == 2:
             raise RuntimeError("injected crash before commit")
-        return commit(self, entries, append_runs)
+        return commit(self, entries, consumed)
 
     monkeypatch.setattr(ParquetManifestTable, "commit",
                         crash_on_second_commit)

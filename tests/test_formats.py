@@ -62,9 +62,9 @@ _SPAN_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
 
 
 def _commit_wave(spark, tbl, run_id, lo, hi):
-    """Write one micro-batch-style run covering doc ids [lo, hi) through
-    the wave commit the streaming sink uses (pipeline.commit_wave with
-    append_runs=True)."""
+    """Write one stream-increment-style run covering doc ids [lo, hi)
+    through the wave commit stream_extract uses (pipeline.commit_wave
+    with the increment's consumed input files)."""
     from pyspark.sql import functions as F
 
     from ocr_spark.plans.pipeline import commit_wave
@@ -83,7 +83,7 @@ def _commit_wave(spark, tbl, run_id, lo, hi):
     out = df.withColumns({"doc_hash": row_hash,
                           "n_spans": F.size("spans")})
     return commit_wave(spark, tbl, out, run_id, "2026-01-01T00:00:00Z",
-                       append_runs=True)
+                       consumed=[f"landing/{run_id}.parquet"])
 
 
 def _table_key(spark, tbl):
@@ -96,8 +96,8 @@ def _table_key(spark, tbl):
 def test_compact_merges_runs_preserving_lineage(spark, tmp_path):
     """compact() rewrites N runs into one file set per bucket; the
     summed counts + xor-folded checksums must still pass the deep
-    payload-rehash verify(), reads must be unchanged, and absorbed run
-    ids must stay 'committed' for streaming idempotency."""
+    payload-rehash verify(), reads must be unchanged, and the consumed
+    input files must survive it for streaming idempotency."""
     import glob
 
     tbl = ParquetManifestTable(str(tmp_path / "t"))
@@ -119,12 +119,9 @@ def test_compact_merges_runs_preserving_lineage(spark, tmp_path):
     assert all(e["run_id"] == res["run_id"] for e in lineage)
     assert tbl.verify(spark) == []
 
-    # absorbed micro-batches still look committed (retry stays a no-op),
-    # and a zombie committer can't resurrect an absorbed run's entries
-    runs = tbl.committed_runs()
-    assert {"batch000000001", "batch000000002", "batch000000003",
-            res["run_id"]} <= runs
-    tbl.commit(e2, append_runs=True)
+    # the compaction keeps the consumed files: re-committing e2's
+    # increment keeps nothing
+    assert tbl.commit(e2, consumed=["landing/batch000000002.parquet"]) == []
     assert len(tbl.lineage()) == 4
 
     # vacuum drops the absorbed run dirs (and any orphan half-written
@@ -273,7 +270,7 @@ def test_history_bytes_grow_linearly(tmp_path):
     tbl = ParquetManifestTable(str(tmp_path / "t"))
     size = {}
     for c in range(1, 81):
-        tbl.commit(_entries(f"batch{c:09d}", 84), append_runs=True)
+        tbl.commit(_entries(f"batch{c:09d}", 84), consumed=[f"f{c}"])
         if c in (40, 80):
             size[c] = _tree_bytes(tbl.root)
     assert not os.path.exists(os.path.join(tbl.root, "_snapshots"))
@@ -285,7 +282,8 @@ def _commit_ten_runs(root, worker, go):
     go.wait(60)
     tbl = ParquetManifestTable(root)
     for i in range(10):
-        tbl.commit(_entries(f"w{worker}run{i}", 8), append_runs=True)
+        tbl.commit(_entries(f"w{worker}run{i}", 8),
+                   consumed=[f"w{worker}f{i}"])
 
 
 def test_concurrent_committers_lose_nothing(tmp_path):
@@ -306,6 +304,24 @@ def test_concurrent_committers_lose_nothing(tmp_path):
     assert len(tbl.lineage()) == 4 * 10 * 8
     assert [s["snapshot_id"] for s in tbl.snapshots()] == list(range(1, 41))
 
+
+
+def test_commit_keeps_nothing_for_a_consumed_file(tmp_path):
+    """A stream commit records its input files in the same swap as its
+    entries: a commit naming a file already consumed (a retried or raced
+    increment) keeps nothing, and one naming only new files appends all
+    its entries, buckets committed before included."""
+    tbl = ParquetManifestTable(str(tmp_path / "t"))
+    assert len(tbl.commit(_entries("s1", 4), consumed=["in/a.parquet"])) == 4
+    assert tbl.commit(_entries("s2", 4), consumed=["in/a.parquet"]) == []
+    assert tbl.commit(_entries("s3", 4),
+                      consumed=["in/b.parquet", "in/a.parquet"]) == []
+    assert len(tbl.lineage()) == 4
+    assert tbl.consumed_files() == {"in/a.parquet"}
+    kept = tbl.commit(_entries("s4", 4), consumed=["in/b.parquet"])
+    assert [e["run_id"] for e in kept] == ["s4"] * 4
+    assert len(tbl.lineage()) == 8
+    assert tbl.consumed_files() == {"in/a.parquet", "in/b.parquet"}
 
 def test_bucket_directories_are_listed_on_the_driver(spark, tmp_path):
     """read, verify and compact read one directory per committed wave.

@@ -245,6 +245,72 @@ def test_stream_extract_starts_on_an_empty_landing_directory(spark, tmp_path):
     assert tbl.verify(spark) == []
 
 
+
+def test_stream_extract_with_a_fresh_checkpoint_commits_every_new_doc(
+        spark, tmp_path):
+    """The manifest is the stream's only log: a call given a checkpoint
+    path it has never seen still commits exactly the files the table has
+    not consumed, and no checkpoint is written anywhere."""
+    from ocr_spark.plans.pipeline import extract_dataframe
+    from ocr_spark.sources.corpus import generate_interleaved
+    from ocr_spark.sources.formats import ParquetManifestTable
+
+    src = str(tmp_path / "docs_src")
+    out = str(tmp_path / "out")
+    ck1, ck2 = str(tmp_path / "ck1"), str(tmp_path / "ck2")
+    generate_interleaved(spark, 40, seed=21, partitions=2).write.parquet(src)
+    stream_extract(spark, src, out, ck1, num_partitions=4)
+    generate_interleaved(spark, 30, seed=22, partitions=2).withColumn(
+        "doc_id", F.concat(F.lit("w2_"), "doc_id")
+    ).write.mode("append").parquet(src)
+    stream_extract(spark, src, out, ck2, num_partitions=4)
+
+    tbl = ParquetManifestTable(out)
+    assert sum(e["doc_count"] for e in tbl.lineage()) == 70
+    assert _doc_key(tbl.read(spark)) == _doc_key(
+        extract_dataframe(spark.read.parquet(src)))
+    assert tbl.verify(spark) == []
+    assert not os.path.exists(ck1) and not os.path.exists(ck2)
+
+
+def test_stream_extract_resumes_after_a_crash_between_write_and_commit(
+        spark, tmp_path, monkeypatch):
+    """A crash after the wave is written but before its commit leaves the
+    landed files unconsumed: the next call rewrites them into a fresh
+    wave, so every document is committed once, and vacuum() removes the
+    crashed call's orphan wave and nothing else."""
+    from ocr_spark.plans.pipeline import extract_dataframe
+    from ocr_spark.sources.corpus import generate_interleaved
+    from ocr_spark.sources.formats import ParquetManifestTable
+
+    src = str(tmp_path / "docs_src")
+    out = str(tmp_path / "out")
+    ck = str(tmp_path / "ck")
+    generate_interleaved(spark, 50, seed=23, partitions=2).write.parquet(src)
+    tbl = ParquetManifestTable(out)
+    commit, crashed = ParquetManifestTable.commit, []
+
+    def crash_once(self, entries, consumed=None):
+        if not crashed:
+            crashed.append(entries[0]["run_id"])
+            raise RuntimeError("injected crash before commit")
+        return commit(self, entries, consumed)
+
+    monkeypatch.setattr(ParquetManifestTable, "commit", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        stream_extract(spark, src, out, ck, num_partitions=4)
+    assert tbl.lineage() == [] and tbl.consumed_files() == set()
+    stream_extract(spark, src, out, ck, num_partitions=4)
+    monkeypatch.undo()
+
+    want = _doc_key(extract_dataframe(spark.read.parquet(src)))
+    assert len(want) == 50
+    assert _doc_key(tbl.read(spark)) == want
+    assert sum(e["doc_count"] for e in tbl.lineage()) == 50
+    assert tbl.verify(spark) == []
+    assert tbl.vacuum() == [tbl.run_dir(crashed[0])]
+    assert _doc_key(tbl.read(spark)) == want
+
 def test_stateful_running_totals_across_restarts(spark, tmp_path):
     """applyInPandasWithState: per-user totals must accumulate across
     micro-batches AND across a query restart (state store recovery from

@@ -133,7 +133,11 @@ def test_reused_worker_skips_the_rescan(spark):
                          for f in sys.path_importer_cache.values())],
         })
 
-    rows = (spark.range(n, numPartitions=n)
+    # Spark hands out idle workers oldest first, so after a long session
+    # the first n probe tasks can all land on workers that only ever ran
+    # UDFs pickled by value and never imported ocr_spark.  Enough tasks to
+    # cycle through the whole idle pool also reach the warm-up's workers.
+    rows = (spark.range(8 * n, numPartitions=8 * n)
             .mapInPandas(probe, "loaded boolean, patched boolean, reads int, "
                                 "zips int")
             .collect())

@@ -64,9 +64,10 @@ class ExtractConfig:
     # ---- skew handling (E2) ----
     # Stable bucket count for lineage/restart AND the salted shuffle key:
     # bucket = pmod(xxhash64(doc_id), salt_buckets) is a uniform hash, so
-    # clustering the one Exchange by bucket balances work (keep buckets
-    # >= ~4x the max expected task parallelism so each task gets several
-    # buckets and mega-docs average out).  The sink writes one file per
+    # clustering the one Exchange (planned for waves above one task's
+    # worth of input) by bucket balances work (keep buckets >= ~4x the
+    # max expected task parallelism so each task gets several buckets
+    # and mega-docs average out).  The sink writes one file per
     # task with ``bucket`` as a data column, so the bucket is the commit
     # unit without being a directory.
     salt_buckets: int = 256

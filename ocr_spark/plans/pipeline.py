@@ -20,11 +20,15 @@ Physical plan per wave (SURVEY.md §3/EP1):
     → Exchange(hash(bucket))                           [E2 — the ONLY shuffle]
     → MapInPandas(E3–E7 fused, Arrow batches)
     → WriteFiles(run=<id>/wave=<w>/, one file per task)
-With chunk_max_spans set, the Exchange is on (bucket, chunk_id) and a
-second Exchange(hash(bucket)) feeds the chunk restitch before the sink,
-so the table stores the same whole-document rows either way.
-Lineage aggregates are computed from the files actually written (so the
-checksum covers the sink, not the plan), then the manifest swap commits.
+The Exchange appears only above one task's worth of input
+(``TASK_BYTES`` of local input files): a smaller wave, such as a stream
+increment, is Coalesce(1) instead, one job of one task that writes one
+file.  With chunk_max_spans set, the Exchange is on (bucket, chunk_id)
+and a second Exchange(hash(bucket)) feeds the chunk restitch before the
+sink, so the table stores the same whole-document rows either way.
+Lineage aggregates are computed on the driver from the files actually
+written (so the checksum covers the sink, not the plan), then the
+manifest swap commits.
 
 Every entry point — run_extract's waves, stream_extract's increments,
 the sink-less extract_dataframe — runs a wave through ``balanced_extract``
@@ -33,9 +37,15 @@ the sink-less extract_dataframe — runs a wave through ``balanced_extract``
 
 from __future__ import annotations
 
+import math
+import os
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_spark.config import DEFAULT, ExtractConfig
@@ -54,49 +64,79 @@ from ocr_spark.sources.formats import (
     wave_name,
 )
 
+#: input bytes per extract task when balanced_extract sizes a wave from
+#: its files.  Measured with commit_wave on single heft=5 files (the most
+#: parse CPU per byte), one task against a 4-way exchange, local[4], 15
+#: interleaved samples each, medians: 50 docs (54 KB) 0.37 vs 0.44 s,
+#: 100 docs (87 KB) 0.36 vs 0.39 s, 150 docs (137 KB) 0.39 vs 0.44 s,
+#: 175 docs (154 KB) 0.41 vs 0.41 s, 200 docs (173 KB) 0.48 vs 0.44 s,
+#: 400 docs (353 KB) 0.82 vs 0.58 s.  One task stops winning between 137
+#: and 154 KB.  A 100-doc stream increment (26 KB) thus runs as one
+#: task, and the 1.8 MB heavy_payload wave keeps 4.
+TASK_BYTES = 136 * 1024
 
-def _wave_lineage(spark: SparkSession, wave_dir: str, run_id: str,
-                  watermark: str) -> list[dict]:
+#: the sink columns lineage reads, as balanced_extract writes them
+_LINEAGE_SCHEMA = pa.schema([("bucket", pa.int32()), ("doc_hash", pa.int64()),
+                             ("n_spans", pa.int32())])
+
+
+def _wave_lineage(wave_dir: str, run_id: str, watermark: str) -> list[dict]:
     # The per-doc hash + span count were computed JVM-side in the write
-    # pass and stored as plain int64 columns, so this verification scan
-    # prunes to three tiny columns — it never re-deserializes the nested
-    # span payloads (measured: the old to_json re-read was a fixed ~7s
-    # that did not scale with cores and dominated Amdahl overhead).  The
-    # explicit schema skips footer inference.  wave_dir is this wave's
-    # own directory and holds only its buckets (every writer filters its
-    # input to them), so earlier waves of the run are never re-read.  The
-    # checksum reads the STORED doc_hash column; the deep payload-rehash
-    # lives in ParquetManifestTable.verify.  coalesce(1) makes the scan
-    # and the aggregate one single-task stage with no shuffle: a wave's
-    # lineage columns are 16 bytes a document, and on a busy 4-core host
-    # the extra stage (4 scan tasks, an exchange, an adaptive re-plan)
-    # made stream increments' throughput spread 1.3x wider run to run.
+    # pass and stored as plain int64 columns, so lineage reads three
+    # pruned integer columns of the files actually written (the checksum
+    # covers the sink, not the plan) and never re-deserializes the
+    # nested span payloads; the deep payload re-hash lives in
+    # ParquetManifestTable.verify.  wave_dir is this wave's own directory
+    # and holds only its buckets, so earlier waves are never re-read.
+    # The engine's tables live on a filesystem the driver reads (the
+    # premise of the driver-side listing in session.get_spark), so the
+    # driver reads the 16 bytes a document with pyarrow (its default
+    # ignore prefixes skip _SUCCESS and .crc) and groups them with numpy.
+    # Traced perfbench, 4-core host: 0.003 s against 0.146 s for the
+    # single-task Spark job it replaces on a 100-doc stream increment,
+    # 0.007 s against 0.157 s on the 2,000-doc heavy wave, whose lineage
+    # is byte-identical.
+    t = ds.dataset(wave_dir, format="parquet",
+                   schema=_LINEAGE_SCHEMA).to_table()
+    order = np.argsort(t.column("bucket").to_numpy(), kind="stable")
+    bucket, doc_hash, n_spans = (
+        t.column(c).to_numpy()[order] for c in _LINEAGE_SCHEMA.names)
+    starts = np.flatnonzero(np.diff(bucket, prepend=-1))
     wave = wave_name(wave_dir)
-    rows = (
-        spark.read.schema("bucket INT, doc_hash BIGINT, n_spans INT")
-        .parquet(wave_dir)
-        .coalesce(1)
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum("n_spans").alias("span_count"),
-            # order-insensitive per-bucket checksum over canonical doc payloads
-            F.expr("bit_xor(doc_hash)").alias("checksum"),
-        )
-        .collect()
-    )
     return [
         {
-            "bucket": int(r["bucket"]),
+            "bucket": int(b),
             "run_id": run_id,
             "wave": wave,
-            "doc_count": int(r["doc_count"]),
-            "span_count": int(r["span_count"]),
-            "checksum": checksum_hex(r["checksum"]),
+            "doc_count": int(n),
+            "span_count": int(s),
+            # order-insensitive per-bucket checksum over canonical doc payloads
+            "checksum": checksum_hex(int(x)),
             "watermark": watermark,
         }
-        for r in rows
+        for b, n, s, x in zip(
+            bucket[starts],
+            np.diff(starts, append=len(bucket)),
+            np.add.reduceat(n_spans.astype(np.int64), starts),
+            np.bitwise_xor.reduceat(doc_hash, starts))
     ]
+
+
+def _sized_tasks(docs: DataFrame) -> int | None:
+    """Tasks for a wave read from local files: one per ``TASK_BYTES`` of
+    input, at most ``defaultParallelism``.  None when the plan lists no
+    input file (e.g. the synthetic generator) or one is not local."""
+    files = docs.inputFiles()
+    if not files:
+        return None
+    size = 0
+    for uri in files:
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        size += os.path.getsize(unquote(u.path))
+    return max(1, min(docs.sparkSession.sparkContext.defaultParallelism,
+                      math.ceil(size / TASK_BYTES)))
 
 
 def balanced_extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
@@ -105,8 +145,17 @@ def balanced_extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
     extract stage, and the sink columns — ``bucket``, the per-doc
     ``doc_hash`` (formats.lineage_exprs) and ``n_spans`` — computed once,
     JVM-side, in the write pass, so the per-wave lineage scan reads only
-    those pruned columns.  Rows are whole documents on either path."""
-    n = num_partitions or docs.sparkSession.sparkContext.defaultParallelism
+    those pruned columns.  Rows are whole documents on either path.
+
+    ``num_partitions`` None sizes the wave from its input files
+    (``_sized_tasks``); a wave of one task's worth feeds the stage
+    straight from the scan, with no exchange.  Input with no listed or
+    non-local files, and the chunk path, get ``defaultParallelism``
+    tasks; an explicit ``num_partitions`` is always used as given."""
+    sized = (None if num_partitions or cfg.chunk_max_spans
+             else _sized_tasks(docs))
+    n = (num_partitions or sized
+         or docs.sparkSession.sparkContext.defaultParallelism)
     docs = docs.select("doc_id", "spans", "bucket")
     if cfg.chunk_max_spans:
         # E2 weight variant: mega-docs are sub-split into bounded chunk
@@ -122,7 +171,12 @@ def balanced_extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
     else:
         # ONE exchange, clustered by the salt bucket: balances extraction
         # work (bucket = uniform hash of doc_id, several buckets per task).
-        raw = extract_stage(bucket_clustered_repartition(docs, n), cfg)
+        # A one-task wave skips it: the exchange and its extra stage cost
+        # more than spreading the wave saves, and the one task writes
+        # the wave's one file.
+        feed = (docs.coalesce(1) if sized == 1
+                else bucket_clustered_repartition(docs, n))
+        raw = extract_stage(feed, cfg)
         extracted = with_bucket(raw, cfg)
     _, doc_hash = lineage_exprs(extracted)
     return extracted.withColumns({
@@ -133,8 +187,8 @@ def balanced_extract(docs: DataFrame, cfg: ExtractConfig = DEFAULT,
     })
 
 
-def commit_wave(spark: SparkSession, tbl: ParquetManifestTable,
-                extracted: DataFrame, run_id: str, watermark: str,
+def commit_wave(tbl: ParquetManifestTable, extracted: DataFrame,
+                run_id: str, watermark: str,
                 consumed: list[str] | None = None,
                 phase: dict | None = None) -> list[dict]:
     """E8 write into a fresh wave directory → E9 lineage of that
@@ -146,7 +200,7 @@ def commit_wave(spark: SparkSession, tbl: ParquetManifestTable,
     t_w = time.time()
     wave_dir = tbl.write_wave(extracted, run_id)              # E8
     t_l = time.time()
-    entries = _wave_lineage(spark, wave_dir, run_id, watermark)  # E9
+    entries = _wave_lineage(wave_dir, run_id, watermark)     # E9
     t_c = time.time()
     kept = tbl.commit(entries, consumed)                      # atomic commit
     if phase is not None:
@@ -193,7 +247,7 @@ def run_extract(
         wave_docs = docs.filter(
             f"bucket IN ({', '.join(str(int(b)) for b in wave)})")
         entries = commit_wave(
-            spark, tbl, balanced_extract(wave_docs, cfg, num_partitions),
+            tbl, balanced_extract(wave_docs, cfg, num_partitions),
             run_id, watermark, phase=phase)
         total_docs += sum(e["doc_count"] for e in entries)
         total_spans += sum(e["span_count"] for e in entries)

@@ -353,8 +353,9 @@ class ParquetManifestTable:
         counterpart of the E9 write-side lineage: because the hash is
         recomputed from the nested payloads, it catches corrupted or
         truncated span data, not just lost/duplicated rows.  (The cheap
-        stored-column scan remains the per-wave lineage path in
-        plans/pipeline.py — this full-payload audit is the deep check.)
+        per-wave lineage is computed on the driver from the stored
+        columns in plans/pipeline.py — this full-payload audit, a Spark
+        job, is the deep check.)
         """
         from pyspark.sql import functions as F
 

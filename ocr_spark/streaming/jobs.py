@@ -159,7 +159,7 @@ def stream_extract(spark: SparkSession, docs_dir: str, out_table: str,
         return
     docs = with_bucket(reader.parquet(*new), cfg)
     watermark = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-    commit_wave(spark, tbl, balanced_extract(docs, cfg, num_partitions),
+    commit_wave(tbl, balanced_extract(docs, cfg, num_partitions),
                 f"stream{uuid.uuid4().hex[:12]}", watermark, consumed=new)
 
 

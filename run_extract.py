@@ -28,7 +28,10 @@ def main() -> None:
                     help="output table root, or iceberg:<ident>, which "
                          "needs a live Iceberg catalog (its manifest "
                          "lineage is not implemented: NotImplementedError)")
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="tasks per wave; default: one per "
+                         "pipeline.TASK_BYTES of a parquet input, up to "
+                         "the default parallelism")
     ap.add_argument("--buckets", type=int, default=256)
     ap.add_argument("--wave-size", type=int, default=None)
     ap.add_argument("--chunk-max-spans", type=int, default=None,

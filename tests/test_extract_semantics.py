@@ -419,29 +419,43 @@ def test_wave_lineage_reads_only_its_own_buckets(spark, tmp_path):
     assert sorted(e["bucket"] for e in tbl.lineage()) == list(range(8))
 
 
-def test_wave_lineage_is_one_single_task_stage(spark, tmp_path):
-    """A wave's lineage scan and aggregate run as one job of one stage
-    with one task, however many files the wave holds: no shuffle."""
+def test_wave_lineage_starts_no_spark_job(spark, tmp_path):
+    """A wave's lineage is computed on the driver from the files the
+    wave wrote, with no Spark job, and equals Spark's own per-bucket
+    count, span sum and xor over the same files, negative row hashes
+    included.  A wave that wrote no rows has no lineage."""
     from ocr_spark.plans.pipeline import _wave_lineage
+    from ocr_spark.sources.formats import checksum_hex
 
     wave = str(tmp_path / "run=r" / "wave=wtest")
-    (spark.range(0, 64, 1, 4)
-     .selectExpr("CAST(id % 8 AS INT) AS bucket", "id AS doc_hash",
-                 "2 AS n_spans")
+    (spark.range(0, 200, 1, 4)
+     .selectExpr("CAST(id % 8 AS INT) AS bucket",
+                 "xxhash64(id) AS doc_hash", "CAST(id % 5 AS INT) AS n_spans")
      .write.parquet(wave))
+    assert len([f for f in os.listdir(wave) if f.endswith(".parquet")]) == 4
+    stored = spark.read.parquet(wave)
+    assert stored.where("doc_hash < 0").count() > 0
+    want = sorted(
+        (r["bucket"], "wtest", r["n"], r["s"], checksum_hex(r["x"]))
+        for r in stored.groupBy("bucket").agg(
+            F.count("*").alias("n"), F.sum("n_spans").alias("s"),
+            F.expr("bit_xor(doc_hash)").alias("x")).collect())
+    assert len(want) == 8
+
+    empty = str(tmp_path / "run=r" / "wave=wempty")
+    stored.limit(0).write.parquet(empty)
     sc = spark.sparkContext
     sc.setJobGroup("lineage", "wave lineage")
     try:
-        entries = _wave_lineage(spark, wave, "r", "wm")
+        entries = _wave_lineage(wave, "r", "wm")
+        no_rows = _wave_lineage(empty, "r", "wm")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    stages = [s for j in tracker.getJobIdsForGroup("lineage")
-              for s in tracker.getJobInfo(j).stageIds]
-    assert len(stages) == 1
-    assert tracker.getStageInfo(stages[0]).numTasks == 1
-    assert sorted((e["bucket"], e["wave"], e["doc_count"], e["span_count"])
-                  for e in entries) == [(b, "wtest", 8, 16) for b in range(8)]
+    assert sc.statusTracker().getJobIdsForGroup("lineage") == []
+    assert sorted((e["bucket"], e["wave"], e["doc_count"], e["span_count"],
+                   e["checksum"]) for e in entries) == want
+    assert {(e["run_id"], e["watermark"]) for e in entries} == {("r", "wm")}
+    assert no_rows == []
 
 
 def _json_rows(df):
@@ -516,7 +530,7 @@ def test_readers_skip_buckets_another_run_committed_first(spark, tmp_path):
         run_extract(spark, docs, out, cfg=cfg, num_partitions=4,
                     run_id="r1", wave_size=4, fail_after_waves=1)
     tbl = ParquetManifestTable(out)
-    kept = commit_wave(spark, tbl,
+    kept = commit_wave(tbl,
                        balanced_extract(with_bucket(docs, cfg), cfg, 4),
                        "r2", "2026-01-01T00:00:00Z")
     lineage = tbl.lineage()

@@ -82,7 +82,7 @@ def _commit_wave(spark, tbl, run_id, lo, hi):
     _, row_hash = lineage_exprs(df)
     out = df.withColumns({"doc_hash": row_hash,
                           "n_spans": F.size("spans")})
-    return commit_wave(spark, tbl, out, run_id, "2026-01-01T00:00:00Z",
+    return commit_wave(tbl, out, run_id, "2026-01-01T00:00:00Z",
                        consumed=[f"landing/{run_id}.parquet"])
 
 

@@ -3,11 +3,15 @@
 These don't execute data — they compile plans and assert the properties
 that matter at 100 TB: filters and projections reach the parquet scan,
 small dimensions broadcast, top-k plans as TakeOrderedAndProject, the
-extraction job has exactly ONE exchange and ONE Python stage, and no
+extraction job has at most ONE exchange and exactly ONE Python stage, and no
 row-at-a-time Python evaluation exists anywhere in the surface.
 """
 
 from __future__ import annotations
+
+import math
+import os
+import re
 
 import pytest
 
@@ -113,6 +117,80 @@ def test_chunked_balanced_extract_two_exchanges_single_python_stage(spark):
     # after the first shuffle (corpus generation adds a MapInPandas below)
     after_first = plan.rsplit("Exchange", 1)[0]
     assert after_first.count("MapInPandas") == 1
+
+
+def _exchange_partitions(plan: str) -> list[int]:
+    return [int(n) for n in
+            re.findall(r"Exchange hashpartitioning\(.*?, (\d+)\)", plan)]
+
+
+def _write_docs(path: str, text_bytes: int) -> str:
+    """One uncompressed parquet file of one document whose text span
+    holds ``text_bytes`` of incompressible text; returns its path."""
+    import base64
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    text = base64.b64encode(os.urandom(text_bytes * 3 // 4)).decode()
+    span = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                      ("media_ref", pa.string()), ("offset", pa.int32())])
+    pq.write_table(pa.table({
+        "doc_id": ["d0"],
+        "spans": pa.array([[{"kind": "text", "text": text,
+                             "media_ref": None, "offset": 0}]],
+                          pa.list_(span)),
+    }), path, compression="none")
+    return path
+
+
+@pytest.mark.parametrize("task_bytes", [0.5, 2.5, None])
+def test_balanced_extract_sizes_tasks_to_its_input(spark, tmp_path,
+                                                   task_bytes):
+    """With no num_partitions a wave gets one task per TASK_BYTES of
+    input files, at most defaultParallelism; a one-task wave plans no
+    exchange at all, a larger one the usual single bucket exchange.
+    ``task_bytes`` is the input size in TASK_BYTES; None is half a task
+    above defaultParallelism."""
+    from ocr_spark.operators.skew import with_bucket
+    from ocr_spark.plans.pipeline import TASK_BYTES, balanced_extract
+
+    dp = spark.sparkContext.defaultParallelism
+    task_bytes = task_bytes or dp + 0.5
+    path = _write_docs(str(tmp_path / "docs.parquet"),
+                       int(task_bytes * TASK_BYTES))
+    want = min(dp, math.ceil(os.path.getsize(path) / TASK_BYTES))
+    assert want == min(dp, math.ceil(task_bytes))
+    df = balanced_extract(with_bucket(spark.read.parquet(path)))
+    plan = _plan(df)
+    assert plan.count("MapInPandas") == 1
+    if want == 1:
+        assert "Exchange" not in plan and "Coalesce 1" in plan, plan
+    else:
+        assert _exchange_partitions(plan) == [want], plan
+
+
+def test_balanced_extract_keeps_default_parallelism_without_sized_input(
+        spark, tmp_path):
+    """Generated input lists no files, and the chunk path spreads mega-doc
+    chunks: both keep defaultParallelism tasks and their exchanges, however
+    small the input."""
+    from ocr_spark.config import ExtractConfig
+    from ocr_spark.operators.skew import with_bucket
+    from ocr_spark.plans.pipeline import balanced_extract
+    from ocr_spark.sources.corpus import generate_interleaved
+
+    dp = spark.sparkContext.defaultParallelism
+    generated = generate_interleaved(spark, 10, seed=1, partitions=2)
+    generated.write.parquet(str(tmp_path / "small"))
+    small = spark.read.parquet(str(tmp_path / "small"))
+    for docs, cfg, exchanges in (
+            (generated, ExtractConfig(), 1),
+            (small, ExtractConfig(chunk_max_spans=8), 2)):
+        df = balanced_extract(with_bucket(docs), cfg)
+        plan = _plan(df)
+        assert plan.count("Exchange") == exchanges, plan
+        assert _exchange_partitions(plan) == [dp] * exchanges, plan
 
 
 @pytest.mark.parametrize("name", sorted(registry.QUERIES))

@@ -311,6 +311,39 @@ def test_stream_extract_resumes_after_a_crash_between_write_and_commit(
     assert tbl.vacuum() == [tbl.run_dir(crashed[0])]
     assert _doc_key(tbl.read(spark)) == want
 
+def test_small_stream_increment_is_one_job_of_one_task(spark, tmp_path):
+    """A 100-doc increment is one task's worth of input: it runs as one
+    Spark job of one task, which writes the wave's only file, and its
+    lineage takes no job of its own."""
+    import pyarrow.parquet as pq
+
+    from ocr_spark.sources.corpus import generate_interleaved
+    from ocr_spark.sources.formats import ParquetManifestTable
+
+    src = str(tmp_path / "docs_src")
+    out = str(tmp_path / "out")
+    generate_interleaved(spark, 100, seed=31, partitions=1).write.parquet(src)
+    sc = spark.sparkContext
+    sc.setJobGroup("increment", "one stream increment")
+    try:
+        stream_extract(spark, src, out, str(tmp_path / "ck"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("increment")
+    assert len(jobs) == 1
+    stages = tracker.getJobInfo(jobs[0]).stageIds
+    assert [tracker.getStageInfo(s).numTasks for s in stages] == [1]
+
+    tbl = ParquetManifestTable(out)
+    (wave,) = {tbl.wave_dir(e["run_id"], e["wave"]) for e in tbl.lineage()}
+    files = glob.glob(os.path.join(wave, "*.parquet"))
+    assert len(files) == 1
+    assert pq.read_metadata(files[0]).num_rows == 100
+    assert sum(e["doc_count"] for e in tbl.lineage()) == 100
+    assert tbl.verify(spark) == []
+
+
 def test_stateful_running_totals_across_restarts(spark, tmp_path):
     """applyInPandasWithState: per-user totals must accumulate across
     micro-batches AND across a query restart (state store recovery from

@@ -34,6 +34,7 @@ import hashlib
 import re
 
 from ocr_spark.functions.aes import cbc_decrypt, cbc_encrypt
+from ocr_spark.functions.pdfx import _LIT, _lit_bytes
 
 # PDF 32000-1 §7.6.3.3 Algorithm 2: the 32-byte password pad constant
 _PAD = bytes([
@@ -184,39 +185,6 @@ def verify_user_pw_r6(u: bytes, ue: bytes,
 
 _STREAM_RE = re.compile(rb"(stream\r?\n)(.*?)(\r?\nendstream)", re.DOTALL)
 _OBJ_SPAN_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b.*?\bendobj", re.DOTALL)
-_LIT_RE = re.compile(rb"\(((?:\\.|[^\\()])*)\)", re.DOTALL)
-
-_UNESC = {ord("\\"): b"\\", ord("("): b"(", ord(")"): b")",
-          ord("n"): b"\n", ord("r"): b"\r", ord("t"): b"\t"}
-
-
-def _unescape_bytes(s: bytes) -> bytes:
-    """Bytes-level PDF literal-string unescape (mirror of pdfx
-    ``_unescape``, without the latin-1 round trip)."""
-    if b"\\" not in s:
-        return s
-    out, i, n = bytearray(), 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == 0x5C and i + 1 < n:  # backslash
-            nxt = s[i + 1]
-            if nxt in _UNESC:
-                out += _UNESC[nxt]
-                i += 2
-                continue
-            if 0x30 <= nxt <= 0x37:  # octal, up to 3 digits
-                j = i + 1
-                while j < min(i + 4, n) and 0x30 <= s[j] <= 0x37:
-                    j += 1
-                out.append(int(s[i + 1:j], 8))
-                i = j
-                continue
-            i += 2  # lone escape: keep the escaped byte verbatim
-            out.append(nxt)
-            continue
-        out.append(c)
-        i += 1
-    return bytes(out)
 
 
 def _escape_bytes(s: bytes) -> bytes:
@@ -251,9 +219,9 @@ def _rewrite_encrypted(raw: bytes, cipher, enc_dict: str,
 
         def _enc_lit(m: re.Match, _n=num, _g=gen) -> bytes:
             return b"(" + _escape_bytes(
-                cipher(_n, _g, _unescape_bytes(m.group(1)))) + b")"
+                cipher(_n, _g, _lit_bytes(m.group()))) + b")"
 
-        head = _LIT_RE.sub(_enc_lit, head)
+        head = re.sub(_LIT.encode(), _enc_lit, head)
         if sm:
             body = cipher(num, gen, seg[sm.start(2):sm.end(2)])
             # ciphertext length ≠ plaintext length under AES (IV +

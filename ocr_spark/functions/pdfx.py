@@ -28,7 +28,14 @@ Supported PDF subset (documented per SURVEY.md §7 "hard parts"):
       ``TL`` (leading), ``T*`` (next line), ``Tm`` (set matrix — e,f used),
       ``Tj`` (show string), ``TJ`` (show array; kern < tj_space_kern
       inserts one space), ``'`` (T* + Tj), ``"`` (spacing + T* + Tj)
-  - string escapes: ``\\``, ``\(``, ``\)``, ``\n``, ``\r``, ``\t``, octal
+  - literal strings ``( … )``, one rule (``_LIT`` + ``_unescape``) for
+    content streams, dict strings and the fixture encryptor: unescaped
+    parens balance up to three levels deep (a deeper or unbalanced
+    ``(`` starts no string); escapes ``\\``, ``\(``, ``\)``, ``\n``,
+    ``\r``, ``\t``, octal of 1–3 digits 0–7 with high-order overflow
+    ignored (``\400`` → NUL); any other escaped char stands for itself
+    (``\8`` → ``8``).  Not modeled: ``\b``, ``\f``, backslash-EOL line
+    continuation
   - hex strings ``<4869>`` (whitespace ignored, odd length zero-padded)
   - UTF-16BE text strings (FE FF BOM), literal or hex — the standard
     real-producer encoding for non-ASCII text
@@ -117,6 +124,42 @@ from ocr_spark.config import DEFAULT, ExtractConfig
 # ---------------------------------------------------------------------------
 # tokenizer
 # ---------------------------------------------------------------------------
+
+# The literal string ``( … )`` (PDF 32000 §7.3.4.2), the one definition
+# every consumer builds on: backslash escapes, and unescaped parens
+# balanced up to three levels deep.  A deeper or unbalanced ``(`` starts
+# no string, so every scanner steps over it as one character.  Its own
+# (?s:) makes ``\<newline>`` an escape whatever the consumer's flags;
+# the alternatives are disjoint, so possessive repeats never change a
+# match, they only stop a failing one from backtracking.
+_LIT = r"\((?:[^\\()]++|\\.)*+\)"
+_LIT = r"\((?:[^\\()]++|\\.|" + _LIT + r")*+\)"
+_LIT = r"(?s:\((?:[^\\()]++|\\.|" + _LIT + r")*+\))"
+
+_ESC = {"\\": "\\", "(": "(", ")": ")", "n": "\n", "r": "\r", "t": "\t"}
+_ESC_RE = re.compile(r"\\([0-7]{1,3}|.)", re.DOTALL)
+
+
+def _unescape_one(m: re.Match) -> str:
+    e = m.group(1)
+    if e[0] in "01234567":
+        # octal: 1–3 digits 0–7, high-order overflow ignored (\400 → \0)
+        return chr(int(e, 8) & 0xFF)
+    return _ESC.get(e, e)  # any other escaped char stands for itself
+
+
+def _unescape(s: str) -> str:
+    """Body of a literal string (latin-1 str) → the bytes it encodes,
+    as latin-1 str.  Bytes callers round-trip through latin-1."""
+    if "\\" not in s:  # overwhelmingly common case — no escape present
+        return s
+    return _ESC_RE.sub(_unescape_one, s)
+
+
+def _lit_bytes(lit: bytes) -> bytes:
+    """The bytes a matched ``( … )`` literal string stands for."""
+    return _unescape(lit[1:-1].decode("latin-1")).encode("latin-1")
+
 
 # (?<!end): the bare keyword scan must not match the 'stream' suffix
 # inside 'endstream', which would yield a phantom segment duplicating
@@ -211,6 +254,12 @@ def _dict_ref(d: bytes, key: bytes) -> int | None:
 def _dict_name(d: bytes, key: bytes) -> bytes | None:
     m = re.search(rb"/" + key + rb"\s*/([A-Za-z0-9]+)", d)
     return m.group(1) if m else None
+
+
+def _dict_lit(d: bytes, key: bytes) -> bytes | None:
+    """Unescaped bytes of the literal string ``/Key ( … )``."""
+    m = re.search(rb"/" + key + rb"\s*(" + _LIT.encode() + rb")", d)
+    return _lit_bytes(m.group(1)) if m else None
 
 
 def _dict_arr(d: bytes, key: bytes) -> bytes | None:
@@ -573,12 +622,7 @@ class _Doc:
             return bytes.fromhex(
                 m.group(1).decode("ascii").replace(" ", "")
                 .replace("\n", "").replace("\r", ""))
-        m = re.search(rb"/" + key + rb"\s*\(((?:\\.|[^\\()])*)\)", d,
-                      re.DOTALL)
-        if m:
-            from ocr_spark.functions.pdfcrypt import _unescape_bytes
-            return _unescape_bytes(m.group(1))
-        return None
+        return _dict_lit(d, key)
 
     def _dict_str(self, d: bytes, key: bytes, num: int) -> str | None:
         """Decoded text of a literal-string dict entry (e.g. /Title,
@@ -588,17 +632,14 @@ class _Doc:
         says their strings are not separately encrypted).  Generation
         is taken as 0: the xref keeps no gen and non-zero gens are
         vanishingly rare in practice."""
-        m = re.search(rb"/" + key + rb"\s*\(((?:[^()\\]|\\.)*)\)", d)
-        if m is None:
+        raw = _dict_lit(d, key)
+        if raw is None:
             return None
         ent = self.xref.get(num)
         if self.crypt_key is not None and ent is not None and \
                 ent[0] == "n":
-            from ocr_spark.functions.pdfcrypt import _unescape_bytes
-            plain = self._decrypt_payload(
-                _unescape_bytes(m.group(1)), num, 0)
-            return _pdf_text(plain.decode("latin-1"))
-        return _pdf_text(_unescape(m.group(1).decode("latin-1")))
+            raw = self._decrypt_payload(raw, num, 0)
+        return _pdf_text(raw.decode("latin-1"))
 
     # -- objects ------------------------------------------------------------
     def _balanced_dict(self, pos: int) -> bytes | None:
@@ -886,13 +927,12 @@ class _Doc:
             rm = re.search(
                 rb"/Rect\s*\[\s*([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)"
                 rb"\s+([\d.+-]+)\s*\]", ad)
-            um = re.search(rb"/URI\s*\(((?:[^()\\]|\\.)*)\)", ad)
-            if not rm or not um:
+            uri = _dict_lit(ad, b"URI")
+            if not rm or uri is None:
                 continue
             x0, y0, x1, y1 = (float(rm.group(i)) for i in range(1, 5))
-            uri = _unescape(um.group(1).decode("latin-1"))
             links.append((min(x0, x1), min(y0, y1),
-                          abs(x1 - x0), abs(y1 - y0), uri))
+                          abs(x1 - x0), abs(y1 - y0), uri.decode("latin-1")))
         return links
 
     def outline_titles(self) -> list[str]:
@@ -1126,17 +1166,15 @@ def _structured_page_contents(
 
 # one token: PDF string (literal or hex), array, number, or operator name
 _TOK_RE = re.compile(
-    r"""\((?:\\.|[^\\()])*\)   # literal string (with escapes)
+    _LIT + r"""                # literal string
       | <[0-9A-Fa-f\s]*>       # hex string (whitespace allowed inside)
       | \[ | \]
       | /[A-Za-z0-9]+
       | [-+]?\d*\.?\d+
       | [A-Za-z'*"]+
     """,
-    re.VERBOSE | re.DOTALL,
+    re.VERBOSE,
 )
-
-_ESC = {"\\": "\\", "(": "(", ")": ")", "n": "\n", "r": "\r", "t": "\t"}
 
 
 def _pdf_text(s: str) -> str:
@@ -1158,32 +1196,6 @@ def _pdf_text(s: str) -> str:
         except Exception:
             return s
     return s
-
-
-def _unescape(s: str) -> str:
-    if "\\" not in s:  # overwhelmingly common case — no escape present
-        return s
-    out, i, n = [], 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "\\" and i + 1 < n:
-            nxt = s[i + 1]
-            if nxt in _ESC:
-                out.append(_ESC[nxt])
-                i += 2
-                continue
-            if nxt.isdigit():  # octal, up to 3 digits
-                j = i + 1
-                while j < min(i + 4, n) and s[j].isdigit():
-                    j += 1
-                out.append(chr(int(s[i + 1 : j], 8)))
-                i = j
-                continue
-            i += 1  # lone backslash: skip
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
 
 
 @dataclass
@@ -1344,13 +1356,17 @@ def _stream_contents(data: bytes):
 # part never contains ID as a token.
 _BI_HEAD_RE = re.compile(r"BI\b(.*?)\bID[ \r\n]", re.DOTALL)
 _EI_RE = re.compile(r"\sEI(?=[\s]|$)")
-#: chars that terminate a token on its left — BI is only an operator
-#: when preceded by one of these (or stream start)
-_PDF_DELIMS = " \t\r\n\f\x00()<>[]{}/%"
 #: inline-image /ColorSpace → component count (abbreviated names per
 #: PDF 32000 §8.9.7; unknown spaces fall back to the delimiter scan)
 _CS_COMPONENTS = {"G": 1, "DeviceGray": 1, "RGB": 3, "DeviceRGB": 3,
                   "CMYK": 4, "DeviceCMYK": 4}
+#: the strippers' scan: one match per literal string, ``<<``, ``>>``,
+#: hex string (an unterminated one runs to the end), name, or operator
+#: word.  A word is an operator only where a token can start: at stream
+#: start or after a PDF delimiter or whitespace (``5BI`` is none).
+_SCAN_RE = re.compile(
+    _LIT + r"|<<|>>|<[^>]*>?|/[A-Za-z0-9]*"
+    r"""|(?<![^ \t\r\n\f\x00()<>\[\]{}/%])[A-Za-z][A-Za-z'"*]*""")
 
 
 def _strip_inline_images(content: str) -> str:
@@ -1365,73 +1381,45 @@ def _strip_inline_images(content: str) -> str:
     (ceil(W·BPC·components/8)·H) and the EI scan starts after it; dicts
     with filters/unknown spaces keep the delimiter-scan fallback.
 
-    The scan is STRING-AWARE: literal ``(…)`` strings (with backslash
-    escapes and nested parens) and hex ``<…>`` strings are skipped, so
-    prose like ``(the BI dashboard shows user ID 123) Tj`` is never
-    mistaken for an image header — the round-3 failure mode where a
-    text-only page lost its entire remainder.  BI is only recognized in
-    operator position: preceded by a PDF delimiter/whitespace (or
-    stream start) and followed by a token boundary."""
+    The scan walks ``_SCAN_RE`` tokens, so literal and hex strings are
+    opaque: prose like ``(the BI dashboard shows user ID 123) Tj`` is
+    never mistaken for an image header (a text-only page would lose its
+    entire remainder).  BI is only recognized as an operator word."""
+    if "BI" not in content:
+        return content
     out = []
-    pos = 0  # start of not-yet-emitted text
-    i, n = 0, len(content)
-    while i < n:
-        c = content[i]
-        if c == "(":  # literal string: skip to balanced close
-            depth = 1
-            i += 1
-            while i < n and depth:
-                ch = content[i]
-                if ch == "\\":
-                    i += 2
-                    continue
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                i += 1
+    pos = i = 0  # start of not-yet-emitted text; scan cursor
+    n = len(content)
+    while (m := _SCAN_RE.search(content, i)) is not None:
+        i = m.end()
+        h = (_BI_HEAD_RE.match(content, m.start())
+             if content.startswith("BI", m.start()) else None)
+        if h is None:
             continue
-        if c == "<" and content[i + 1 : i + 2] != "<":  # hex string
-            j = content.find(">", i + 1)
-            i = n if j == -1 else j + 1
-            continue
-        if (c == "B" and content.startswith("BI", i)
-                and (i == 0 or content[i - 1] in _PDF_DELIMS)):
-            m = _BI_HEAD_RE.match(content, i)
-            if m is None:
-                i += 2
-                continue
-            d = m.group(1)
-            data_start = m.end()
-            scan_from = data_start
-            if "/F" not in d:  # no filter → raw samples, length computable
-                def _num(key):
-                    km = re.search(rf"/(?:{key})\s+(\d+)", d)
-                    return int(km.group(1)) if km else None
-                wm, hm, bm = _num("W(?:idth)?"), _num("H(?:eight)?"), \
-                    _num("BPC|BitsPerComponent")
-                cm_ = re.search(r"/CS\s*/(\w+)|/ColorSpace\s*/(\w+)", d)
-                comps = _CS_COMPONENTS.get(
-                    (cm_.group(1) or cm_.group(2)) if cm_ else "G")
-                if wm and hm and bm and comps:
-                    scan_from = min(
-                        data_start + ((wm * bm * comps + 7) // 8) * hm, n)
-            em = _EI_RE.search(content, scan_from)
-            out.append(content[pos:i])
-            out.append(" INLIMG ")
-            if em is None:
-                # unterminated image: drop the remainder (corrupt
-                # payload must never tokenize)
-                return "".join(out)
-            pos = i = em.end()
-            continue
-        i += 1
+        d = h.group(1)
+        data_start = scan_from = h.end()
+        if "/F" not in d:  # no filter → raw samples, length computable
+            def _num(key):
+                km = re.search(rf"/(?:{key})\s+(\d+)", d)
+                return int(km.group(1)) if km else None
+            wm, hm, bm = _num("W(?:idth)?"), _num("H(?:eight)?"), \
+                _num("BPC|BitsPerComponent")
+            cm_ = re.search(r"/CS\s*/(\w+)|/ColorSpace\s*/(\w+)", d)
+            comps = _CS_COMPONENTS.get(
+                (cm_.group(1) or cm_.group(2)) if cm_ else "G")
+            if wm and hm and bm and comps:
+                scan_from = min(
+                    data_start + ((wm * bm * comps + 7) // 8) * hm, n)
+        em = _EI_RE.search(content, scan_from)
+        out.append(content[pos:m.start()])
+        out.append(" INLIMG ")
+        if em is None:
+            # unterminated image: drop the remainder (corrupt
+            # payload must never tokenize)
+            return "".join(out)
+        pos = i = em.end()
     out.append(content[pos:])
     return "".join(out)
-
-
-_MC_WORD_RE = re.compile(r"[A-Za-z'\"*]+")
-_NAME_WORD_RE = re.compile(r"[A-Za-z0-9]*")
 
 
 def _strip_artifacts(content: str) -> str:
@@ -1442,81 +1430,49 @@ def _strip_artifacts(content: str) -> str:
     main-content extractor drops them (``cfg.keep_artifacts`` keeps
     them for archival extraction).
 
-    The scan mirrors ``_strip_inline_images``: literal ``(…)`` and hex
-    ``<…>`` strings are skipped (prose mentioning ``/Artifact BDC`` is
-    never stripped), ``<<…>>`` property dicts are skipped opaquely so
-    names inside them can't masquerade as the tag operand, and nested
-    marked content inside an artifact (``BMC``/``BDC`` … ``EMC``) is
-    counted so the strip ends at the MATCHING ``EMC``.  An unterminated
-    artifact drops the stream remainder — corrupt spans must never leak
-    as phantom content.  Non-artifact marked content (``/Span``,
-    ``/P``, ``/ReversedChars`` …) passes through untouched: the main
-    tokenizer treats BMC/BDC/EMC as unknown no-op operators."""
+    The scan walks ``_SCAN_RE`` tokens like ``_strip_inline_images``:
+    literal and hex strings are opaque (prose mentioning ``/Artifact
+    BDC`` is never stripped), ``<<…>>`` property dicts are skipped
+    whole so names inside them can't masquerade as the tag operand, and
+    nested marked content inside an artifact (``BMC``/``BDC`` …
+    ``EMC``) is counted so the strip ends at the MATCHING ``EMC``.  An
+    unterminated artifact drops the stream remainder — corrupt spans
+    must never leak as phantom content.  Non-artifact marked content
+    (``/Span``, ``/P``, ``/ReversedChars`` …) passes through untouched:
+    the main tokenizer treats BMC/BDC/EMC as unknown no-op operators."""
     if "/Artifact" not in content:
         return content
     out: list[str] = []
     pos = 0           # start of not-yet-emitted text
-    i, n = 0, len(content)
     ddepth = 0        # << >> dict nesting (operands are opaque inside)
     art_depth = 0     # marked-content nesting INSIDE an open artifact
     art_from = 0      # splice start (the /Artifact tag position)
     first_operand: str | None = None
     operand_pos = 0
-    while i < n:
-        c = content[i]
-        if c == "(":  # literal string: skip to balanced close
-            depth = 1
-            i += 1
-            while i < n and depth:
-                ch = content[i]
-                if ch == "\\":
-                    i += 2
-                    continue
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                i += 1
-            continue
-        if c == "<":
-            if content[i + 1:i + 2] == "<":  # dict open
-                ddepth += 1
-                i += 2
-                continue
-            j = content.find(">", i + 1)  # hex string
-            i = n if j == -1 else j + 1
-            continue
-        if c == ">" and content[i + 1:i + 2] == ">":
+    for m in _SCAN_RE.finditer(content):
+        t = m.group()
+        if t == "<<":
+            ddepth += 1
+        elif t == ">>":
             ddepth = max(0, ddepth - 1)
-            i += 2
-            continue
-        if ddepth:
-            i += 1
-            continue
-        if c == "/":
-            m = _NAME_WORD_RE.match(content, i + 1)
+        elif ddepth or t[0] in "(<":
+            pass  # a string, or anything inside a dict
+        elif t[0] == "/":
             if first_operand is None:
-                first_operand, operand_pos = m.group(0), i
-            i = m.end()
-            continue
-        if c.isalpha() and (i == 0 or content[i - 1] in _PDF_DELIMS):
-            m = _MC_WORD_RE.match(content, i)
-            word = m.group(0)
-            if word in ("BDC", "BMC"):
+                first_operand, operand_pos = t[1:], m.start()
+        else:
+            if t in ("BDC", "BMC"):
                 if art_depth:
                     art_depth += 1
                 elif first_operand == "Artifact":
                     art_depth, art_from = 1, operand_pos
-            elif word == "EMC" and art_depth:
+            elif t == "EMC" and art_depth:
                 art_depth -= 1
                 if art_depth == 0:
                     out.append(content[pos:art_from])
                     out.append(" ")
                     pos = m.end()
             first_operand = None
-            i = m.end()
-            continue
-        i += 1
     if art_depth:  # unterminated artifact: drop the remainder
         out.append(content[pos:art_from])
         return "".join(out)

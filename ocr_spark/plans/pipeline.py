@@ -210,6 +210,20 @@ def commit_wave(tbl: ParquetManifestTable, extracted: DataFrame,
     return kept
 
 
+def _run_id(run_id: str | None) -> str:
+    """``run_id``, or a fresh ``batch…`` id.  The id names the table's
+    ``run=`` directory, and Spark's partition discovery types that
+    column by how its values look: ``000000000123`` reads back as the
+    int 123, and exponent-shaped ids such as ``12e456789012`` are parsed
+    as numbers too.  So every id starts with a letter, like the
+    ``stream…`` and ``compact…`` ones."""
+    if run_id is None:
+        return f"batch{uuid.uuid4().hex[:12]}"
+    if not (run_id[:1].isascii() and run_id[:1].isalpha()):
+        raise ValueError(f"run_id must start with a letter: {run_id!r}")
+    return run_id
+
+
 def run_extract(
     spark: SparkSession,
     docs: DataFrame,
@@ -225,9 +239,9 @@ def run_extract(
     Restart semantics: calling run_extract again with the same out_table
     processes only buckets absent from the committed manifest.
     """
+    run_id = _run_id(run_id)
     t0 = time.time()
     tbl = open_table(out_table)
-    run_id = run_id or uuid.uuid4().hex[:12]
     watermark = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
     committed = tbl.committed_buckets()

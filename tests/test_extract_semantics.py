@@ -194,6 +194,61 @@ def test_crash_restart_byte_identical(spark, tmp_path):
     assert m2["docs"] == 0 and m2["skipped_buckets"] == 16
 
 
+def test_run_ids_start_with_a_letter(tmp_path):
+    """A run id names the table's ``run=`` directory, whose type Spark's
+    partition discovery infers from the values: an all-digit or
+    exponent-shaped id would read back as a number.  Generated ids
+    start with ``batch``; a caller's id that does not start with a
+    letter is refused before anything is written."""
+    from ocr_spark.plans.pipeline import _run_id, run_extract
+
+    ids = {_run_id(None) for _ in range(200)}
+    assert len(ids) == 200
+    assert all(i.startswith("batch") and len(i) == 17 for i in ids)
+    assert _run_id("r1") == "r1"
+    out = tmp_path / "t"
+    for bad in ("12e456789012", "000000000123", "", "_x", "é1"):
+        with pytest.raises(ValueError, match="start with a letter"):
+            run_extract(None, None, str(out), run_id=bad)
+    assert not out.exists()
+
+
+def test_hostile_literal_string_commits_with_its_wave(spark, tmp_path):
+    """One hostile document cannot fail its wave: PDFs whose content
+    strings hold an escape that is no octal digit (``(page \\9) Tj``),
+    also inside nested parens (``(chapter \\8 (one)) Tj``), extract like
+    any other.  Every document of the wave is committed, the table
+    verifies, and both texts read as the escape rule says."""
+    from ocr_spark.config import ExtractConfig
+    from ocr_spark.functions.pdfx import write_pdf
+    from ocr_spark.plans.pipeline import run_extract
+    from ocr_spark.sources.formats import ParquetManifestTable
+
+    def hostile(doc_id: str, line: str, lit: bytes) -> dict:
+        pdf = write_pdf([{"kind": "text", "x": 72, "y": 700,
+                          "lines": [line]}])
+        old = f"({line})".encode()
+        assert len(old) == len(lit)  # same length: offsets stay valid
+        return {"doc_id": doc_id, "spans": [{
+            "kind": "pdf_bytes", "media_ref": None, "offset": 0,
+            "text": pdf.replace(old, lit).decode("latin-1")}]}
+
+    rows = make_docs(6, seed=3) + [
+        hostile("hostile_a", "chapter XX YYYYY", rb"(chapter \8 (one))"),
+        hostile("hostile_b", "page XY", rb"(page \9)")]
+    docs = spark.createDataFrame(rows, SPAN_SCHEMA_DDL)
+    out = str(tmp_path / "t")
+    m = run_extract(spark, docs, out, cfg=ExtractConfig(salt_buckets=8))
+    assert m["docs"] == len(rows) and m["run_id"].startswith("batch")
+    tbl = ParquetManifestTable(out)
+    assert tbl.verify(spark) == []
+    got = {r["doc_id"]: [s["text"] for s in r["spans"]]
+           for r in tbl.read(spark).collect()}
+    assert sorted(got) == sorted(r["doc_id"] for r in rows)
+    assert got["hostile_a"] == ["chapter 8 (one)"]
+    assert got["hostile_b"] == ["page 9"]
+
+
 def test_flate_compressed_pdf_extracts_identically():
     # real-world PDFs flate-compress content streams; tokenization must
     # be byte-equivalent either way
@@ -1545,14 +1600,59 @@ def test_pdf_inherited_resources_and_hybrid_xref():
     assert fb != base
 
 
+#: PDF syntax the token-insertion fuzz drops into content streams: bad
+#: and overflowing octal escapes, nested and unbalanced parens, inline
+#: images, artifact marked content and dict brackets
+_FUZZ_TOKENS = (r"(\8) Tj", r"(\18) Tj", r"(\400) Tj", r"(a\9b) Tj",
+                r"(chapter \8 (one)) Tj", "(see (fig) one here) Tj",
+                "(x (y (z (w) z) y) x) Tj", "(", ")", "<<", ">>",
+                "BI /W 2 /H 1 /BPC 8 /CS /G ID \x00\x01 EI", "BI", "EI",
+                "/Artifact BMC", "/Artifact <</Type /Pagination>> BDC",
+                "EMC")
+
+
+def _insert_tokens(pdf: bytes, rng) -> bytes:
+    """``pdf`` with 1-3 of _FUZZ_TOKENS inserted at whitespace in one of
+    its content streams.  The stream is re-added unfiltered as an
+    incremental update (the object plus a classic xref section chained
+    by /Prev), so every writer layout keeps a structure to parse."""
+    import re
+
+    from ocr_spark.functions.pdfx import _Doc, _decode_stream_body
+
+    doc = _Doc(pdf)
+    nums = [n for n, ent in sorted(doc.xref.items()) if ent[0] == "n"
+            and (o := doc.obj(n))[1] is not None
+            and not re.search(rb"/Type\s*/(XRef|ObjStm)", o[0])]
+    num = rng.choice(nums)
+    d, body = doc.obj(num)
+    s = _decode_stream_body(d, body).decode("latin-1")
+    for _ in range(rng.randint(1, 3)):
+        i = rng.choice([k for k, c in enumerate(s) if c.isspace()] or [0])
+        s = f"{s[:i]} {rng.choice(_FUZZ_TOKENS)} {s[i:]}"
+    body = s.encode("latin-1")
+    d = re.sub(rb"/Filter\s*(/\w+|\[[^\]]*\])|/Length\s+\d+(\s+\d+\s+R)?",
+               b"", d)
+    obj = b"%d 0 obj\n<< /Length %d %s\nstream\n%s\nendstream\nendobj\n" % (
+        num, len(body), d[2:], body)
+    prev = int(re.findall(rb"startxref\s+(\d+)", pdf)[-1])
+    return pdf + obj + (
+        b"xref\n%d 1\n%010d 00000 n \ntrailer\n<< /Size %d /Prev %d >>\n"
+        b"startxref\n%d\n%%%%EOF\n" % (num, len(pdf), max(doc.xref) + 1,
+                                       prev, len(pdf) + len(obj)))
+
+
 def test_pdf_corruption_never_raises():
     """100 TB honesty gate: truncated / bit-flipped / metadata-corrupt
     PDF payloads must NEVER raise — they degrade to partial or empty
     extraction (structured parse → positional fallback → nothing).
     Covers every writer layout at once, plus xref tables whose
-    subsection headers claim absurd entry counts (must not hang)."""
+    subsection headers claim absurd entry counts (must not hang), plus
+    1,000 seeded insertions of hostile PDF syntax into content streams
+    (_FUZZ_TOKENS), under both ``keep_artifacts`` settings."""
     import random
 
+    from ocr_spark.config import ExtractConfig
     from ocr_spark.functions.pdfx import extract_pdf_blocks, write_pdf
 
     docs = make_docs(30, seed=5, mega_every=20, compress_every=2,
@@ -1582,6 +1682,65 @@ def test_pdf_corruption_never_raises():
                       b"xref\n0 2147483647\n")
     assert bad != doc
     extract_pdf_blocks(bad)  # must return promptly, not iterate 2^31
+
+    bases = [s["text"].encode("latin-1") for d in make_docs(
+        60, seed=6, compress_every=2, xref_every=3, type0_every=5,
+        form_every=4, artifact_every=3, pdf_link_every=2, field_every=4,
+        outline_every=3, filter_every=7)
+        for s in d["spans"] if s["kind"] == "pdf_bytes"]
+    cfgs = (DEFAULT, ExtractConfig(keep_artifacts=True))
+    rng = random.Random(13)
+    for k in range(1000):
+        mutated = _insert_tokens(rng.choice(bases), rng)
+        extract_pdf_blocks(mutated, cfgs[k % 2])  # must not raise
+
+
+def test_one_literal_string_rule():
+    """Every reader of a literal string ``( … )`` — the content-stream
+    tokenizer, the dict-string lookups (/Title, /V, /URI, /O, /U) and
+    the fixture encryptor — shares one pattern (escapes, unescaped
+    parens balanced three deep) and one unescaper (octal is 1–3 digits
+    0–7 with overflow above \\377 ignored; any other escaped char
+    stands for itself)."""
+    from ocr_spark.functions.pdfcrypt import encrypt_pdf_rc4
+    from ocr_spark.functions.pdfx import (_Doc, _lit_bytes, _strip_artifacts,
+                                          _unescape, extract_pdf_blocks,
+                                          write_pdf, write_pdf_pages)
+
+    def swap(pdf: bytes, old: bytes, new: bytes) -> bytes:
+        assert len(old) == len(new) and old in pdf  # offsets stay valid
+        return pdf.replace(old, new)
+
+    # the str path and the bytes path agree
+    assert _unescape(r"\101\8\400\18") == "A8\x00\x018"
+    assert _lit_bytes(rb"(\101\8\400\18)") == b"A8\x00\x018"
+
+    # nested parens: one string, not its innermost part
+    pdf = swap(write_pdf([{"kind": "text", "x": 72, "y": 700,
+                           "lines": ["see XfigY one here"]}]),
+               b"XfigY", b"(fig)")
+    assert [b.text for b in extract_pdf_blocks(pdf)] == ["see (fig) one here"]
+    pdf = swap(write_pdf([{"kind": "link", "x": 72, "y": 640, "w": 90,
+                           "h": 12, "uri": "https://example.org/aX1Y"}]),
+               b"aX1Y", b"a(1)")
+    assert [b.uri for b in extract_pdf_blocks(pdf)] == [
+        "https://example.org/a(1)"]
+
+    # dict strings: an escaped newline, and octal in both the plain and
+    # the encrypted document (the encryptor unescapes before it ciphers)
+    pages = [[{"kind": "text", "x": 72, "y": 700, "lines": ["body"]}]]
+    pdf = swap(write_pdf_pages(pages, outlines=["aXYb"]),
+               b"(aXYb)", b"(a\\\nb)")
+    assert _Doc(pdf).outline_titles() == ["a\nb"]
+    pdf = swap(write_pdf_pages(pages, outlines=["ABCDEFGHIJKLM"]),
+               b"ABCDEFGHIJKLM", rb"\101\8\400\18")
+    for doc in (pdf, encrypt_pdf_rc4(pdf)):
+        assert _Doc(doc).outline_titles() == ["A8\x00\x018"]
+
+    # the artifact scan reads operator words, not any letter after a
+    # delimiter (a latin-1 letter there used to raise)
+    r = _strip_artifacts("/Artifact BMC \xe9 EMC (b) Tj")
+    assert "\xe9" not in r and "(b) Tj" in r
 
 
 def test_lazy_load_images_both_parsers():

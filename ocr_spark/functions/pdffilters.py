@@ -247,15 +247,15 @@ def lzw_encode(data: bytes, early: int = 1) -> bytes:
 #: predictor), image-only filters (DCT/JPX/CCITT/JBIG2) intentionally
 #: absent — a content stream under those is not text
 DECODERS = {
-    b"ASCIIHexDecode": ascii_hex_decode, b"AHx": ascii_hex_decode,
-    b"ASCII85Decode": ascii85_decode, b"A85": ascii85_decode,
-    b"RunLengthDecode": runlength_decode, b"RL": runlength_decode,
-    b"LZWDecode": lzw_decode, b"LZW": lzw_decode,
+    "ASCIIHexDecode": ascii_hex_decode, "AHx": ascii_hex_decode,
+    "ASCII85Decode": ascii85_decode, "A85": ascii85_decode,
+    "RunLengthDecode": runlength_decode, "RL": runlength_decode,
+    "LZWDecode": lzw_decode, "LZW": lzw_decode,
 }
 
 ENCODERS = {
-    b"ASCIIHexDecode": ascii_hex_encode,
-    b"ASCII85Decode": ascii85_encode,
-    b"RunLengthDecode": runlength_encode,
-    b"LZWDecode": lzw_encode,
+    "ASCIIHexDecode": ascii_hex_encode,
+    "ASCII85Decode": ascii85_encode,
+    "RunLengthDecode": runlength_encode,
+    "LZWDecode": lzw_encode,
 }

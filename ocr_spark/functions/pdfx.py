@@ -7,6 +7,20 @@ code: REF:unavailable (SURVEY.md §0) — semantics are scoped to the
 documented subset below, which our own corpus generator emits.
 
 Supported PDF subset (documented per SURVEY.md §7 "hard parts"):
+  - objects (PDF 32000 §7.3): one iterative parser (``_parse``, one
+    token grammar) reads each object ONCE into Python values — dict
+    (name keys), list, int/float, bool, None (null), name (str), string
+    (bytes) and ``Ref`` — and every reader takes its keys from that
+    value; one ``_Doc._resolve`` follows a Ref wherever a value may be
+    indirect (/Length, /Resources, /Font, /XObject, /Encoding,
+    /Differences, /Annots, /Contents, /Rotate, /MediaBox, …).  Only
+    top-level keys are visible (a nested value is reached through its
+    dict).  No nesting depth recurses; junk (an unknown keyword, a
+    closer that closes nothing, truncation) ends the parse with no
+    value — a missing key, never an exception
+  - names ``/…``, one rule (``_NAME`` + ``_name_of``) for objects and
+    content streams: every regular character of §7.3.5 (``/T1_0``,
+    ``/F1.0``), ``#xx`` escapes decoded (``/F#31`` is ``/F1``)
   - content streams (``stream ... endstream``), raw or /FlateDecode
     (zlib) per the stream object's own /Filter dict entry; a direct
     /Length slices the body exactly, else endstream-scan fallback
@@ -32,10 +46,11 @@ Supported PDF subset (documented per SURVEY.md §7 "hard parts"):
     content streams, dict strings and the fixture encryptor: unescaped
     parens balance up to three levels deep (a deeper or unbalanced
     ``(`` starts no string); escapes ``\\``, ``\(``, ``\)``, ``\n``,
-    ``\r``, ``\t``, octal of 1–3 digits 0–7 with high-order overflow
-    ignored (``\400`` → NUL); any other escaped char stands for itself
-    (``\8`` → ``8``).  Not modeled: ``\b``, ``\f``, backslash-EOL line
-    continuation
+    ``\r``, ``\t``, ``\b``, ``\f``, octal of 1–3 digits 0–7 with
+    high-order overflow ignored (``\400`` → NUL), a backslash before an
+    end of line (LF, CR or CRLF) joins the lines; any other escaped char
+    stands for itself (``\8`` → ``8``).  A delimiter inside a string
+    (``(a >> b)``) is part of the string everywhere
   - hex strings ``<4869>`` (whitespace ignored, odd length zero-padded)
   - UTF-16BE text strings (FE FF BOM), literal or hex — the standard
     real-producer encoding for non-ASCII text
@@ -85,16 +100,18 @@ Supported PDF subset (documented per SURVEY.md §7 "hard parts"):
     Tr is text STATE: it persists across BT..ET within a stream
   - encrypted documents (/Encrypt in any trailer, classic or
     xref-stream, checked even when the page walk fails): the standard
-    security handler's RC4 subset (V≤2, R 2/3, EMPTY user password —
-    the "secured but readable" web PDF) is DECRYPTED in-subset
+    security handler with the EMPTY user password — the "secured but
+    readable" web PDF; RC4 V≤2 R 2/3, V=4 /V2 or /AESV2, V=5 R=6
+    /AESV3 — is DECRYPTED in-subset
     (functions/pdfcrypt.py: file key from /O //P //ID per §7.6.3,
-    verified against /U, per-object keys over stream bodies and dict
-    strings); anything else — AES V≥4, a real password, a tampered /U
-    — emits ZERO runs/figures, never ciphertext-as-text via the
-    positional fallback; the doc still flows through lineage with 0
-    spans
+    verified against /U, per-object keys over stream bodies and EVERY
+    string of an object read through the xref — the /Encrypt dict,
+    XRef streams and objects inside an /ObjStm excepted); anything
+    else — a real password, a tampered /U — emits ZERO runs/figures,
+    never ciphertext-as-text via the positional fallback; the doc
+    still flows through lineage with 0 spans
   - filled AcroForm text fields (structured-parse path): /Subtype
-    /Widget annotations with /FT /Tx and a literal-string /V (merged
+    /Widget annotations with /FT /Tx and a string /V (merged
     widget+field dicts, the common producer layout) render as
     ``name: value`` text runs at their /Rect — the scanned-form idiom
     where the filled value is page content
@@ -104,7 +121,7 @@ Supported PDF subset (documented per SURVEY.md §7 "hard parts"):
     bookmarks-panel reading of a scanned book
   - link annotations (structured-parse path): page /Annots whose
     /Subtype is /Link with a /Rect and a URI action (/A << /S /URI
-    /URI (...) >>, literal-string form) become 'link' blocks placed by
+    /URI (...) >>, the string read from /A) become 'link' blocks placed by
     their Rect in reading order — downstream they emit media spans
     whose media_ref is the URI, so hyperlink targets survive
     main-content extraction.  The positional fallback has no page
@@ -118,6 +135,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from ocr_spark.config import DEFAULT, ExtractConfig
 
@@ -136,8 +154,10 @@ _LIT = r"\((?:[^\\()]++|\\.)*+\)"
 _LIT = r"\((?:[^\\()]++|\\.|" + _LIT + r")*+\)"
 _LIT = r"(?s:\((?:[^\\()]++|\\.|" + _LIT + r")*+\))"
 
-_ESC = {"\\": "\\", "(": "(", ")": ")", "n": "\n", "r": "\r", "t": "\t"}
-_ESC_RE = re.compile(r"\\([0-7]{1,3}|.)", re.DOTALL)
+# a backslash before an end of line joins the lines
+_ESC = {"\\": "\\", "(": "(", ")": ")", "n": "\n", "r": "\r", "t": "\t",
+        "b": "\b", "f": "\f", "\n": "", "\r": "", "\r\n": ""}
+_ESC_RE = re.compile(r"\\(\r\n|[0-7]{1,3}|.)", re.DOTALL)
 
 
 def _unescape_one(m: re.Match) -> str:
@@ -161,77 +181,173 @@ def _lit_bytes(lit: bytes) -> bytes:
     return _unescape(lit[1:-1].decode("latin-1")).encode("latin-1")
 
 
+# A name ``/…`` (§7.3.5): every character but white space and the
+# delimiters, ``#xx`` standing for the byte xx.  Content streams and
+# the object parser read names with this one pattern.
+_NAME = r"/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*"
+_NAME_ESC_RE = re.compile(r"#([0-9A-Fa-f]{2})")
+
+
+def _name_of(tok: str) -> str:
+    """The name a matched ``/…`` token stands for, ``#xx`` decoded."""
+    s = tok[1:]
+    if "#" in s:
+        s = _NAME_ESC_RE.sub(lambda m: chr(int(m.group(1), 16)), s)
+    return s
+
+
+def _hex_bytes(body: str) -> bytes:
+    """The bytes of a hex string ``<…>`` body: white space ignored, an
+    odd final digit padded with 0 (§7.3.4.3)."""
+    hx = re.sub(r"\s", "", body)
+    return bytes.fromhex(hx + "0" if len(hx) % 2 else hx)
+
+
+# ---------------------------------------------------------------------------
+# object parser (§7.3): one token grammar, one pass per object
+# ---------------------------------------------------------------------------
+
+# one token: literal string, dict or array delimiter, hex string, name,
+# number, keyword (R, true, obj, stream …) or comment
+_OBJ_TOK_RE = re.compile((
+    _LIT + r"|<<|>>|\[|\]|<[0-9A-Fa-f\s]*>|" + _NAME
+    + r"|[-+]?\d*\.?\d+|[A-Za-z]+|%[^\r\n]*").encode())
+_CONST = {b"true": True, b"false": False, b"null": None}
+#: open containers past which an object is junk: real producers nest a
+#: handful of levels, and every open level holds memory
+_MAX_NESTING = 100
+
+
+class Ref(NamedTuple):
+    """An indirect reference ``num gen R``; ``_Doc._resolve`` follows it."""
+    num: int
+
+
+def _parse(data: bytes, pos: int, dec=None) -> tuple:
+    """(value, end) of the object at ``pos``: a dict (name keys), list,
+    int, float, bool, None (null), name (str), string (bytes, passed
+    through ``dec`` when given) or Ref; ``end`` is the offset after it.
+
+    An explicit stack, so no nesting depth can recurse.  A keyword
+    other than R, true, false and null, a ``>>`` or ``]`` that closes
+    nothing, nesting deeper than _MAX_NESTING, or the end of the data
+    ends the parse with value None: junk yields a missing key, never an
+    exception."""
+    stack: list[list] = []     # items of each open container
+    opens: list[bytes] = []    # its opening token, b"<<" or b"["
+    for m in _OBJ_TOK_RE.finditer(data, pos):
+        t = m.group()
+        c = t[:1]
+        if t == b"<<" or t == b"[":
+            if len(stack) == _MAX_NESTING:
+                return None, m.end()
+            stack.append([])
+            opens.append(t)
+            continue
+        if t == b">>" or t == b"]":
+            if not opens or opens.pop() != (b"[" if t == b"]" else b"<<"):
+                return None, m.end()
+            v = stack.pop()
+            if t == b">>":
+                v = {k: x for k, x in zip(v[::2], v[1::2]) if type(k) is str}
+        elif c == b"(" or c == b"<":
+            v = (_lit_bytes(t) if c == b"(" else
+                 _hex_bytes(t[1:-1].decode("latin-1")))
+            if dec is not None:
+                v = dec(v)
+        elif c == b"/":
+            v = _name_of(t.decode("latin-1"))
+        elif c == b"%":
+            continue
+        elif t in _CONST:
+            v = _CONST[t]
+        elif t == b"R":
+            cur = stack[-1] if stack else ()
+            if len(cur) >= 2 and type(cur[-1]) is type(cur[-2]) is int:
+                del cur[-1]
+                cur[-1] = Ref(cur[-1])
+            continue
+        elif c.isalpha():
+            return None, m.start()
+        else:
+            v = float(t) if b"." in t else int(t)
+        if not stack:
+            return v, m.end()
+        stack[-1].append(v)
+    return None, len(data)
+
+
+def _int(v, default=None):
+    """``v`` when it is an int, else ``default``."""
+    return v if type(v) is int else default
+
+
+def _rect(v) -> tuple | None:
+    """(x, y, w, h) of a ``[x0 y0 x1 y1]`` rectangle, else None."""
+    if not (isinstance(v, list) and len(v) == 4
+            and all(type(x) in (int, float) for x in v)):
+        return None
+    x0, y0, x1, y1 = map(float, v)
+    return min(x0, x1), min(y0, y1), abs(x1 - x0), abs(y1 - y0)
+
+
+def _text(v) -> str | None:
+    """A string value as text (see _pdf_text), else None."""
+    return _pdf_text(v.decode("latin-1")) if isinstance(v, bytes) else None
+
+
 # (?<!end): the bare keyword scan must not match the 'stream' suffix
 # inside 'endstream', which would yield a phantom segment duplicating
 # the next stream's content in multi-stream PDFs
 _STREAM_KW_RE = re.compile(rb"(?<!end)stream\r?\n")
-_LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?![\s\d]*R)")
-_FILTER_RE = re.compile(rb"/Filter\s*(?:\[([^\]]*)\]|\s*/([A-Za-z0-9]+))")
-
-
-def _dict_before(data: bytes, pos: int) -> bytes | None:
-    """The ``<< ... >>`` object dictionary immediately preceding the
-    ``stream`` keyword at ``pos`` (balanced for nested dicts), or None.
-
-    Parsing the stream's OWN dict — instead of a fixed-size window scan —
-    means a long dict can't hide its /Filter, and stray 'FlateDecode'
-    bytes in a previous object can't mislabel a raw stream."""
-    i = pos
-    while i > 0 and data[i - 1 : i].isspace():
-        i -= 1
-    if data[i - 2 : i] != b">>":
-        return None
-    depth, j = 1, i - 2
-    while j > 0 and depth:
-        if data[j - 2 : j] == b">>":
-            depth += 1
-            j -= 2
-        elif data[j - 2 : j] == b"<<":
-            depth -= 1
-            j -= 2
-        else:
-            j -= 1
-    return data[j : i] if depth == 0 else None
+_STREAM_AT_RE = re.compile(rb"\s*stream\r?\n")
+_ENDSTREAM_RE = re.compile(rb"\s*endstream")
 
 
 def _stream_segments(data: bytes):
-    """Yield (stream_dict, body) per content stream.  When the dict
-    carries a direct /Length the body is sliced exactly (robust to
-    'endstream' bytes occurring inside compressed payloads); otherwise
-    fall back to scanning for the next ``endstream`` keyword.
+    """Yield (stream dict, body) per stream — the positional fallback,
+    which needs no xref.  The object parser reads each ``<<`` from the
+    cursor on, and a parsed dict skips every ``<<`` nested in it (and
+    every ``stream`` inside its strings); a dict followed by the
+    ``stream`` keyword is that stream's.  A keyword with no dict before
+    it gets ``{}``.  A direct /Length slices the body exactly (robust
+    to 'endstream' bytes inside compressed payloads); otherwise the
+    body runs to the next ``endstream`` keyword.
 
-    Scans with a manual cursor that always advances PAST the consumed
-    body: 'stream\\n' byte sequences occurring INSIDE a previous stream's
-    compressed payload are never keyword matches, so they can neither
-    inject a phantom segment nor shift the positional page index of the
-    real streams that follow."""
-    pos = 0
-    while True:
-        m = _STREAM_KW_RE.search(data, pos)
-        if m is None:
-            return
-        d = _dict_before(data, m.start())
-        start = m.end()
-        body = None
-        if d is not None:
-            lm = _LENGTH_RE.search(d)
-            if lm:
-                end = start + int(lm.group(1))
-                if end <= len(data) and re.match(rb"\s*endstream", data[end:end + 16]):
-                    body = data[start:end]
-                    pos = data.find(b"endstream", end) + len(b"endstream")
-        if body is None:
-            em = data.find(b"endstream", start)
-            if em < 0:
-                pos = start
+    The cursor always advances PAST the consumed body: 'stream\\n' byte
+    sequences INSIDE a previous stream's payload are never keyword
+    matches, so they can neither inject a phantom segment nor shift the
+    positional page index of the real streams that follow."""
+    pos, m = 0, _STREAM_KW_RE.search(data)
+    while m is not None:
+        c = data.find(b"<<", pos, m.start())
+        if c < 0:
+            d, start = {}, m.end()
+        else:
+            d, pos = _parse(data, c)
+            sm = _STREAM_AT_RE.match(data, pos) if isinstance(d, dict) else None
+            if sm is None:
+                if pos > m.start():  # the keyword lay inside that object
+                    m = _STREAM_KW_RE.search(data, pos)
                 continue
+            start = sm.end()
+        n, body = _int(d.get("Length")), None
+        if n is not None and 0 <= n <= len(data) - start \
+                and _ENDSTREAM_RE.match(data, start + n):
+            body = data[start:start + n]
+            pos = data.find(b"endstream", start + n) + len(b"endstream")
+        elif (em := data.find(b"endstream", start)) >= 0:
             body = data[start:em]
             if body.endswith(b"\r\n"):
                 body = body[:-2]
             elif body.endswith((b"\n", b"\r")):
                 body = body[:-1]
             pos = em + len(b"endstream")
-        yield d or b"", body
+        else:
+            pos = start
+        m = _STREAM_KW_RE.search(data, pos)
+        if body is not None:
+            yield d, body
 
 
 # ---------------------------------------------------------------------------
@@ -239,65 +355,6 @@ def _stream_segments(data: bytes):
 # ---------------------------------------------------------------------------
 
 _OBJ_AT_RE = re.compile(rb"\s*(\d+)\s+(\d+)\s+obj\b")
-
-
-def _dict_num(d: bytes, key: bytes) -> int | None:
-    m = re.search(rb"/" + key + rb"\s+(\d+)(?![\s\d]*R)", d)
-    return int(m.group(1)) if m else None
-
-
-def _dict_ref(d: bytes, key: bytes) -> int | None:
-    m = re.search(rb"/" + key + rb"\s+(\d+)\s+\d+\s+R\b", d)
-    return int(m.group(1)) if m else None
-
-
-def _dict_name(d: bytes, key: bytes) -> bytes | None:
-    m = re.search(rb"/" + key + rb"\s*/([A-Za-z0-9]+)", d)
-    return m.group(1) if m else None
-
-
-def _dict_lit(d: bytes, key: bytes) -> bytes | None:
-    """Unescaped bytes of the literal string ``/Key ( … )``."""
-    m = re.search(rb"/" + key + rb"\s*(" + _LIT.encode() + rb")", d)
-    return _lit_bytes(m.group(1)) if m else None
-
-
-def _dict_arr(d: bytes, key: bytes) -> bytes | None:
-    """Raw inner bytes of ``/Key [ ... ]`` (balanced for nested arrays)."""
-    m = re.search(rb"/" + key + rb"\s*\[", d)
-    if not m:
-        return None
-    i, depth, start = m.end(), 1, m.end()
-    while i < len(d) and depth:
-        c = d[i:i + 1]
-        if c == b"[":
-            depth += 1
-        elif c == b"]":
-            depth -= 1
-        i += 1
-    return d[start:i - 1] if depth == 0 else None
-
-
-def _balanced_slice(b: bytes, pos: int) -> bytes | None:
-    """The balanced ``<< ... >>`` starting at/after ``pos`` within a
-    standalone bytes object (same scan as _Doc._balanced_dict, which
-    works on whole-file offsets)."""
-    m = re.match(rb"\s*<<", b[pos:pos + 64])
-    if not m:
-        return None
-    i = pos + m.end()
-    depth, start = 1, i - 2
-    while i < len(b) - 1 and depth:
-        two = b[i:i + 2]
-        if two == b"<<":
-            depth += 1
-            i += 2
-        elif two == b">>":
-            depth -= 1
-            i += 2
-        else:
-            i += 1
-    return b[start:i] if depth == 0 else None
 
 
 def _unpredict(data: bytes, predictor: int, columns: int) -> bytes:
@@ -336,78 +393,41 @@ def _unpredict(data: bytes, predictor: int, columns: int) -> bytes:
     return bytes(out)
 
 
-def _filters_of(d: bytes) -> list[bytes]:
-    """/Filter entry as an ordered (decode-order) list of filter names —
-    single name or array form; [] when the stream is unfiltered."""
-    fm = _FILTER_RE.search(d)
-    if not fm:
-        return []
-    arr, name = fm.groups()
-    if name:
-        return [name]
-    return re.findall(rb"/([A-Za-z0-9]+)", arr or b"")
-
-
-def _parms_of(d: bytes, n: int) -> list[bytes | None]:
-    """/DecodeParms (or /DP) per filter: a single dict applies to the
-    first filter; the array form pairs ``null``/dict entries with the
-    /Filter array positionally (PDF 32000 §7.3.8.2)."""
-    m = re.search(rb"/(?:DecodeParms|DP)\b\s*", d)
-    out: list[bytes | None] = []
-    if m:
-        pos = m.end()
-        if d[pos:pos + 1] == b"[":
-            pos += 1
-            while len(out) < n:
-                while pos < len(d) and d[pos:pos + 1].isspace():
-                    pos += 1
-                if d.startswith(b"null", pos):
-                    out.append(None)
-                    pos += 4
-                elif d.startswith(b"<<", pos):
-                    blk = _balanced_slice(d, pos)
-                    if blk is None:
-                        break
-                    out.append(blk)
-                    pos += len(blk)
-                else:
-                    break
-        else:
-            out.append(_balanced_slice(d, pos))
-    out += [None] * (n - len(out))
-    return out[:n]
-
-
-def _decode_stream_body(d: bytes, body: bytes) -> bytes:
+def _decode_stream_body(d: dict, body: bytes) -> bytes:
     """Apply the /Filter chain (+ per-filter /DecodeParms) to a stream
     body: Flate via zlib, LZW/ASCII85/ASCIIHex/RunLength via the
     from-scratch codecs in ``pdffilters``, PNG row predictors after
-    Flate/LZW.  An image-only or unknown filter raises — the structured
-    parse then falls back to the positional scan, which skips the
-    stream: undecodable bytes must never tokenize as phantom text."""
+    Flate/LZW.  A single /DecodeParms dict applies to the first filter;
+    the array form pairs ``null``/dict entries with the /Filter array
+    positionally (§7.3.8.2).  An image-only or unknown filter raises —
+    the structured parse then falls back to the positional scan, which
+    skips the stream: undecodable bytes must never tokenize as phantom
+    text."""
     import zlib
 
     from ocr_spark.functions.pdffilters import DECODERS, lzw_decode
 
-    filters = _filters_of(d)
-    if not filters:
+    filters = d.get("Filter")
+    if filters is None:
         return body
-    for name, pm in zip(filters, _parms_of(d, len(filters))):
-        if name in (b"FlateDecode", b"Fl"):
+    filters = filters if isinstance(filters, list) else [filters]
+    parms = d.get("DecodeParms", d.get("DP"))
+    parms = parms if isinstance(parms, list) else [parms]
+    for i, name in enumerate(filters):
+        pm = parms[i] if i < len(parms) and isinstance(parms[i], dict) else {}
+        if name in ("FlateDecode", "Fl"):
             body = zlib.decompress(body)
-        elif name in (b"LZWDecode", b"LZW"):
-            early = _dict_num(pm, b"EarlyChange") if pm else None
-            body = lzw_decode(body, 1 if early is None else early)
+        elif name in ("LZWDecode", "LZW"):
+            body = lzw_decode(body, _int(pm.get("EarlyChange"), 1))
         elif name in DECODERS:
             body = DECODERS[name](body)
-        elif name == b"Crypt":
+        elif name == "Crypt":
             continue  # decryption already ran (only /Identity survives)
         else:
             raise ValueError(f"unsupported stream filter {name!r}")
-        if pm and name in (b"FlateDecode", b"Fl", b"LZWDecode", b"LZW"):
-            pred = _dict_num(pm, b"Predictor") or 1
-            cols = _dict_num(pm, b"Columns") or 1
-            body = _unpredict(body, pred, cols)
+        if pm and name in ("FlateDecode", "Fl", "LZWDecode", "LZW"):
+            body = _unpredict(body, _int(pm.get("Predictor")) or 1,
+                              _int(pm.get("Columns")) or 1)
     return body
 
 
@@ -417,19 +437,20 @@ class _Doc:
     def __init__(self, data: bytes):
         self.data = data
         self.xref: dict[int, tuple] = {}   # obj → ('n', off) | ('c', stm, idx)
-        self.root: int | None = None
+        self.root = None                   # trailer /Root (newest), a Ref
         #: trailer declares /Encrypt: strings and stream bodies are
         #: ciphertext (RC4/AES) — decryptable in-subset when the
         #: standard security handler verifies with the EMPTY user
         #: password (V≤2 RC4, the "secured but readable" web PDF);
         #: otherwise callers must emit NO runs rather than garbage
         self.encrypted = False
-        self.encrypt_ref: int | None = None   # /Encrypt obj num (newest)
+        self.encrypt_ref = None               # /Encrypt value (newest)
         self.id0: bytes | None = None         # /ID[0] raw bytes (newest)
         self.crypt_key: bytes | None = None   # file key once verified
         self.crypt_aes = False                # cipher: AES-CBC vs RC4
         self.crypt_v5 = False                 # V=5: file key used directly
-        self._objstm_cache: dict[int, dict[int, bytes]] = {}
+        self._objs: dict[int, tuple | None] = {}
+        self._objstm_cache: dict[int, dict] = {}
         self._load_xref_chain()
         if self.encrypted:
             self._setup_decryption()
@@ -471,41 +492,35 @@ class _Doc:
                 if ent[17:18] == b"n" and (first + k) not in self.xref:
                     self.xref[first + k] = ("n", int(ent[:10]))
         tm = re.search(rb"trailer\s*", data[pos:pos + 256])
-        if tm:
-            td = self._balanced_dict(pos + tm.end())
-            if td:
-                if self.root is None:
-                    self.root = _dict_ref(td, b"Root")
-                if re.search(rb"/Encrypt\b", td):
-                    self.encrypted = True
-                    self._capture_encrypt_meta(td)
-                # hybrid-reference file (PDF 32000 §7.5.8.4): the classic
-                # trailer points at a companion xref STREAM holding the
-                # entries (typically the objstm-compressed objects) that
-                # the classic table omits; classic entries keep
-                # precedence (first-loaded wins in self.xref)
-                xs = _dict_num(td, b"XRefStm")
-                if xs is not None and 0 <= xs < len(self.data):
-                    try:
-                        self._load_xref_stream(xs)
-                    except Exception:
-                        pass
-                return _dict_num(td, b"Prev")
-        return None
+        td = _parse(data, pos + tm.end())[0] if tm else None
+        if not isinstance(td, dict):
+            return None
+        self._read_trailer(td)
+        # hybrid-reference file (PDF 32000 §7.5.8.4): the classic
+        # trailer points at a companion xref STREAM holding the entries
+        # (typically the objstm-compressed objects) that the classic
+        # table omits; classic entries keep precedence (first-loaded
+        # wins in self.xref)
+        xs = self._resolve(td.get("XRefStm"), int)
+        if xs is not None and 0 <= xs < len(self.data):
+            try:
+                self._load_xref_stream(xs)
+            except Exception:
+                pass
+        return self._resolve(td.get("Prev"), int)
 
     def _load_xref_stream(self, off: int) -> int | None:
         d, body = self._parse_obj_at(off)
-        if d is None or body is None or _dict_name(d, b"Type") != b"XRef":
+        if not isinstance(d, dict) or body is None or d.get("Type") != "XRef":
             raise ValueError("startxref does not point at an xref section")
         raw = _decode_stream_body(d, body)
-        W = [int(x) for x in re.findall(rb"\d+", _dict_arr(d, b"W") or b"")]
-        size = _dict_num(d, b"Size") or 0
-        idx = _dict_arr(d, b"Index")
-        pairs = ([int(x) for x in re.findall(rb"\d+", idx)] if idx
-                 else [0, size])
-        rowlen = sum(W)
-        if not 0 < rowlen <= 64 or len(W) < 3:
+        W = self._resolve(d.get("W"), list) or []
+        if len(W) < 3 or not all(type(w) is int and w >= 0 for w in W) \
+                or not 0 < sum(W) <= 64:
             raise ValueError("implausible xref-stream /W")
+        rowlen = sum(W)
+        size = self._resolve(d.get("Size"), int) or 0
+        pairs = self._resolve(d.get("Index"), list) or [0, size]
         pos = 0
         for first, count in zip(pairs[::2], pairs[1::2]):
             # cap claimed counts by the decoded bytes actually present
@@ -526,22 +541,21 @@ class _Doc:
                     self.xref[num] = ("n", fields[1])
                 elif fields[0] == 2:
                     self.xref[num] = ("c", fields[1], fields[2])
-        if self.root is None:
-            self.root = _dict_ref(d, b"Root")
-        if re.search(rb"/Encrypt\b", d):
-            self.encrypted = True
-            self._capture_encrypt_meta(d)
-        return _dict_num(d, b"Prev")
+        self._read_trailer(d)
+        return self._resolve(d.get("Prev"), int)
 
-    def _capture_encrypt_meta(self, td: bytes) -> None:
-        """Remember the /Encrypt object ref and /ID[0] from the NEWEST
-        trailer that carries them (the chain walks newest-first)."""
-        if self.encrypt_ref is None:
-            self.encrypt_ref = _dict_ref(td, b"Encrypt")
-        if self.id0 is None:
-            m = re.search(rb"/ID\s*\[\s*<([0-9A-Fa-f]*)>", td)
-            if m:
-                self.id0 = bytes.fromhex(m.group(1).decode("ascii"))
+    def _read_trailer(self, td: dict) -> None:
+        """Take /Root, /Encrypt and /ID[0] from the NEWEST trailer that
+        carries them (the chain walks newest-first)."""
+        if self.root is None:
+            self.root = td.get("Root")
+        if "Encrypt" in td:
+            self.encrypted = True
+            if self.encrypt_ref is None:
+                self.encrypt_ref = td["Encrypt"]
+            ids = self._resolve(td.get("ID"), list)
+            if self.id0 is None and ids and isinstance(ids[0], bytes):
+                self.id0 = ids[0]
 
     def _setup_decryption(self) -> None:
         """Standard security handler, empty user password: resolve the
@@ -553,35 +567,26 @@ class _Doc:
         handlers (custom security handlers, /Identity or per-stream
         crypt filters, non-empty passwords, deprecated R=5) leave
         ``crypt_key`` None — the caller then takes the emit-nothing
-        path, never the ciphertext-as-text one."""
+        path, never the ciphertext-as-text one.
+
+        The /Encrypt dict is read (and cached) before any key exists,
+        so its own strings are never decrypted."""
         from ocr_spark.functions import pdfcrypt
 
-        if self.encrypt_ref is None:
+        d = self._resolve(self.encrypt_ref, dict)
+        if d is None or d.get("Filter") != "Standard":
             return
-        try:
-            ed = self.obj(self.encrypt_ref)
-        except Exception:
-            return
-        if not ed or ed[0] is None:
-            return
-        d = ed[0]
-        if _dict_name(d, b"Filter") != b"Standard":
-            return
-        v = _dict_num(d, b"V") or 0
-        rm = re.search(rb"/R\s+(\d+)", d)
-        r = int(rm.group(1)) if rm else 0
-        o = self._encrypt_str(d, b"O")
-        u = self._encrypt_str(d, b"U")
-        if o is None or u is None:
+        v = self._resolve(d.get("V"), int) or 0
+        r = self._resolve(d.get("R"), int) or 0
+        o, u = d.get("O"), d.get("U")
+        if not isinstance(o, bytes) or not isinstance(u, bytes):
             return
 
         if v == 5:
             # PDF 2.0 AES-256: /ID plays no key role; /U carries the
             # salts, /UE wraps the file key
-            if r != 6:
-                return
-            ue = self._encrypt_str(d, b"UE")
-            if ue is None:
+            ue = d.get("UE")
+            if r != 6 or not isinstance(ue, bytes):
                 return
             self.crypt_key = pdfcrypt.verify_user_pw_r6(u, ue)
             self.crypt_aes = self.crypt_key is not None
@@ -590,104 +595,60 @@ class _Doc:
 
         if self.id0 is None:
             return
-        n = (_dict_num(d, b"Length") or 40) // 8
+        n = (self._resolve(d.get("Length"), int) or 40) // 8
         if v == 4:
             # crypt-filter container: only the uniform /StdCF layout
             # with both stream and string filters pointing at it
-            if r != 4 or _dict_name(d, b"StmF") != b"StdCF" \
-                    or _dict_name(d, b"StrF") != b"StdCF":
+            cf = self._resolve(d.get("CF"), dict) or {}
+            std = self._resolve(cf.get("StdCF"), dict) or {}
+            cfm = std.get("CFM")
+            if r != 4 or d.get("StmF") != "StdCF" \
+                    or d.get("StrF") != "StdCF" or cfm not in ("V2", "AESV2"):
                 return
-            cm = re.search(
-                rb"/StdCF\s*<<(.*?)>>", d, re.DOTALL)
-            cfm = _dict_name(cm.group(1), b"CFM") if cm else None
-            if cfm not in (b"V2", b"AESV2"):
-                return
-            self.crypt_aes = cfm == b"AESV2"
+            self.crypt_aes = cfm == "AESV2"
             n = 16
         elif v not in (1, 2) or r not in (2, 3):
             return
-        pm = re.search(rb"/P\s+(-?\d+)", d)
-        p = int(pm.group(1)) if pm else -1
+        p = self._resolve(d.get("P"), int)
         self.crypt_key = pdfcrypt.verify_user_pw(
-            u, o, p, self.id0, r, n)
+            u, o, -1 if p is None else p, self.id0, r, n)
         if self.crypt_key is None:
             self.crypt_aes = False
 
-    @staticmethod
-    def _encrypt_str(d: bytes, key: bytes) -> bytes | None:
-        """/O //U entry bytes from the encrypt dict — hex or literal
-        form (these two strings are never themselves encrypted)."""
-        m = re.search(rb"/" + key + rb"\s*<([0-9A-Fa-f\s]*)>", d)
-        if m:
-            return bytes.fromhex(
-                m.group(1).decode("ascii").replace(" ", "")
-                .replace("\n", "").replace("\r", ""))
-        return _dict_lit(d, key)
-
-    def _dict_str(self, d: bytes, key: bytes, num: int) -> str | None:
-        """Decoded text of a literal-string dict entry (e.g. /Title,
-        /V), decrypting with the per-object key when the document is
-        encrypted.  Objects living INSIDE an object stream are exempt
-        (the containing /ObjStm stream was already decrypted — spec
-        says their strings are not separately encrypted).  Generation
-        is taken as 0: the xref keeps no gen and non-zero gens are
-        vanishingly rare in practice."""
-        raw = _dict_lit(d, key)
-        if raw is None:
-            return None
-        ent = self.xref.get(num)
-        if self.crypt_key is not None and ent is not None and \
-                ent[0] == "n":
-            raw = self._decrypt_payload(raw, num, 0)
-        return _pdf_text(raw.decode("latin-1"))
-
     # -- objects ------------------------------------------------------------
-    def _balanced_dict(self, pos: int) -> bytes | None:
-        return _balanced_slice(self.data, pos)
-
     def _parse_obj_at(self, off: int):
-        """(dict_bytes|raw_value_bytes, stream_body|None) at offset."""
+        """(value, stream body|None) of the object at ``off``.  Once the
+        file key is verified, every string and the stream body are
+        decrypted with the object's key — except in a cross-reference
+        stream, which must be readable before any key exists (PDF 32000
+        §7.5.8.2).  On disk the order is encrypt(flate(data)), so the
+        body is decrypted here, before _decode_stream_body."""
         data = self.data
         m = _OBJ_AT_RE.match(data, off)
         if not m:
             return None, None
-        pos = m.end()
-        d = self._balanced_dict(pos)
-        if d is None:  # plain value object (e.g. an indirect /Length int)
-            em = data.find(b"endobj", pos)
-            return (data[pos:em].strip() if em > 0 else None), None
-        pos2 = pos + len(re.match(rb"\s*", data[pos:]).group(0)) + len(d)
-        sm = re.match(rb"\s*stream\r?\n", data[pos2:pos2 + 32])
+        num, gen = int(m.group(1)), int(m.group(2))
+        dec = None
+        if self.crypt_key is not None:
+            def dec(s: bytes) -> bytes:
+                return self._decrypt_payload(s, num, gen)
+        d, pos = _parse(data, m.end(), dec)
+        if dec is not None and isinstance(d, dict) and d.get("Type") == "XRef":
+            dec = None
+            d, pos = _parse(data, m.end())
+        sm = _STREAM_AT_RE.match(data, pos) if isinstance(d, dict) else None
         if not sm:
             return d, None
-        start = pos2 + sm.end()
-        length = _dict_num(d, b"Length")
-        if length is None:  # indirect /Length — resolve through the xref
-            ref = _dict_ref(d, b"Length")
-            if ref is not None:
-                v = self.obj(ref)
-                if v and v[1] is None and v[0] and v[0].isdigit():
-                    length = int(v[0])
-        if length is not None and start + length <= len(data):
+        start = sm.end()
+        length = self._resolve(d.get("Length"), int)
+        if length is not None and 0 <= length <= len(data) - start:
             body = data[start:start + length]
         else:
             em = data.find(b"endstream", start)
-            body = data[start:em].rstrip(b"\r\n") if em > 0 else None
-        return d, self._maybe_decrypt(d, body, int(m.group(1)),
-                                      int(m.group(2)))
-
-    def _maybe_decrypt(self, d: bytes, body: bytes | None, num: int,
-                       gen: int):
-        """RC4-decrypt a stream body with its per-object key once the
-        file key is verified.  Cross-reference streams are NEVER
-        encrypted (PDF 32000 §7.5.8.2 — they must be readable before
-        any key exists), and the /Encrypt dict itself carries no
-        stream.  Runs BEFORE _decode_stream_body: on disk the order is
-        encrypt(flate(data)), so reading is flate(decrypt(data))."""
-        if body is None or self.crypt_key is None or \
-                _dict_name(d, b"Type") == b"XRef":
-            return body
-        return self._decrypt_payload(body, num, gen)
+            if em < 0:
+                return d, None
+            body = data[start:em].rstrip(b"\r\n")
+        return d, body if dec is None else dec(body)
 
     def _decrypt_payload(self, data: bytes, num: int, gen: int) -> bytes:
         """Per-object decrypt under the verified file key: RC4 with the
@@ -702,34 +663,49 @@ class _Doc:
         return pdfcrypt.rc4(pdfcrypt.obj_key(self.crypt_key, num, gen),
                             data)
 
-    def _objstm(self, num: int) -> dict[int, bytes]:
+    def _objstm(self, num: int) -> dict:
+        """Object number → value of every object packed in the /ObjStm
+        ``num`` (its strings are not separately encrypted)."""
         if num in self._objstm_cache:
             return self._objstm_cache[num]
-        out: dict[int, bytes] = {}
+        out = self._objstm_cache[num] = {}  # a stream reaching itself reads empty
         ent = self.xref.get(num)
         if ent and ent[0] == "n":
             d, body = self._parse_obj_at(ent[1])
-            if d is not None and body is not None and \
-                    _dict_name(d, b"Type") == b"ObjStm":
+            if body is not None and d.get("Type") == "ObjStm":
                 raw = _decode_stream_body(d, body)
-                n = _dict_num(d, b"N") or 0
-                first = _dict_num(d, b"First") or 0
+                first = self._resolve(d.get("First"), int) or 0
                 header = [int(x) for x in raw[:first].split()]
-                offs = list(zip(header[::2], header[1::2]))
-                for k, (onum, ooff) in enumerate(offs):
-                    end = (first + offs[k + 1][1]) if k + 1 < len(offs) else len(raw)
-                    out[onum] = raw[first + ooff:end].strip()
-        self._objstm_cache[num] = out
+                for onum, ooff in zip(header[::2], header[1::2]):
+                    out[onum] = _parse(raw, first + ooff)[0]
         return out
 
     def obj(self, num: int):
-        """(dict_or_value_bytes, stream_body|None) for object ``num``."""
+        """(value, stream body|None) of object ``num``, parsed once;
+        None when the xref has no entry for it."""
         ent = self.xref.get(num)
         if ent is None:
             return None
-        if ent[0] == "n":
-            return self._parse_obj_at(ent[1])
-        return self._objstm(ent[1]).get(num), None
+        if ent[0] == "c":
+            return self._objstm(ent[1]).get(num), None
+        if num not in self._objs:
+            self._objs[num] = None  # an object reaching itself reads missing
+            self._objs[num] = self._parse_obj_at(ent[1])
+        return self._objs[num]
+
+    def _resolve(self, v, typ=object):
+        """``v``, or the value of the object it refers to when it is a
+        Ref; None unless that is a ``typ``."""
+        if isinstance(v, Ref):
+            o = self.obj(v.num)
+            v = o[0] if o else None
+        return v if isinstance(v, typ) else None
+
+    def _stream(self, v) -> tuple | None:
+        """(dict, raw body) of the stream object ``v`` refers to, else
+        None."""
+        o = self.obj(v.num) if isinstance(v, Ref) else None
+        return o if o and o[1] is not None else None
 
     # -- page tree ----------------------------------------------------------
     def page_contents(self) -> list[tuple]:
@@ -737,53 +713,47 @@ class _Doc:
         rotate, (media W, media H), links, widgets) per page in
         page-tree order.  Font map: font resource name (str, e.g. 'F1')
         → tagged decode table (see _page_fonts).  XObject map: see
-        _page_xobjects.  Links: see _page_links; widgets: see
-        _page_widgets.  /Rotate, /MediaBox, and /Resources are
-        INHERITABLE page attributes (PDF 32000 §7.7.3.4/§7.8.3): a value
-        on a /Pages node applies to every descendant page unless
-        overridden."""
+        _page_xobjects.  Links and widgets: see _page_annots.  /Rotate,
+        /MediaBox, and /Resources are INHERITABLE page attributes (PDF
+        32000 §7.7.3.4/§7.8.3): a value on a /Pages node applies to
+        every descendant page unless overridden."""
         if self.root is None:
             raise ValueError("no /Root")
-        cat = self.obj(self.root)
-        if not cat or cat[0] is None:
+        cat = self._resolve(self.root, dict)
+        if cat is None:
             raise ValueError("bad catalog")
-        pages_ref = _dict_ref(cat[0], b"Pages")
         out: list[tuple] = []
-        self._walk_pages(pages_ref, out, depth=0,
+        self._walk_pages(cat.get("Pages"), out, depth=0,
                          rotate=0, media=(612.0, 792.0))
         if not out:
             raise ValueError("empty page tree")
         return out
 
-    def _page_xobjects(self, d: bytes, depth: int = 0) -> dict:
+    def _page_xobjects(self, res: dict, depth: int = 0) -> dict:
         """XObject resource name → ('form', content str, fonts, nested
         xobjects) for /Subtype /Form, or ('image',) for /Subtype /Image,
-        from a page (or form) dict's /Resources /XObject table.  Forms
+        from a page (or form) /Resources dict's /XObject table.  Forms
         carry their own resources, so fonts/xobjects recurse (bounded)."""
         xobjs: dict[str, tuple] = {}
         if depth > 8:
             return xobjs
-        rm = re.search(rb"/XObject\s*<<(.*?)>>", d, re.DOTALL)
-        if not rm:
-            return xobjs
-        for xm in re.finditer(rb"/(\w+)\s+(\d+)\s+\d+\s+R\b", rm.group(1)):
-            xo = self.obj(int(xm.group(2)))
-            if not xo or xo[0] is None:
-                continue
-            sub = _dict_name(xo[0], b"Subtype")
-            name = xm.group(1).decode("latin-1")
-            if sub == b"Image":
+        for name, ref in (self._resolve(res.get("XObject"), dict)
+                          or {}).items():
+            xo = self._stream(ref)
+            sub = xo[0].get("Subtype") if xo else None
+            if sub == "Image":
                 xobjs[name] = ("image",)
-            elif sub == b"Form" and xo[1] is not None:
-                content = _decode_stream_body(xo[0], xo[1]).decode("latin-1")
-                xobjs[name] = ("form", content,
-                               self._page_fonts(xo[0]),
-                               self._page_xobjects(xo[0], depth + 1))
+            elif sub == "Form":
+                fres = self._resolve(xo[0].get("Resources"), dict) or {}
+                xobjs[name] = ("form",
+                               _decode_stream_body(*xo).decode("latin-1"),
+                               self._page_fonts(fres),
+                               self._page_xobjects(fres, depth + 1))
         return xobjs
 
-    def _page_fonts(self, d: bytes) -> dict:
-        """Font resource name → tagged decode table from the page's
-        /Resources /Font dict:
+    def _page_fonts(self, res: dict) -> dict:
+        """Font resource name → tagged decode table from a /Resources
+        dict's /Font table:
           ('cid', {cid: unicode})   Type0 fonts with a /ToUnicode CMap
           ('enc', {code: unicode})  simple fonts (Type1/TrueType) whose
                                     /Encoding carries a /Differences
@@ -792,221 +762,141 @@ class _Doc:
         Fonts with neither are omitted — their strings keep byte-literal
         semantics."""
         fonts: dict[str, tuple] = {}
-        rm = re.search(rb"/Font\s*<<(.*?)>>", d, re.DOTALL)
-        if not rm:
-            return fonts
-        for fm in re.finditer(rb"/(\w+)\s+(\d+)\s+\d+\s+R\b", rm.group(1)):
-            fobj = self.obj(int(fm.group(2)))
-            if not fobj or fobj[0] is None:
+        for name, ref in (self._resolve(res.get("Font"), dict) or {}).items():
+            fd = self._resolve(ref, dict)
+            if fd is None:
                 continue
-            name = fm.group(1).decode("latin-1")
-            if _dict_name(fobj[0], b"Subtype") == b"Type0":
-                tu = _dict_ref(fobj[0], b"ToUnicode")
-                if tu is None:
-                    continue
-                cm = self.obj(tu)
-                if cm and cm[1] is not None:
+            if fd.get("Subtype") == "Type0":
+                cm = self._stream(fd.get("ToUnicode"))
+                if cm:
                     fonts[name] = ("cid", parse_tounicode_cmap(
-                        _decode_stream_body(cm[0], cm[1])))
-                continue
-            enc = self._font_differences(fobj[0])
-            if enc:
+                        _decode_stream_body(*cm)))
+            elif enc := self._font_differences(fd):
                 fonts[name] = ("enc", enc)
         return fonts
 
-    def _font_differences(self, fd: bytes) -> dict[int, str]:
+    def _font_differences(self, fd: dict) -> dict[int, str]:
         """{byte code → unicode} from a simple font's /Encoding
         /Differences array (inline dict or indirect object).  The array
         alternates start codes and glyph names: each number sets the
         next code, each name consumes one code.  Names outside the AGL
         subset (and not /uniXXXX) are skipped — those codes keep their
         byte-literal meaning."""
-        er = _dict_ref(fd, b"Encoding")
-        if er is not None:
-            eo = self.obj(er)
-            enc_d = eo[0] if eo else None
-        else:
-            em = re.search(rb"/Encoding\s*<<(.*?)>>", fd, re.DOTALL)
-            enc_d = em.group(0) if em else None
-        if not enc_d:
-            return {}
-        darr = _dict_arr(enc_d, b"Differences")
-        if darr is None:
-            return {}
+        enc = self._resolve(fd.get("Encoding"), dict) or {}
         out: dict[int, str] = {}
         code = 0
-        for tok in re.finditer(rb"(\d+)|/([A-Za-z0-9.]+)", darr):
-            if tok.group(1) is not None:
-                code = int(tok.group(1))
-            else:
-                u = _glyph_to_unicode(tok.group(2).decode("latin-1"))
+        for v in self._resolve(enc.get("Differences"), list) or []:
+            if type(v) is int:
+                code = v
+            elif isinstance(v, str):
+                u = _glyph_to_unicode(v)
                 if u is not None:
                     out[code] = u
                 code += 1
         return out
 
-    def _node_resources(self, d: bytes) -> bytes | None:
-        """The node's /Resources dict bytes (inline balanced dict or
-        indirect object), or None when the node declares none."""
-        ref = _dict_ref(d, b"Resources")
-        if ref is not None:
-            o = self.obj(ref)
-            return o[0] if o else None
-        m = re.search(rb"/Resources\b", d)
-        if not m:
-            return None
-        return _balanced_slice(d, m.end())
-
-    def _walk_pages(self, num: int | None, out: list, depth: int,
+    def _walk_pages(self, node, out: list, depth: int,
                     rotate: int = 0, media: tuple = (612.0, 792.0),
-                    res: bytes | None = None):
-        if num is None or depth > 32:
+                    res: dict | None = None):
+        if node is None or depth > 32:
             return
-        node = self.obj(num)
-        if not node or node[0] is None:
-            raise ValueError(f"missing page-tree node {num}")
-        d = node[0]
+        d = self._resolve(node, dict)
+        if d is None:
+            raise ValueError(f"missing page-tree node {node}")
         # /Resources is INHERITABLE like /Rotate and /MediaBox (PDF
         # 32000 §7.8.3): a /Pages-node dict applies to every descendant
         # page unless the page declares its own
-        nr = self._node_resources(d)
-        if nr is not None:
-            res = nr
+        own = self._resolve(d.get("Resources"), dict)
+        if own is not None:
+            res = own
         # inheritable attributes: this node's value (if any) overrides
-        rm = re.search(rb"/Rotate\s+(-?\d+)", d)
-        if rm:
-            rotate = int(rm.group(1)) % 360
-        mb = re.search(
-            rb"/MediaBox\s*\[\s*([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)"
-            rb"\s+([\d.+-]+)\s*\]", d)
-        if mb:
-            x0, y0, x1, y1 = (float(mb.group(i)) for i in range(1, 5))
-            media = (x1 - x0, y1 - y0)
-        typ = _dict_name(d, b"Type")
-        if typ == b"Pages":
-            kids = _dict_arr(d, b"Kids") or b""
-            for km in re.finditer(rb"(\d+)\s+\d+\s+R\b", kids):
-                self._walk_pages(int(km.group(1)), out, depth + 1,
-                                 rotate, media, res)
-        elif typ == b"Page":
+        rot = self._resolve(d.get("Rotate"), int)
+        if rot is not None:
+            rotate = rot % 360
+        box = _rect(self._resolve(d.get("MediaBox"), list))
+        if box is not None:
+            media = box[2:]
+        if d.get("Type") == "Pages":
+            for kid in self._resolve(d.get("Kids"), list) or []:
+                self._walk_pages(kid, out, depth + 1, rotate, media, res)
+        elif d.get("Type") == "Page":
+            # /Contents: one stream, or an array of them (direct or
+            # indirect) concatenated
+            cont = d.get("Contents")
             parts: list[bytes] = []
-            carr = _dict_arr(d, b"Contents")
-            refs = ([int(m.group(1)) for m in
-                     re.finditer(rb"(\d+)\s+\d+\s+R\b", carr)]
-                    if carr is not None
-                    else ([_dict_ref(d, b"Contents")]
-                          if _dict_ref(d, b"Contents") is not None else []))
-            for ref in refs:
-                c = self.obj(ref)
-                if not c or c[1] is None:
+            for ref in (self._resolve(cont, list)
+                        or ([cont] if cont is not None else [])):
+                c = self._stream(ref)
+                if c is None:
                     raise ValueError(f"missing content stream {ref}")
-                parts.append(_decode_stream_body(c[0], c[1]))
-            # effective resources: the inherited dict unless this page
-            # declares its own (res already reflects the override);
-            # fall back to scanning the page dict itself (inline
-            # /Resources — the legacy single-page writer layout)
-            eff = res if res is not None else d
-            out.append((b"\n".join(parts), self._page_fonts(eff),
-                        self._page_xobjects(eff), rotate, media,
-                        self._page_links(d), self._page_widgets(d)))
+                parts.append(_decode_stream_body(*c))
+            res = res or {}
+            out.append((b"\n".join(parts), self._page_fonts(res),
+                        self._page_xobjects(res), rotate, media,
+                        *self._page_annots(d)))
 
-    def _page_links(self, d: bytes) -> list[tuple]:
-        """(x, y, w, h, uri) per /Subtype /Link annotation with a /Rect
-        and a literal-string URI action in this page's /Annots array."""
+    def _page_annots(self, d: dict) -> tuple[list, list]:
+        """(links, widgets) from this page's /Annots array.
+
+        Links: (x, y, w, h, uri) per /Subtype /Link annotation with a
+        /Rect and a string /URI in its action dict /A.
+
+        Widgets: (x, y, text) per filled AcroForm text field — a
+        /Subtype /Widget annotation whose field dict (merged, the common
+        producer layout) carries /FT /Tx and a string value /V.  The
+        rendered text is ``name: value`` when the field has a partial
+        name /T, else the bare value — the scanned-form idiom where the
+        filled value is page content a viewer shows at the widget's
+        /Rect.  Choice/checkbox fields (/Ch, /Btn) and
+        appearance-stream-only widgets are out of subset."""
         links: list[tuple] = []
-        aarr = _dict_arr(d, b"Annots")
-        if aarr is None:
-            return links
-        for am in re.finditer(rb"(\d+)\s+\d+\s+R\b", aarr):
-            ao = self.obj(int(am.group(1)))
-            if not ao or ao[0] is None:
+        fields: list[tuple] = []
+        for a in self._resolve(d.get("Annots"), list) or []:
+            ad = self._resolve(a, dict) or {}
+            rect = _rect(self._resolve(ad.get("Rect"), list))
+            if rect is None:
                 continue
-            ad = ao[0]
-            if _dict_name(ad, b"Subtype") != b"Link":
-                continue
-            rm = re.search(
-                rb"/Rect\s*\[\s*([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)"
-                rb"\s+([\d.+-]+)\s*\]", ad)
-            uri = _dict_lit(ad, b"URI")
-            if not rm or uri is None:
-                continue
-            x0, y0, x1, y1 = (float(rm.group(i)) for i in range(1, 5))
-            links.append((min(x0, x1), min(y0, y1),
-                          abs(x1 - x0), abs(y1 - y0), uri.decode("latin-1")))
-        return links
+            sub = ad.get("Subtype")
+            if sub == "Link":
+                act = self._resolve(ad.get("A"), dict) or {}
+                uri = act.get("URI")
+                if isinstance(uri, bytes):
+                    links.append((*rect, uri.decode("latin-1")))
+            elif sub == "Widget" and ad.get("FT") == "Tx":
+                val, name = _text(ad.get("V")), _text(ad.get("T"))
+                if val is not None and name is not None:
+                    val = f"{name}: {val}"
+                if val:
+                    fields.append((rect[0], rect[1], val))
+        return links, fields
 
     def outline_titles(self) -> list[str]:
         """Depth-first bookmark titles from the catalog's /Outlines tree
-        (/First child + /Next sibling chains, /Title literal strings —
-        UTF-16BE decoded like any PDF text string).  Depth- and
-        count-bounded so cyclic or corrupt chains terminate."""
+        (/First child + /Next sibling chains, /Title strings — UTF-16BE
+        decoded like any PDF text string).  Depth- and count-bounded so
+        cyclic or corrupt chains terminate."""
         titles: list[str] = []
-        if self.root is None:
-            return titles
-        cat = self.obj(self.root)
-        if not cat or cat[0] is None:
-            return titles
-        oref = _dict_ref(cat[0], b"Outlines")
-        if oref is None:
+        cat = self._resolve(self.root, dict) or {}
+        outlines = self._resolve(cat.get("Outlines"), dict)
+        if outlines is None:
             return titles
         seen: set[int] = set()
 
-        def walk(num: int | None, depth: int):
-            while num is not None and depth <= 16 and len(titles) < 1000 \
-                    and num not in seen:
-                seen.add(num)
-                node = self.obj(num)
-                if not node or node[0] is None:
+        def walk(ref, depth: int):
+            while isinstance(ref, Ref) and depth <= 16 \
+                    and len(titles) < 1000 and ref.num not in seen:
+                seen.add(ref.num)
+                d = self._resolve(ref, dict)
+                if d is None:
                     return
-                d = node[0]
-                title = self._dict_str(d, b"Title", num)
+                title = _text(d.get("Title"))
                 if title is not None:
                     titles.append(title)
-                walk(_dict_ref(d, b"First"), depth + 1)
-                num = _dict_ref(d, b"Next")
+                walk(d.get("First"), depth + 1)
+                ref = d.get("Next")
 
-        onode = self.obj(oref)
-        if onode and onode[0] is not None:
-            walk(_dict_ref(onode[0], b"First"), 0)
+        walk(outlines.get("First"), 0)
         return titles
-
-    def _page_widgets(self, d: bytes) -> list[tuple]:
-        """(x, y, text) per filled AcroForm text field on this page: a
-        /Subtype /Widget annotation whose field dict (merged, the common
-        producer layout) carries /FT /Tx and a literal-string value /V.
-        The rendered text is ``name: value`` when the field has a
-        partial name /T, else the bare value — the scanned-form idiom
-        where the filled value is page content a viewer shows at the
-        widget's /Rect.  Choice/checkbox fields (/Ch, /Btn) and
-        appearance-stream-only widgets are out of subset."""
-        fields: list[tuple] = []
-        aarr = _dict_arr(d, b"Annots")
-        if aarr is None:
-            return fields
-        for am in re.finditer(rb"(\d+)\s+\d+\s+R\b", aarr):
-            anum = int(am.group(1))
-            ao = self.obj(anum)
-            if not ao or ao[0] is None:
-                continue
-            ad = ao[0]
-            if _dict_name(ad, b"Subtype") != b"Widget" or \
-                    _dict_name(ad, b"FT") != b"Tx":
-                continue
-            rm = re.search(
-                rb"/Rect\s*\[\s*([\d.+-]+)\s+([\d.+-]+)\s+([\d.+-]+)"
-                rb"\s+([\d.+-]+)\s*\]", ad)
-            if not rm:
-                continue
-            val = self._dict_str(ad, b"V", anum)
-            if val is None:
-                continue
-            x0, y0, x1, y1 = (float(rm.group(i)) for i in range(1, 5))
-            name = self._dict_str(ad, b"T", anum)
-            if name is not None:
-                val = f"{name}: {val}"
-            if val:
-                fields.append((min(x0, x1), min(y0, y1), val))
-        return fields
 
 
 # Adobe Glyph List subset — the names real producers put in
@@ -1169,7 +1059,7 @@ _TOK_RE = re.compile(
     _LIT + r"""                # literal string
       | <[0-9A-Fa-f\s]*>       # hex string (whitespace allowed inside)
       | \[ | \]
-      | /[A-Za-z0-9]+
+      | """ + _NAME + r"""
       | [-+]?\d*\.?\d+
       | [A-Za-z'*"]+
     """,
@@ -1332,17 +1222,12 @@ def _apply_rotation(runs, figures, rot: int, media: tuple):
     return runs, out_figs
 
 
-# container-stream types whose bodies are NOT page content — the
-# positional fallback must never tokenize them
-_CONTAINER_TYPE_RE = re.compile(rb"/Type\s*/(ObjStm|XRef)\b")
-
-
 def _stream_contents(data: bytes):
     """Decoded (/Filter chain applied) content string per stream — the
     positional fallback path (no xref needed).  Corrupt or unsupported
     (image-only) filters skip the stream deterministically."""
     for sdict, raw in _stream_segments(data):
-        if _CONTAINER_TYPE_RE.search(sdict):
+        if sdict.get("Type") in ("ObjStm", "XRef"):
             continue  # object/xref container, not page content
         try:
             yield _decode_stream_body(sdict, raw).decode("latin-1")
@@ -1365,7 +1250,7 @@ _CS_COMPONENTS = {"G": 1, "DeviceGray": 1, "RGB": 3, "DeviceRGB": 3,
 #: word.  A word is an operator only where a token can start: at stream
 #: start or after a PDF delimiter or whitespace (``5BI`` is none).
 _SCAN_RE = re.compile(
-    _LIT + r"|<<|>>|<[^>]*>?|/[A-Za-z0-9]*"
+    _LIT + r"|<<|>>|<[^>]*>?|" + _NAME +
     r"""|(?<![^ \t\r\n\f\x00()<>\[\]{}/%])[A-Za-z][A-Za-z'"*]*""")
 
 
@@ -1459,7 +1344,7 @@ def _strip_artifacts(content: str) -> str:
             pass  # a string, or anything inside a dict
         elif t[0] == "/":
             if first_operand is None:
-                first_operand, operand_pos = t[1:], m.start()
+                first_operand, operand_pos = _name_of(t), m.start()
         else:
             if t in ("BDC", "BMC"):
                 if art_depth:
@@ -1557,18 +1442,14 @@ def _parse_content(content, runs, figures, cfg, fonts=None, xobjs=None,
                 stack.append(s)
             continue
         if t.startswith("<"):
-            # hex string: whitespace ignored, odd length padded with 0
-            hx = re.sub(r"\s", "", t[1:-1])
-            if len(hx) % 2:
-                hx += "0"
-            s = decode_str(bytes.fromhex(hx).decode("latin-1"))
+            s = decode_str(_hex_bytes(t[1:-1]).decode("latin-1"))
             if arr is not None:
                 arr.append(s)
             else:
                 stack.append(s)
             continue
         if t.startswith("/"):
-            last_name = t[1:]  # remembered for Tf (font selection)
+            last_name = _name_of(t)  # remembered for Tf and Do
             continue
         if t[0] in "-+.0123456789":  # _TOK_RE guarantees a valid number here
             v = float(t)
@@ -1989,7 +1870,7 @@ def _stream_obj(content: str, compress: bool | str) -> str:
     body = content.encode("latin-1")
     for name in reversed(names):
         body = (zlib.compress(body) if name == "FlateDecode"
-                else ENCODERS[name.encode("ascii")](body))
+                else ENCODERS[name](body))
     filt = (f"/{names[0]}" if len(names) == 1
             else "[" + " ".join("/" + n for n in names) + "]")
     return (f"<< /Length {len(body)} /Filter {filt} >>\nstream\n"

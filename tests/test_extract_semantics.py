@@ -847,6 +847,25 @@ def test_type0_cid_font_decodes_via_tounicode():
     texts = "\n".join(t for _, t, _ in base)
     assert "ünïcode héllo wörld çontent" in texts, base
 
+    # one name rule (PDF 32000 §7.3.5) in the font table and in Tf:
+    # every regular character counts, and #xx stands for a byte
+    import re
+
+    from ocr_spark.functions.pdfx import _Doc, _stream_obj
+    doc = write_pdf_pages([p1, p2], type0=True)
+    for name in ("T1_0", "F1.0", "F#31"):
+        objs = {}
+        for page, content in ((3, 4), (5, 6)):
+            objs[page] = re.search(rb"\n%d 0 obj\n(.*?)\nendobj" % page, doc,
+                                   re.DOTALL).group(1).replace(
+                b"/F1 ", f"/{name} ".encode())
+            objs[content] = _stream_obj(
+                _Doc(doc).obj(content)[1].decode("latin-1").replace(
+                    "/F1 ", f"/{name} "), False).encode("latin-1")
+        got = [(b.kind, b.text, b.page)
+               for b in extract_pdf_blocks(_update(doc, objs))]
+        assert got == base, (name, got)
+
 
 def test_type0_equals_plain_for_ascii():
     """For latin-1-representable text the Type0 rendering is a pure
@@ -1600,6 +1619,65 @@ def test_pdf_inherited_resources_and_hybrid_xref():
     assert fb != base
 
 
+def _update(pdf: bytes, objs: dict[int, bytes]) -> bytes:
+    """``pdf`` with ``objs`` (object number → body) appended as an
+    incremental update: the objects, a classic xref section naming them
+    and a trailer chained by /Prev, so every earlier offset stays
+    valid."""
+    import re
+
+    from ocr_spark.functions.pdfx import _Doc
+
+    out, offs = bytearray(pdf), {}
+    for num, body in objs.items():
+        offs[num] = len(out)
+        out += b"%d 0 obj\n%s\nendobj\n" % (num, body)
+    xref = len(out)
+    out += b"xref\n" + b"".join(b"%d 1\n%010d 00000 n \n" % (n, o)
+                                for n, o in offs.items())
+    size = max(max(_Doc(pdf).xref), *objs) + 1
+    prev = int(re.findall(rb"startxref\s+(\d+)", pdf)[-1])
+    out += (b"trailer\n<< /Size %d /Root 1 0 R /Prev %d >>\n"
+            b"startxref\n%d\n%%%%EOF\n" % (size, prev, xref))
+    return bytes(out)
+
+
+def test_indirect_resource_values_resolve():
+    """/Font, /XObject and /Annots given as indirect objects (an
+    incremental update re-emits the page to point at them) extract the
+    same blocks as the direct-dict twin."""
+    import re
+
+    from ocr_spark.functions.pdfx import _Doc, extract_pdf_blocks, write_pdf_pages
+
+    pages = [[{"kind": "text", "x": 72, "y": 700,
+               "lines": ["indirect resources body", "second line here"]},
+              {"kind": "link", "x": 72, "y": 600, "w": 90,
+               "uri": "https://example.org/ind"},
+              {"kind": "field", "x": 72, "y": 560, "name": "who",
+               "value": "filled value"}]]
+    for kw in ({"type0": True}, {"form_xobject": True}):
+        doc = write_pdf_pages(pages, **kw)
+        page = re.search(rb"\n3 0 obj\n(.*?)\nendobj", doc,
+                         re.DOTALL).group(1)
+        objs, num = {}, max(_Doc(doc).xref) + 1
+        for key in (b"/Font ", b"/XObject ", b"/Annots "):
+            m = re.search(re.escape(key) + rb"(<<[^<>]*>>|\[[^\]]*\])", page)
+            if m:
+                objs[num] = m.group(1)
+                page = page.replace(m.group(0), key + b"%d 0 R" % num)
+                num += 1
+        objs[3] = page
+        assert len(objs) == 3, (kw, objs)
+        want = [(b.kind, b.text, b.uri) for b in extract_pdf_blocks(doc)]
+        got = [(b.kind, b.text, b.uri)
+               for b in extract_pdf_blocks(_update(doc, objs))]
+        assert got == want, (kw, got)
+        assert ("link", "", "https://example.org/ind") in want
+        assert any("indirect resources body" in t for _, t, _ in want)
+        assert any("who: filled value" in t for _, t, _ in want)
+
+
 #: PDF syntax the token-insertion fuzz drops into content streams: bad
 #: and overflowing octal escapes, nested and unbalanced parens, inline
 #: images, artifact marked content and dict brackets
@@ -1623,7 +1701,7 @@ def _insert_tokens(pdf: bytes, rng) -> bytes:
     doc = _Doc(pdf)
     nums = [n for n, ent in sorted(doc.xref.items()) if ent[0] == "n"
             and (o := doc.obj(n))[1] is not None
-            and not re.search(rb"/Type\s*/(XRef|ObjStm)", o[0])]
+            and o[0].get("Type") not in ("XRef", "ObjStm")]
     num = rng.choice(nums)
     d, body = doc.obj(num)
     s = _decode_stream_body(d, body).decode("latin-1")
@@ -1631,6 +1709,8 @@ def _insert_tokens(pdf: bytes, rng) -> bytes:
         i = rng.choice([k for k, c in enumerate(s) if c.isspace()] or [0])
         s = f"{s[:i]} {rng.choice(_FUZZ_TOKENS)} {s[i:]}"
     body = s.encode("latin-1")
+    off = doc.xref[num][1]  # the stream's dict as written
+    d = pdf[pdf.index(b"<<", off):pdf.index(b"stream", off)].rstrip()
     d = re.sub(rb"/Filter\s*(/\w+|\[[^\]]*\])|/Length\s+\d+(\s+\d+\s+R)?",
                b"", d)
     obj = b"%d 0 obj\n<< /Length %d %s\nstream\n%s\nendstream\nendobj\n" % (
@@ -1649,7 +1729,8 @@ def test_pdf_corruption_never_raises():
     Covers every writer layout at once, plus xref tables whose
     subsection headers claim absurd entry counts (must not hang), plus
     1,000 seeded insertions of hostile PDF syntax into content streams
-    (_FUZZ_TOKENS), under both ``keep_artifacts`` settings."""
+    (_FUZZ_TOKENS), under both ``keep_artifacts`` settings, plus a
+    megabyte of dict or array nesting."""
     import random
 
     from ocr_spark.config import ExtractConfig
@@ -1683,6 +1764,16 @@ def test_pdf_corruption_never_raises():
     assert bad != doc
     extract_pdf_blocks(bad)  # must return promptly, not iterate 2^31
 
+    # a megabyte of nesting ends the object parse at its depth cap (no
+    # recursion, no list per level); the positional fallback then moves
+    # on past it
+    from ocr_spark.functions.pdfx import _MAX_NESTING, _parse
+    for opener in (b"[", b"<<"):
+        deep = opener * (1 << 20)
+        assert _parse(deep, 0) == (None, len(opener) * (_MAX_NESTING + 1))
+        frag = deep + b" >>\nstream\nBT 1 0 0 1 72 400 Tm (deep) Tj ET\nendstream"
+        assert [b.text for b in extract_pdf_blocks(frag)] == ["deep"]
+
     bases = [s["text"].encode("latin-1") for d in make_docs(
         60, seed=6, compress_every=2, xref_every=3, type0_every=5,
         form_every=4, artifact_every=3, pdf_link_every=2, field_every=4,
@@ -1702,6 +1793,8 @@ def test_one_literal_string_rule():
     parens balanced three deep) and one unescaper (octal is 1–3 digits
     0–7 with overflow above \\377 ignored; any other escaped char
     stands for itself)."""
+    import zlib
+
     from ocr_spark.functions.pdfcrypt import encrypt_pdf_rc4
     from ocr_spark.functions.pdfx import (_Doc, _lit_bytes, _strip_artifacts,
                                           _unescape, extract_pdf_blocks,
@@ -1714,6 +1807,8 @@ def test_one_literal_string_rule():
     # the str path and the bytes path agree
     assert _unescape(r"\101\8\400\18") == "A8\x00\x018"
     assert _lit_bytes(rb"(\101\8\400\18)") == b"A8\x00\x018"
+    # \b and \f; a backslash before LF, CR or CRLF joins the lines
+    assert _unescape("\\b\\f|a\\\nb|c\\\rd|e\\\r\nf") == "\b\f|ab|cd|ef"
 
     # nested parens: one string, not its innermost part
     pdf = swap(write_pdf([{"kind": "text", "x": 72, "y": 700,
@@ -1731,11 +1826,27 @@ def test_one_literal_string_rule():
     pages = [[{"kind": "text", "x": 72, "y": 700, "lines": ["body"]}]]
     pdf = swap(write_pdf_pages(pages, outlines=["aXYb"]),
                b"(aXYb)", b"(a\\\nb)")
-    assert _Doc(pdf).outline_titles() == ["a\nb"]
+    assert _Doc(pdf).outline_titles() == ["ab"]
     pdf = swap(write_pdf_pages(pages, outlines=["ABCDEFGHIJKLM"]),
                b"ABCDEFGHIJKLM", rb"\101\8\400\18")
     for doc in (pdf, encrypt_pdf_rc4(pdf)):
         assert _Doc(doc).outline_titles() == ["A8\x00\x018"]
+
+    # a dict delimiter inside a string is part of the string: in a
+    # bookmark title, a field value, and a raw fragment's stream dict
+    # (there a 'stream' keyword inside a string is no keyword either)
+    titles = ["first", "a >> b", "third"]
+    pdf = write_pdf_pages(pages, outlines=titles)
+    assert _Doc(pdf).outline_titles() == titles
+    pdf = write_pdf([{"kind": "field", "x": 72, "y": 640, "name": "f",
+                      "value": "x >> y"}])
+    assert [b.text for b in extract_pdf_blocks(pdf)] == ["f: x >> y"]
+    body = zlib.compress(b"BT 1 0 0 1 72 700 Tm (hello there) Tj ET")
+    for note in (b"(a >> b)", b"(a stream\nb)"):
+        frag = (b"1 0 obj\n<< /Length %d /Filter /FlateDecode /Note %s >>"
+                b"\nstream\n%s\nendstream\nendobj\n" % (len(body), note, body))
+        assert [b.text for b in extract_pdf_blocks(frag)] == [
+            "hello there"], note
 
     # the artifact scan reads operator words, not any letter after a
     # delimiter (a latin-1 letter there used to raise)
@@ -2029,32 +2140,36 @@ def test_pdf_rc4_tampered_u_entry_is_skipped():
 
 
 def test_rc4_corpus_twin_extracts_identically():
-    """``rc4_every`` writes REALLY-encrypted PDF payloads (standard
-    security handler, empty user password); the extractor must DECRYPT
-    them so the corpus extracts span-for-span identically to the
-    rc4-off twin — unlike ``encrypted_every`` (unknown key), which must
-    yield zero spans."""
+    """``rc4_every`` (and likewise ``aes_every``) writes REALLY-encrypted
+    PDF payloads (standard security handler, empty user password); the
+    extractor must DECRYPT them — content streams and every dict string:
+    link URIs, field values, bookmark titles — so the corpus extracts
+    span-for-span identically to the encryption-off twin, unlike
+    ``encrypted_every`` (unknown key), which must yield zero spans."""
     from ocr_spark.functions.pdfx import extract_pdf_blocks
     from ocr_spark.sources.corpus import make_docs
 
-    plain = make_docs(40, seed=7)
-    enc = make_docs(40, seed=7, rc4_every=3)
-    n_enc = 0
-    for dp, de in zip(plain, enc):
-        for sp, se in zip(dp["spans"], de["spans"]):
-            if sp["kind"] != "pdf_bytes":
-                assert sp == se
-                continue
-            if sp["text"] == se["text"]:
-                continue
-            n_enc += 1
-            assert b"/Encrypt" in se["text"].encode("latin-1")
-            bp = [(b.kind, b.text)
-                  for b in extract_pdf_blocks(sp["text"].encode("latin-1"))]
-            be = [(b.kind, b.text)
-                  for b in extract_pdf_blocks(se["text"].encode("latin-1"))]
-            assert bp == be, dp["doc_id"]
-    assert n_enc > 0, "rc4 knob never fired"
+    knobs = {"pdf_link_every": 1, "field_every": 1, "outline_every": 1}
+    plain = make_docs(40, seed=7, **knobs)
+    for knob in ("rc4_every", "aes_every"):
+        enc = make_docs(40, seed=7, **{knob: 3}, **knobs)
+        n_enc = n_links = 0
+        for dp, de in zip(plain, enc):
+            for sp, se in zip(dp["spans"], de["spans"]):
+                if sp["kind"] != "pdf_bytes":
+                    assert sp == se
+                    continue
+                if sp["text"] == se["text"]:
+                    continue
+                n_enc += 1
+                assert b"/Encrypt" in se["text"].encode("latin-1")
+                bp = [(b.kind, b.text, b.uri) for b in
+                      extract_pdf_blocks(sp["text"].encode("latin-1"))]
+                be = [(b.kind, b.text, b.uri) for b in
+                      extract_pdf_blocks(se["text"].encode("latin-1"))]
+                assert bp == be, (knob, dp["doc_id"])
+                n_links += sum(b[0] == "link" for b in bp)
+        assert n_enc > 0 and n_links > 0, f"{knob} never fired"
 
 
 def test_aes_fips197_known_answers():

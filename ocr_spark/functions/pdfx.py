@@ -17,13 +17,17 @@ Supported PDF subset (documented per SURVEY.md §7 "hard parts"):
     top-level keys are visible (a nested value is reached through its
     dict).  No nesting depth recurses; junk (an unknown keyword, a
     closer that closes nothing, truncation) ends the parse with no
-    value — a missing key, never an exception
+    value — a missing key, never an exception.  Stream bodies are
+    kept as file offsets and sliced (and decrypted) only when read, so
+    an image XObject's body is never read at all
   - names ``/…``, one rule (``_NAME`` + ``_name_of``) for objects and
     content streams: every regular character of §7.3.5 (``/T1_0``,
     ``/F1.0``), ``#xx`` escapes decoded (``/F#31`` is ``/F1``)
   - content streams (``stream ... endstream``), raw or /FlateDecode
-    (zlib) per the stream object's own /Filter dict entry; a direct
-    /Length slices the body exactly, else endstream-scan fallback
+    (zlib) per the stream object's own /Filter dict entry; a /Length
+    followed by ``endstream`` slices the body exactly, else it runs to
+    the next ``endstream`` less one end of line (``_body_span``, for
+    the structured parse and the positional fallback alike)
   - STRUCTURED (xref-driven) document parse: startxref → classic xref
     tables AND PDF 1.5+ cross-reference streams (/Type /XRef, /W field
     widths, /Index subsections, /Prev chains, PNG predictors 10–15 via
@@ -216,6 +220,10 @@ _CONST = {b"true": True, b"false": False, b"null": None}
 #: open containers past which an object is junk: real producers nest a
 #: handful of levels, and every open level holds memory
 _MAX_NESTING = 100
+#: a run of openers, skipped at once when the nesting cap is hit, so a
+#: megabyte of ``<<`` costs one regex match, not a token per opener
+#: (possessive: the run never backtracks)
+_OPEN_RUN_RE = re.compile(rb"(?:<<|\[|\s)*+")
 
 
 class Ref(NamedTuple):
@@ -232,7 +240,8 @@ def _parse(data: bytes, pos: int, dec=None) -> tuple:
     other than R, true, false and null, a ``>>`` or ``]`` that closes
     nothing, nesting deeper than _MAX_NESTING, or the end of the data
     ends the parse with value None: junk yields a missing key, never an
-    exception."""
+    exception.  At the nesting cap ``end`` lies past the whole run of
+    openers."""
     stack: list[list] = []     # items of each open container
     opens: list[bytes] = []    # its opening token, b"<<" or b"["
     for m in _OBJ_TOK_RE.finditer(data, pos):
@@ -240,7 +249,7 @@ def _parse(data: bytes, pos: int, dec=None) -> tuple:
         c = t[:1]
         if t == b"<<" or t == b"[":
             if len(stack) == _MAX_NESTING:
-                return None, m.end()
+                return None, _OPEN_RUN_RE.match(data, m.start()).end()
             stack.append([])
             opens.append(t)
             continue
@@ -304,15 +313,32 @@ _STREAM_AT_RE = re.compile(rb"\s*stream\r?\n")
 _ENDSTREAM_RE = re.compile(rb"\s*endstream")
 
 
+def _body_span(data: bytes, start: int, n) -> tuple | None:
+    """(start, end) of the stream body that begins at ``start``.  A
+    /Length ``n`` followed by the ``endstream`` keyword slices it
+    exactly (robust to 'endstream' bytes inside compressed payloads);
+    otherwise the body runs to the next ``endstream`` less one end of
+    line.  None when no ``endstream`` follows."""
+    if type(n) is int and 0 <= n <= len(data) - start \
+            and _ENDSTREAM_RE.match(data, start + n):
+        return start, start + n
+    end = data.find(b"endstream", start)
+    if end < 0:
+        return None
+    if data.endswith(b"\r\n", start, end):
+        end -= 2
+    elif data.endswith((b"\n", b"\r"), start, end):
+        end -= 1
+    return start, end
+
+
 def _stream_segments(data: bytes):
     """Yield (stream dict, body) per stream — the positional fallback,
     which needs no xref.  The object parser reads each ``<<`` from the
     cursor on, and a parsed dict skips every ``<<`` nested in it (and
     every ``stream`` inside its strings); a dict followed by the
     ``stream`` keyword is that stream's.  A keyword with no dict before
-    it gets ``{}``.  A direct /Length slices the body exactly (robust
-    to 'endstream' bytes inside compressed payloads); otherwise the
-    body runs to the next ``endstream`` keyword.
+    it gets ``{}``.  A direct /Length bounds the body (see _body_span).
 
     The cursor always advances PAST the consumed body: 'stream\\n' byte
     sequences INSIDE a previous stream's payload are never keyword
@@ -331,23 +357,12 @@ def _stream_segments(data: bytes):
                     m = _STREAM_KW_RE.search(data, pos)
                 continue
             start = sm.end()
-        n, body = _int(d.get("Length")), None
-        if n is not None and 0 <= n <= len(data) - start \
-                and _ENDSTREAM_RE.match(data, start + n):
-            body = data[start:start + n]
-            pos = data.find(b"endstream", start + n) + len(b"endstream")
-        elif (em := data.find(b"endstream", start)) >= 0:
-            body = data[start:em]
-            if body.endswith(b"\r\n"):
-                body = body[:-2]
-            elif body.endswith((b"\n", b"\r")):
-                body = body[:-1]
-            pos = em + len(b"endstream")
-        else:
-            pos = start
+        span = _body_span(data, start, d.get("Length"))
+        pos = (start if span is None else
+               data.find(b"endstream", span[1]) + len(b"endstream"))
         m = _STREAM_KW_RE.search(data, pos)
-        if body is not None:
-            yield d, body
+        if span is not None:
+            yield d, data[span[0]:span[1]]
 
 
 # ---------------------------------------------------------------------------
@@ -510,10 +525,10 @@ class _Doc:
         return self._resolve(td.get("Prev"), int)
 
     def _load_xref_stream(self, off: int) -> int | None:
-        d, body = self._parse_obj_at(off)
-        if not isinstance(d, dict) or body is None or d.get("Type") != "XRef":
+        d, span = self._parse_obj_at(off)
+        if span is None or d.get("Type") != "XRef":
             raise ValueError("startxref does not point at an xref section")
-        raw = _decode_stream_body(d, body)
+        raw = _decode_stream_body(d, self._body(span))
         W = self._resolve(d.get("W"), list) or []
         if len(W) < 3 or not all(type(w) is int and w >= 0 for w in W) \
                 or not 0 < sum(W) <= 64:
@@ -617,38 +632,42 @@ class _Doc:
 
     # -- objects ------------------------------------------------------------
     def _parse_obj_at(self, off: int):
-        """(value, stream body|None) of the object at ``off``.  Once the
-        file key is verified, every string and the stream body are
-        decrypted with the object's key — except in a cross-reference
-        stream, which must be readable before any key exists (PDF 32000
-        §7.5.8.2).  On disk the order is encrypt(flate(data)), so the
-        body is decrypted here, before _decode_stream_body."""
+        """(value, body span|None) of the object at ``off``.  Once the
+        file key is verified, every string is decrypted with the
+        object's key — except in a cross-reference stream, which must be
+        readable before any key exists (PDF 32000 §7.5.8.2).  A stream's
+        span is (start, end, key): where its body lies in the file, and
+        the (num, gen) whose object key decrypts it, None for plaintext
+        (see _body)."""
         data = self.data
         m = _OBJ_AT_RE.match(data, off)
         if not m:
             return None, None
-        num, gen = int(m.group(1)), int(m.group(2))
-        dec = None
+        key = dec = None
         if self.crypt_key is not None:
+            key = int(m.group(1)), int(m.group(2))
+
             def dec(s: bytes) -> bytes:
-                return self._decrypt_payload(s, num, gen)
+                return self._decrypt_payload(s, *key)
         d, pos = _parse(data, m.end(), dec)
-        if dec is not None and isinstance(d, dict) and d.get("Type") == "XRef":
-            dec = None
+        if key is not None and isinstance(d, dict) and d.get("Type") == "XRef":
+            key = None
             d, pos = _parse(data, m.end())
         sm = _STREAM_AT_RE.match(data, pos) if isinstance(d, dict) else None
-        if not sm:
-            return d, None
-        start = sm.end()
-        length = self._resolve(d.get("Length"), int)
-        if length is not None and 0 <= length <= len(data) - start:
-            body = data[start:start + length]
-        else:
-            em = data.find(b"endstream", start)
-            if em < 0:
-                return d, None
-            body = data[start:em].rstrip(b"\r\n")
-        return d, body if dec is None else dec(body)
+        span = sm and _body_span(data, sm.end(),
+                                 self._resolve(d.get("Length"), int))
+        return d, span and (*span, key)
+
+    def _body(self, span) -> bytes | None:
+        """The stream body at ``span`` (see _parse_obj_at).  Sliced on
+        demand, so the object cache holds no body; on disk the order is
+        encrypt(flate(data)), so it is decrypted here, before
+        _decode_stream_body."""
+        if span is None:
+            return None
+        start, end, key = span
+        body = self.data[start:end]
+        return body if key is None else self._decrypt_payload(body, *key)
 
     def _decrypt_payload(self, data: bytes, num: int, gen: int) -> bytes:
         """Per-object decrypt under the verified file key: RC4 with the
@@ -671,18 +690,18 @@ class _Doc:
         out = self._objstm_cache[num] = {}  # a stream reaching itself reads empty
         ent = self.xref.get(num)
         if ent and ent[0] == "n":
-            d, body = self._parse_obj_at(ent[1])
-            if body is not None and d.get("Type") == "ObjStm":
-                raw = _decode_stream_body(d, body)
+            d, span = self._parse_obj_at(ent[1])
+            if span is not None and d.get("Type") == "ObjStm":
+                raw = _decode_stream_body(d, self._body(span))
                 first = self._resolve(d.get("First"), int) or 0
                 header = [int(x) for x in raw[:first].split()]
                 for onum, ooff in zip(header[::2], header[1::2]):
                     out[onum] = _parse(raw, first + ooff)[0]
         return out
 
-    def obj(self, num: int):
-        """(value, stream body|None) of object ``num``, parsed once;
-        None when the xref has no entry for it."""
+    def _entry(self, num: int):
+        """(value, body span|None) of object ``num``, parsed once; None
+        when the xref has no entry for it."""
         ent = self.xref.get(num)
         if ent is None:
             return None
@@ -693,13 +712,20 @@ class _Doc:
             self._objs[num] = self._parse_obj_at(ent[1])
         return self._objs[num]
 
-    def _resolve(self, v, typ=object):
+    def obj(self, num: int):
+        """(value, stream body|None) of object ``num``; None when the
+        xref has no entry for it."""
+        o = self._entry(num)
+        return o and (o[0], self._body(o[1]))
+
+    def _resolve(self, v, typ=None):
         """``v``, or the value of the object it refers to when it is a
-        Ref; None unless that is a ``typ``."""
+        Ref; None unless that is exactly a ``typ`` (so no bool reads as
+        an int)."""
         if isinstance(v, Ref):
-            o = self.obj(v.num)
+            o = self._entry(v.num)
             v = o[0] if o else None
-        return v if isinstance(v, typ) else None
+        return v if typ is None or type(v) is typ else None
 
     def _stream(self, v) -> tuple | None:
         """(dict, raw body) of the stream object ``v`` refers to, else
@@ -739,14 +765,15 @@ class _Doc:
             return xobjs
         for name, ref in (self._resolve(res.get("XObject"), dict)
                           or {}).items():
-            xo = self._stream(ref)
-            sub = xo[0].get("Subtype") if xo else None
+            # the stream's dict tells an image: its body is never read
+            o = self._entry(ref.num) if isinstance(ref, Ref) else None
+            sub = o[0].get("Subtype") if o and o[1] else None
             if sub == "Image":
                 xobjs[name] = ("image",)
             elif sub == "Form":
-                fres = self._resolve(xo[0].get("Resources"), dict) or {}
-                xobjs[name] = ("form",
-                               _decode_stream_body(*xo).decode("latin-1"),
+                fres = self._resolve(o[0].get("Resources"), dict) or {}
+                body = _decode_stream_body(o[0], self._body(o[1]))
+                xobjs[name] = ("form", body.decode("latin-1"),
                                self._page_fonts(fres),
                                self._page_xobjects(fres, depth + 1))
         return xobjs
@@ -824,8 +851,9 @@ class _Doc:
             # indirect) concatenated
             cont = d.get("Contents")
             parts: list[bytes] = []
-            for ref in (self._resolve(cont, list)
-                        or ([cont] if cont is not None else [])):
+            arr = self._resolve(cont, list)
+            for ref in (arr if arr is not None else
+                        [cont] if cont is not None else []):
                 c = self._stream(ref)
                 if c is None:
                     raise ValueError(f"missing content stream {ref}")

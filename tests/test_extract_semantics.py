@@ -1677,6 +1677,25 @@ def test_indirect_resource_values_resolve():
         assert any("indirect resources body" in t for _, t, _ in want)
         assert any("who: filled value" in t for _, t, _ in want)
 
+    # a blank page whose /Contents is an empty array, direct or through
+    # a reference, keeps the structured parse: the other page still
+    # decodes its Type0 text and keeps its link
+    doc = write_pdf_pages([[{"kind": "text", "x": 72, "y": 700,
+                             "lines": ["blank this page", "x"]}],
+                           pages[0][:2]], type0=True)
+    page = re.search(rb"\n3 0 obj\n(.*?)\nendobj", doc, re.DOTALL).group(1)
+    assert b"/Contents 4 0 R" in page
+    want = [(b.kind, b.text, b.uri, b.page)
+            for b in extract_pdf_blocks(doc) if b.page == 1]
+    assert ("link", "", "https://example.org/ind", 1) in want
+    num = max(_Doc(doc).xref) + 1
+    for objs in ({3: page.replace(b"/Contents 4 0 R", b"/Contents []")},
+                 {3: page.replace(b"/Contents 4 0 R", b"/Contents %d 0 R" % num),
+                  num: b"[]"}):
+        got = [(b.kind, b.text, b.uri, b.page)
+               for b in extract_pdf_blocks(_update(doc, objs))]
+        assert got == want, (objs, got)
+
 
 #: PDF syntax the token-insertion fuzz drops into content streams: bad
 #: and overflowing octal escapes, nested and unbalanced parens, inline
@@ -1765,12 +1784,13 @@ def test_pdf_corruption_never_raises():
     extract_pdf_blocks(bad)  # must return promptly, not iterate 2^31
 
     # a megabyte of nesting ends the object parse at its depth cap (no
-    # recursion, no list per level); the positional fallback then moves
-    # on past it
-    from ocr_spark.functions.pdfx import _MAX_NESTING, _parse
+    # recursion, no list per level) and skips the rest of the run of
+    # openers in one step; the positional fallback then moves on past it
+    from ocr_spark.functions.pdfx import _parse
     for opener in (b"[", b"<<"):
         deep = opener * (1 << 20)
-        assert _parse(deep, 0) == (None, len(opener) * (_MAX_NESTING + 1))
+        assert _parse(deep, 0) == (None, len(deep))
+        assert _parse(b"<< /A " + deep + b"/B", 0) == (None, 6 + len(deep))
         frag = deep + b" >>\nstream\nBT 1 0 0 1 72 400 Tm (deep) Tj ET\nendstream"
         assert [b.text for b in extract_pdf_blocks(frag)] == ["deep"]
 

@@ -21,7 +21,6 @@ class ExtractConfig:
     html_heading_min_words: int = 3         # ... unless it is a heading with >= this
 
     # ---- PDF layout classification (line-density + bbox heuristics) ----
-    page_height: float = 792.0              # US-letter default MediaBox
     header_footer_band: float = 0.10        # top/bottom 10% of page
     block_gap: float = 20.0                 # y-gap (pt) that starts a new block
     table_min_lines: int = 2                # a table block has >= this many lines

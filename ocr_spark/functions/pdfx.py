@@ -23,11 +23,17 @@ Supported PDF subset (documented per SURVEY.md §7 "hard parts"):
   - names ``/…``, one rule (``_NAME`` + ``_name_of``) for objects and
     content streams: every regular character of §7.3.5 (``/T1_0``,
     ``/F1.0``), ``#xx`` escapes decoded (``/F#31`` is ``/F1``)
-  - content streams (``stream ... endstream``), raw or /FlateDecode
-    (zlib) per the stream object's own /Filter dict entry; a /Length
+  - streams (``stream ... endstream``) decoded through their own
+    /Filter chain (``_decode_stream_body``: Flate, LZW, ASCII85,
+    ASCIIHex, RunLength, PNG predictors; ``pdffilters``); a /Length
     followed by ``endstream`` slices the body exactly, else it runs to
     the next ``endstream`` less one end of line (``_body_span``, for
     the structured parse and the positional fallback alike)
+  - content streams are read by ``_parse_content`` in ONE walk of the
+    object parser's token grammar (``_TOKEN``, as str): strings, names,
+    numbers, arrays and operators; ``%`` comments run to the end of the
+    line; a dict (a marked-content property list) changes nothing, and
+    ``true``/``false``/``null`` are never operators
   - STRUCTURED (xref-driven) document parse: startxref → classic xref
     tables AND PDF 1.5+ cross-reference streams (/Type /XRef, /W field
     widths, /Index subsections, /Prev chains, PNG predictors 10–15 via
@@ -67,16 +73,20 @@ Supported PDF subset (documented per SURVEY.md §7 "hard parts"):
     stream so document order never interleaves pages
   - path ops ``x y w h re`` followed by ``f``/``S``/``B`` outside BT..ET
     are figure regions (drawings)
-  - inline images ``BI <dict> ID <binary> EI``: the binary payload is
-    stripped before tokenizing (its bytes would otherwise parse as
-    phantom strings/operators) and the image becomes a figure region
-    placed by the current ``cm`` matrix (the ``q w 0 0 h x y cm BI…EI Q``
-    producer idiom)
+  - inline images ``BI <dict> ID <binary> EI``: the walk reads the
+    dict and jumps past the binary payload (its bytes would otherwise
+    parse as phantom strings/operators), and the image becomes a figure
+    region placed by the current ``cm`` matrix (the ``q w 0 0 h x y cm
+    BI…EI Q`` producer idiom)
+  - marked content: an ``/Artifact`` BMC/BDC … matching EMC span
+    (running headers/footers, page numbers, watermarks; §14.8.2.2) is
+    not main content and changes nothing unless cfg.keep_artifacts
   - XObjects via ``/Name Do`` (structured-parse path, classic layout):
     /Subtype /Image → figure placed by the current ``cm``; /Subtype
     /Form → the form's content stream is tokenized recursively with the
-    FORM's own /Resources (fonts + nested XObjects, depth-bounded) and
-    its runs/figures translated by the ``cm`` translation — the
+    FORM's own /Resources (fonts + nested XObjects, depth-bounded; a
+    form already being built on the path is left out, so a cycle ends)
+    and its runs/figures translated by the ``cm`` translation — the
     letterhead/stamp/imposition layout real producers emit
   - page ``/Rotate`` 90/180/270 (inheritable, resolved down the page
     tree like /MediaBox): runs/figures are remapped into DISPLAY space
@@ -211,11 +221,13 @@ def _hex_bytes(body: str) -> bytes:
 # object parser (§7.3): one token grammar, one pass per object
 # ---------------------------------------------------------------------------
 
-# one token: literal string, dict or array delimiter, hex string, name,
-# number, keyword (R, true, obj, stream …) or comment
-_OBJ_TOK_RE = re.compile((
-    _LIT + r"|<<|>>|\[|\]|<[0-9A-Fa-f\s]*>|" + _NAME
-    + r"|[-+]?\d*\.?\d+|[A-Za-z]+|%[^\r\n]*").encode())
+# one token (§7.2): literal string, dict or array delimiter, hex string,
+# name, number, word (an operator, or a keyword: R, true, obj …) or
+# comment.  Objects read it as bytes, content streams as str.
+_TOKEN = (_LIT + r"|<<|>>|\[|\]|<[0-9A-Fa-f\s]*>|" + _NAME
+          + r"""|[-+]?\d*\.?\d+|[A-Za-z'*"]+|%[^\r\n]*""")
+_OBJ_TOK_RE = re.compile(_TOKEN.encode())
+_TOK_RE = re.compile(_TOKEN)
 _CONST = {b"true": True, b"false": False, b"null": None}
 #: open containers past which an object is junk: real producers nest a
 #: handful of levels, and every open level holds memory
@@ -276,10 +288,10 @@ def _parse(data: bytes, pos: int, dec=None) -> tuple:
                 del cur[-1]
                 cur[-1] = Ref(cur[-1])
             continue
-        elif c.isalpha():
-            return None, m.start()
-        else:
+        elif c in b"+-.0123456789":
             v = float(t) if b"." in t else int(t)
+        else:
+            return None, m.start()
         if not stack:
             return v, m.end()
         stack[-1].append(v)
@@ -370,6 +382,9 @@ def _stream_segments(data: bytes):
 # ---------------------------------------------------------------------------
 
 _OBJ_AT_RE = re.compile(rb"\s*(\d+)\s+(\d+)\s+obj\b")
+#: the US-Letter /MediaBox (W, H) in points: the page box where a
+#: document gives none, or gives one of zero height
+_LETTER = (612.0, 792.0)
 
 
 def _unpredict(data: bytes, predictor: int, columns: int) -> bytes:
@@ -750,18 +765,22 @@ class _Doc:
             raise ValueError("bad catalog")
         out: list[tuple] = []
         self._walk_pages(cat.get("Pages"), out, depth=0,
-                         rotate=0, media=(612.0, 792.0))
+                         rotate=0, media=_LETTER)
         if not out:
             raise ValueError("empty page tree")
         return out
 
-    def _page_xobjects(self, res: dict, depth: int = 0) -> dict:
+    def _page_xobjects(self, res: dict, path: tuple = ()) -> dict:
         """XObject resource name → ('form', content str, fonts, nested
         xobjects) for /Subtype /Form, or ('image',) for /Subtype /Image,
         from a page (or form) /Resources dict's /XObject table.  Forms
-        carry their own resources, so fonts/xobjects recurse (bounded)."""
+        carry their own resources, so fonts/xobjects recurse, at most 8
+        deep.  ``path`` holds the object numbers of the forms being
+        built: a form that reaches itself, directly or through other
+        forms, is left out there (its ``Do`` then draws nothing); else a
+        form listing itself under n names is built about n**8 times."""
         xobjs: dict[str, tuple] = {}
-        if depth > 8:
+        if len(path) > 8:
             return xobjs
         for name, ref in (self._resolve(res.get("XObject"), dict)
                           or {}).items():
@@ -770,12 +789,12 @@ class _Doc:
             sub = o[0].get("Subtype") if o and o[1] else None
             if sub == "Image":
                 xobjs[name] = ("image",)
-            elif sub == "Form":
+            elif sub == "Form" and ref.num not in path:
                 fres = self._resolve(o[0].get("Resources"), dict) or {}
                 body = _decode_stream_body(o[0], self._body(o[1]))
                 xobjs[name] = ("form", body.decode("latin-1"),
                                self._page_fonts(fres),
-                               self._page_xobjects(fres, depth + 1))
+                               self._page_xobjects(fres, (*path, ref.num)))
         return xobjs
 
     def _page_fonts(self, res: dict) -> dict:
@@ -823,7 +842,7 @@ class _Doc:
         return out
 
     def _walk_pages(self, node, out: list, depth: int,
-                    rotate: int = 0, media: tuple = (612.0, 792.0),
+                    rotate: int = 0, media: tuple = _LETTER,
                     res: dict | None = None):
         if node is None or depth > 32:
             return
@@ -1082,18 +1101,6 @@ def _structured_page_contents(
                 raise _EncryptedPdf from None
         return None
 
-# one token: PDF string (literal or hex), array, number, or operator name
-_TOK_RE = re.compile(
-    _LIT + r"""                # literal string
-      | <[0-9A-Fa-f\s]*>       # hex string (whitespace allowed inside)
-      | \[ | \]
-      | """ + _NAME + r"""
-      | [-+]?\d*\.?\d+
-      | [A-Za-z'*"]+
-    """,
-    re.VERBOSE,
-)
-
 
 def _pdf_text(s: str) -> str:
     """PDF text-string semantics: a string beginning with the UTF-16BE
@@ -1166,9 +1173,9 @@ def tokenize_pdf(data: bytes, cfg: ExtractConfig = DEFAULT) -> tuple[
     uri) — every consumer (group_lines/group_blocks) keys on page first
     and document order never interleaves pages.
 
-    Streams whose object dictionary declares ``/Filter /FlateDecode``
-    (the overwhelmingly common real-world encoding) are zlib-inflated
-    before tokenizing; raw streams are parsed as-is.
+    Each content stream is decoded through its own /Filter chain
+    (``_decode_stream_body``) before it is read; raw streams are read
+    as-is.
 
     Page discovery is STRUCTURED first (xref-driven — classic tables and
     PDF 1.5 xref/object streams, page order from the page tree), falling
@@ -1187,13 +1194,13 @@ def tokenize_pdf(data: bytes, cfg: ExtractConfig = DEFAULT) -> tuple[
         # (the doc still flows through lineage with 0 spans)
         return runs, figures, links, toc, heights
     if structured is None:
-        pages = [(content, {}, {}, 0, (612.0, 792.0), [], [])
+        pages = [(content, {}, {}, 0, _LETTER, [], [])
                  for content in _stream_contents(data)]
     else:
         pages, toc = structured
     for page, (content, fonts, xobjs, rot, media, lks,
                wdgs) in enumerate(pages):
-        r, f = _parse_content(content, [], [], cfg, fonts, xobjs)
+        r, f = _parse_content(content, cfg, fonts, xobjs)
         # filled form-field values render as positioned text runs (what
         # a viewer shows at the widget's rect) and flow through line /
         # block grouping like any other content
@@ -1263,134 +1270,68 @@ def _stream_contents(data: bytes):
             continue
 
 
-# Inline images (BI <dict> ID <binary> EI): the binary payload must be
-# removed BEFORE tokenizing — its bytes would otherwise parse as phantom
-# strings/numbers/operators.  Per spec EI follows whitespace; the dict
-# part never contains ID as a token.
-_BI_HEAD_RE = re.compile(r"BI\b(.*?)\bID[ \r\n]", re.DOTALL)
+# Inline images ``BI <dict> ID <binary> EI`` (§8.9.7): per spec EI
+# follows white space
 _EI_RE = re.compile(r"\sEI(?=[\s]|$)")
 #: inline-image /ColorSpace → component count (abbreviated names per
 #: PDF 32000 §8.9.7; unknown spaces fall back to the delimiter scan)
 _CS_COMPONENTS = {"G": 1, "DeviceGray": 1, "RGB": 3, "DeviceRGB": 3,
                   "CMYK": 4, "DeviceCMYK": 4}
-#: the strippers' scan: one match per literal string, ``<<``, ``>>``,
-#: hex string (an unterminated one runs to the end), name, or operator
-#: word.  A word is an operator only where a token can start: at stream
-#: start or after a PDF delimiter or whitespace (``5BI`` is none).
-_SCAN_RE = re.compile(
-    _LIT + r"|<<|>>|<[^>]*>?|" + _NAME +
-    r"""|(?<![^ \t\r\n\f\x00()<>\[\]{}/%])[A-Za-z][A-Za-z'"*]*""")
+#: words that are values, never operators
+_CONST_WORDS = ("true", "false", "null")
 
 
-def _strip_inline_images(content: str) -> str:
-    """Replace every ``BI <dict> ID <binary> EI`` with `` INLIMG ``.
+def _inline_image_end(content: str, it) -> int | None:
+    """Offset past the ``EI`` of the inline image whose ``BI`` was the
+    last token taken from ``it``; its binary payload must never
+    tokenize (the bytes would read as phantom strings and operators).
+    The end of ``content`` when no ``EI`` follows (a corrupt payload
+    drops the rest), None when an operator or the end comes before
+    ``ID`` (then ``BI`` is no image).
 
-    The binary payload can contain the three bytes `` EI `` by chance
-    (probability ≈ N/2^24 for an N-byte image — routinely hit at real
-    image sizes), so a pure delimiter scan truncates early and leaks
-    image bytes into the token stream as phantom operators.  When the
-    image dict declares uncompressed dimensions (/W /H /BPC, /CS or
-    grayscale default, no /F filter), the payload length is COMPUTED
-    (ceil(W·BPC·components/8)·H) and the EI scan starts after it; dicts
-    with filters/unknown spaces keep the delimiter-scan fallback.
-
-    The scan walks ``_SCAN_RE`` tokens, so literal and hex strings are
-    opaque: prose like ``(the BI dashboard shows user ID 123) Tj`` is
-    never mistaken for an image header (a text-only page would lose its
-    entire remainder).  BI is only recognized as an operator word."""
-    if "BI" not in content:
-        return content
-    out = []
-    pos = i = 0  # start of not-yet-emitted text; scan cursor
-    n = len(content)
-    while (m := _SCAN_RE.search(content, i)) is not None:
-        i = m.end()
-        h = (_BI_HEAD_RE.match(content, m.start())
-             if content.startswith("BI", m.start()) else None)
-        if h is None:
-            continue
-        d = h.group(1)
-        data_start = scan_from = h.end()
-        if "/F" not in d:  # no filter → raw samples, length computable
-            def _num(key):
-                km = re.search(rf"/(?:{key})\s+(\d+)", d)
-                return int(km.group(1)) if km else None
-            wm, hm, bm = _num("W(?:idth)?"), _num("H(?:eight)?"), \
-                _num("BPC|BitsPerComponent")
-            cm_ = re.search(r"/CS\s*/(\w+)|/ColorSpace\s*/(\w+)", d)
-            comps = _CS_COMPONENTS.get(
-                (cm_.group(1) or cm_.group(2)) if cm_ else "G")
-            if wm and hm and bm and comps:
-                scan_from = min(
-                    data_start + ((wm * bm * comps + 7) // 8) * hm, n)
-        em = _EI_RE.search(content, scan_from)
-        out.append(content[pos:m.start()])
-        out.append(" INLIMG ")
-        if em is None:
-            # unterminated image: drop the remainder (corrupt
-            # payload must never tokenize)
-            return "".join(out)
-        pos = i = em.end()
-    out.append(content[pos:])
-    return "".join(out)
-
-
-def _strip_artifacts(content: str) -> str:
-    """Remove ``/Artifact … BDC … EMC`` marked-content spans (PDF 32000
-    §14.8.2.2): real producers tag running headers/footers, page
-    numbers, watermarks, and decorative rules as pagination/layout
-    artifacts — by definition NOT part of the page's real content, so a
-    main-content extractor drops them (``cfg.keep_artifacts`` keeps
-    them for archival extraction).
-
-    The scan walks ``_SCAN_RE`` tokens like ``_strip_inline_images``:
-    literal and hex strings are opaque (prose mentioning ``/Artifact
-    BDC`` is never stripped), ``<<…>>`` property dicts are skipped
-    whole so names inside them can't masquerade as the tag operand, and
-    nested marked content inside an artifact (``BMC``/``BDC`` …
-    ``EMC``) is counted so the strip ends at the MATCHING ``EMC``.  An
-    unterminated artifact drops the stream remainder — corrupt spans
-    must never leak as phantom content.  Non-artifact marked content
-    (``/Span``, ``/P``, ``/ReversedChars`` …) passes through untouched:
-    the main tokenizer treats BMC/BDC/EMC as unknown no-op operators."""
-    if "/Artifact" not in content:
-        return content
-    out: list[str] = []
-    pos = 0           # start of not-yet-emitted text
-    ddepth = 0        # << >> dict nesting (operands are opaque inside)
-    art_depth = 0     # marked-content nesting INSIDE an open artifact
-    art_from = 0      # splice start (the /Artifact tag position)
-    first_operand: str | None = None
-    operand_pos = 0
-    for m in _SCAN_RE.finditer(content):
+    The dict is read from ``it``: a name outside arrays and dicts is a
+    key, the token after it its value.  The payload can hold the bytes
+    `` EI `` by chance (probability ≈ N/2^24 for an N-byte image —
+    routinely hit at real image sizes), so when the dict declares
+    uncompressed samples (/W /H /BPC, a /CS of known component count or
+    none, no /F filter) the payload length ceil(W·BPC·comps/8)·H is
+    computed and the ``EI`` scan starts after it."""
+    vals: dict[str, str] = {}
+    key = None
+    depth = 0  # open arrays and dicts
+    for m in it:
         t = m.group()
-        if t == "<<":
-            ddepth += 1
-        elif t == ">>":
-            ddepth = max(0, ddepth - 1)
-        elif ddepth or t[0] in "(<":
-            pass  # a string, or anything inside a dict
-        elif t[0] == "/":
-            if first_operand is None:
-                first_operand, operand_pos = _name_of(t), m.start()
-        else:
-            if t in ("BDC", "BMC"):
-                if art_depth:
-                    art_depth += 1
-                elif first_operand == "Artifact":
-                    art_depth, art_from = 1, operand_pos
-            elif t == "EMC" and art_depth:
-                art_depth -= 1
-                if art_depth == 0:
-                    out.append(content[pos:art_from])
-                    out.append(" ")
-                    pos = m.end()
-            first_operand = None
-    if art_depth:  # unterminated artifact: drop the remainder
-        out.append(content[pos:art_from])
-        return "".join(out)
-    out.append(content[pos:])
-    return "".join(out)
+        c = t[0]
+        if t == "ID":
+            break
+        if (c.isalpha() or c in "'*\"") and t not in _CONST_WORDS:
+            return None
+        if c == "%":
+            continue
+        if depth == 0:
+            if key is not None:
+                vals.setdefault(key, t)
+                key = None
+            elif c == "/":
+                key = _name_of(t)
+        if t == "[" or t == "<<":
+            depth += 1
+        elif t == "]" or t == ">>":
+            depth = max(depth - 1, 0)
+    else:
+        return None
+    n = len(content)
+    start = m.end() + 1  # ID and one white-space byte
+    scan = start
+    w, h = vals.get("W", vals.get("Width")), vals.get("H", vals.get("Height"))
+    bpc = vals.get("BPC", vals.get("BitsPerComponent"))
+    cs = vals.get("CS", vals.get("ColorSpace", "/G"))
+    comps = _CS_COMPONENTS.get(_name_of(cs)) if cs[0] == "/" else None
+    if "F" not in vals and "Filter" not in vals and comps \
+            and all(v is not None and v.isdigit() for v in (w, h, bpc)):
+        scan = start + ((int(w) * int(bpc) * comps + 7) // 8) * int(h)
+    em = _EI_RE.search(content, min(scan, n))
+    return n if em is None else em.end()
 
 
 def _cid_decode(raw: str, cmap: dict[int, str]) -> str:
@@ -1407,15 +1348,24 @@ def _cid_decode(raw: str, cmap: dict[int, str]) -> str:
     return "".join(out)
 
 
-def _parse_content(content, runs, figures, cfg, fonts=None, xobjs=None,
-                   depth=0, mode0=0):
-    # inline images → placeholder operator; placement taken from the
-    # current transformation matrix (the standard `q w 0 0 h x y cm
-    # BI … EI Q` producer idiom)
-    content = _strip_inline_images(content)
-    if not cfg.keep_artifacts:
-        content = _strip_artifacts(content)
-    toks = _TOK_RE.findall(content)
+def _parse_content(content: str, cfg: ExtractConfig, fonts=None, xobjs=None,
+                   depth: int = 0, mode0: int = 0) -> tuple[list, list]:
+    """(text runs, figure rects (x, y, w, h)) of one content stream, read
+    in one walk of _TOK_RE tokens.
+
+    Inline images are read in the walk: the cursor jumps past the
+    payload (see _inline_image_end), and the image is a figure placed by
+    the current ``cm`` (the ``q w 0 0 h x y cm BI … EI Q`` producer
+    idiom).  ``/Artifact`` marked content (PDF 32000 §14.8.2.2 — how
+    real producers tag running headers/footers, page numbers and
+    watermarks) is not main content: unless ``cfg.keep_artifacts``, a
+    BMC/BDC whose tag (its first name operand) is /Artifact opens a
+    span, nested BMC/BDC … EMC are counted, and no token before the
+    matching EMC changes any state; an unterminated span drops the rest
+    of the stream.  Other marked content, dicts and comments change
+    nothing."""
+    runs: list[TextRun] = []
+    figures: list[tuple] = []
     x = y = 0.0
     size = 12.0
     leading = 14.0
@@ -1425,6 +1375,8 @@ def _parse_content(content, runs, figures, cfg, fonts=None, xobjs=None,
     stack: list = []  # operand stack (numbers / strings / arrays)
     arr: list | None = None
     last_name = None
+    tag = None     # the first name operand since the last operator
+    hidden = 0     # depth of open marked content in an /Artifact span
     cur_font: tuple | None = None   # ('cid', cmap) | ('enc', {code: ch})
     # text rendering mode (Tr): part of the TEXT STATE in the graphics
     # state, so it persists across BT..ET boundaries within a stream
@@ -1436,8 +1388,8 @@ def _parse_content(content, runs, figures, cfg, fonts=None, xobjs=None,
 
     def decode_str(raw: str) -> str:
         if cur_font is not None:
-            tag, table = cur_font
-            if tag == "cid":
+            kind, table = cur_font
+            if kind == "cid":
                 return _cid_decode(raw, table)
             # simple font with /Differences: one byte per glyph, mapped
             # codes resolve via the encoding, the rest stay literal
@@ -1454,38 +1406,38 @@ def _parse_content(content, runs, figures, cfg, fonts=None, xobjs=None,
             return vals
         return None
 
-    for t in toks:
-        if t == "[":
+    it = _TOK_RE.finditer(content)
+    while (m := next(it, None)) is not None:
+        t = m.group()
+        c = t[0]
+        if hidden and t != "BI":  # inside an /Artifact span
+            if t == "EMC":
+                hidden -= 1
+            elif t == "BDC" or t == "BMC":
+                hidden += 1
+            continue
+        if c == "(" or c == "<" and t != "<<":
+            s = decode_str(_unescape(t[1:-1]) if c == "(" else
+                           _hex_bytes(t[1:-1]).decode("latin-1"))
+            (stack if arr is None else arr).append(s)
+            continue
+        if c == "/":
+            last_name = _name_of(t)  # remembered for Tf and Do
+            if tag is None:
+                tag = last_name
+            continue
+        if c in "-+.0123456789":  # _TOK_RE guarantees a valid number here
+            (stack if arr is None else arr).append(float(t))
+            continue
+        if c == "[":
             arr = []
             continue
-        if t == "]":
+        if c == "]":
             stack.append(arr if arr is not None else [])
             arr = None
             continue
-        if t.startswith("("):
-            s = decode_str(_unescape(t[1:-1]))
-            if arr is not None:
-                arr.append(s)
-            else:
-                stack.append(s)
-            continue
-        if t.startswith("<"):
-            s = decode_str(_hex_bytes(t[1:-1]).decode("latin-1"))
-            if arr is not None:
-                arr.append(s)
-            else:
-                stack.append(s)
-            continue
-        if t.startswith("/"):
-            last_name = _name_of(t)  # remembered for Tf and Do
-            continue
-        if t[0] in "-+.0123456789":  # _TOK_RE guarantees a valid number here
-            v = float(t)
-            if arr is not None:
-                arr.append(v)
-            else:
-                stack.append(v)
-            continue
+        if c in "<>%" or t in _CONST_WORDS:
+            continue  # dicts (no operator here reads one), constants, comments
         # operator
         if t == "BT":
             in_text, x, y = True, 0.0, 0.0
@@ -1552,10 +1504,6 @@ def _parse_content(content, runs, figures, cfg, fonts=None, xobjs=None,
         elif t == "Q":
             if gs_stack:
                 ctm, mode = gs_stack.pop()
-        elif t == "INLIMG":
-            if not in_text:
-                # unit image square scaled by (a, d), placed at (e, f)
-                figures.append((ctm[2], ctm[3], ctm[0], ctm[1]))
         elif t == "Do" and last_name is not None:
             # XObject invocation: image → figure placed by the current
             # cm (as for inline images); Form → recursively tokenize its
@@ -1568,9 +1516,8 @@ def _parse_content(content, runs, figures, cfg, fonts=None, xobjs=None,
                 if xo[0] == "image":
                     figures.append((ctm[2], ctm[3], ctm[0], ctm[1]))
                 elif xo[0] == "form" and depth < 8:
-                    fr, ff = _parse_content(
-                        xo[1], [], [], cfg, xo[2], xo[3], depth + 1,
-                        mode0=mode)
+                    fr, ff = _parse_content(xo[1], cfg, xo[2], xo[3],
+                                            depth + 1, mode0=mode)
                     dx, dy = ctm[2], ctm[3]
                     for tr in fr:
                         tr.x += dx
@@ -1578,8 +1525,18 @@ def _parse_content(content, runs, figures, cfg, fonts=None, xobjs=None,
                     runs.extend(fr)
                     figures.extend(
                         (fx + dx, fy + dy, fw, fh) for fx, fy, fw, fh in ff)
-        if t not in ("[", "]"):
-            stack = stack[-8:]  # bound the stack; operands are consumed loosely
+        elif t == "BI":
+            end = _inline_image_end(content, it)
+            if end is not None and not (in_text or hidden):
+                # unit image square scaled by (a, d), placed at (e, f)
+                figures.append((ctm[2], ctm[3], ctm[0], ctm[1]))
+            # on past the payload, or after a BI that starts no image
+            it = _TOK_RE.finditer(content, m.end() if end is None else end)
+        elif (t == "BDC" or t == "BMC") and tag == "Artifact" \
+                and not cfg.keep_artifacts:
+            hidden = 1
+        stack = stack[-8:]  # bound the stack; operands are consumed loosely
+        tag = None
     return runs, figures
 
 
@@ -1602,7 +1559,7 @@ def assign_columns(runs, figures, cfg: ExtractConfig = DEFAULT,
     ph = page_heights or []
     bounds_by_page = {
         page: _column_bounds(
-            rs, cfg, ph[page] if page < len(ph) else cfg.page_height)
+            rs, cfg, ph[page] if page < len(ph) else _LETTER[1])
         for page, rs in by_page.items()
     }
 
@@ -1627,7 +1584,7 @@ def _column_bounds(rs: list, cfg: ExtractConfig,
     merged-interval walk is its own boundary)."""
     if not cfg.column_gutter_min or len(rs) < 2 * cfg.column_min_lines:
         return []
-    page_h = page_h or cfg.page_height
+    page_h = page_h or _LETTER[1]
     top_band = page_h * (1.0 - cfg.header_footer_band)
     bot_band = page_h * cfg.header_footer_band
     body = [r for r in rs if bot_band < r.y < top_band]
@@ -1735,7 +1692,7 @@ def _finish_block(lines: list[PdfLine], cfg: ExtractConfig,
     pg, ph = lines[0].page, page_heights or []
     kind = _classify_text_block(
         lines, (x0, y0, x1, y1), cfg,
-        ph[pg] if 0 <= pg < len(ph) else cfg.page_height)
+        ph[pg] if 0 <= pg < len(ph) else _LETTER[1])
     return PdfBlock(kind, lines, (x0, y0, x1, y1), lines[0].page,
                     lines[0].col)
 
@@ -1743,7 +1700,7 @@ def _finish_block(lines: list[PdfLine], cfg: ExtractConfig,
 def _classify_text_block(lines, bbox, cfg: ExtractConfig,
                          page_h: float | None = None) -> str:
     # boilerplate: a single short line in the top/bottom page band (header/footer)
-    page_h = page_h or cfg.page_height
+    page_h = page_h or _LETTER[1]
     top_band = page_h * (1.0 - cfg.header_footer_band)
     bot_band = page_h * cfg.header_footer_band
     if len(lines) == 1 and (lines[0].y >= top_band or lines[0].y <= bot_band):
@@ -1873,7 +1830,7 @@ def _page_content(blocks: list[dict], cmap: dict[str, int] | None = None) -> str
         if b.get("inline"):
             # inline image: unit square scaled/placed by cm; payload is
             # deliberately adversarial binary-ish bytes (fake strings,
-            # numbers, operators) — the tokenizer must strip it whole
+            # numbers, operators) — the content walk must skip it whole
             payload = "(fake) Tj 99 0 0 (x\\) 12 re f BT"
             parts.append(
                 f"q {w:g} 0 0 {h:g} {b['x']:g} {b['y']:g} cm "

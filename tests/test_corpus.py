@@ -14,6 +14,8 @@ import hashlib
 
 import pytest
 
+from ocr_spark.config import DEFAULT, ExtractConfig
+from ocr_spark.functions.extract_core import extract_doc
 from ocr_spark.sources.corpus import (
     generate_interleaved,
     make_doc,
@@ -63,6 +65,47 @@ def test_every_variant_knob_is_pinned():
     # each knob really changes the corpus at these sizes
     assert DIGEST_DEFAULT not in got.values()
     assert _digest(16, **ALL_KNOBS) == DIGEST_ALL
+
+
+#: blake2b-128 of ``repr`` of the ``extract_doc`` output of the first 22
+#: docs of each corpus above, under DEFAULT and keep_artifacts=True.
+#: Doc 22 holds the knob sets' one AES-256 span, whose key check costs
+#: about 3 s per extraction in pure Python;
+#: test_rc4_corpus_twin_extracts_identically covers that path.
+#: Layout, compression and decryptable-encryption twins extract like the
+#: default corpus.
+_PLAIN = "1af58830935b0e2c2332f2b3d4afb2c6"
+EXTRACT_DEFAULT = (_PLAIN, _PLAIN)
+EXTRACT_ALONE = {
+    **{k: (_PLAIN, _PLAIN) for k in (
+        "compress_every", "xref_every", "type0_every", "form_every",
+        "rc4_every", "aes_every", "filter_every")},
+    "html_table_every": ("08689cc62e89fc66dda293f9ed6cf227",) * 2,
+    "pdf_link_every": ("22d115772d9d22517de0edef707fce45",) * 2,
+    "ocr_layer_every": ("e8d41658c73294eaa882f8c642d00875",) * 2,
+    "field_every": ("6ef7c736e43054a3263cb34ce5fe7052",) * 2,
+    "encrypted_every": ("61ffa9290a61d5ed668d3eb637e0d69c",) * 2,
+    "outline_every": ("3b99caf8ba238bdb31105905ea466f00",) * 2,
+    # only keep_artifacts=True shows the tagged watermark
+    "artifact_every": (_PLAIN, "244ac2f6fb00f1bdc466a0d0877077bb"),
+}
+EXTRACT_ALL = ("43c1f141251172ee740d93542c332c21",) * 2
+
+
+def _extract_digests(n_docs: int, **knobs) -> tuple[str, str]:
+    docs = make_docs(n_docs, seed=7, **knobs)
+    return tuple(hashlib.blake2b(repr([
+        extract_doc(d["doc_id"], d["spans"], cfg) for d in docs]).encode(),
+        digest_size=16).hexdigest()
+        for cfg in (DEFAULT, ExtractConfig(keep_artifacts=True)))
+
+
+def test_extraction_of_every_variant_knob_is_pinned():
+    assert set(EXTRACT_ALONE) == set(VARIANTS)
+    assert _extract_digests(22) == EXTRACT_DEFAULT
+    got = {k: _extract_digests(22, **{k: 2}) for k in VARIANTS}
+    assert got == EXTRACT_ALONE
+    assert _extract_digests(16, **ALL_KNOBS) == EXTRACT_ALL
 
 
 def test_make_doc_equals_make_docs_row():

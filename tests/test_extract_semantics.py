@@ -992,7 +992,7 @@ def test_bi_inside_string_literal_is_not_an_image():
     silently dropped.  The string-aware scan must extract the full text
     unchanged."""
     from ocr_spark.functions.pdfx import (
-        _strip_inline_images, extract_pdf_blocks, write_pdf)
+        _parse_content, extract_pdf_blocks, write_pdf)
 
     blocks = [
         {"kind": "text", "x": 72, "y": 700,
@@ -1009,17 +1009,21 @@ def test_bi_inside_string_literal_is_not_an_image():
         assert "survives too" in texts, got
 
     # unit-level: literals, hex strings, and token boundaries
-    s = "(a BI b ID c) Tj (x) Tj"
-    assert _strip_inline_images(s) == s          # inside (...) literal
-    s = "<42492049442058> Tj BT (ok) Tj ET"
-    assert _strip_inline_images(s) == s          # inside <...> hex string
-    s = "/ABI 5 BID 3"                           # BI mid-token, both sides
-    assert _strip_inline_images(s) == s
-    # a REAL inline image in operator position still strips
-    s = "(pre) Tj BI /W 1 /H 1 /BPC 8 /CS /G ID \x00 EI (post) Tj"
-    out = _strip_inline_images(s)
-    assert "INLIMG" in out and "(pre)" in out and "(post)" in out
-    assert "\x00" not in out
+    def walk(s):
+        runs, figs = _parse_content(s, DEFAULT)
+        return [r.text for r in runs], figs
+
+    s = "BT (a BI b ID c) Tj (x) Tj ET"          # inside (...) literal
+    assert walk(s) == (["a BI b ID c", "x"], [])
+    s = "BT <42492049442058> Tj (ok) Tj ET"      # inside <...> hex string
+    assert walk(s) == (["BI ID X", "ok"], [])
+    s = "BT /ABI 5 BID 3 (ok) Tj ET"             # BI mid-token, both sides
+    assert walk(s) == (["ok"], [])
+    # a REAL inline image in operator position is one figure, and its
+    # payload never reads as text
+    s = ("BT (pre) Tj ET q 2 0 0 3 10 20 cm BI /W 6 /H 1 /BPC 8 /CS /G "
+         "ID (ph)Tj EI Q BT (post) Tj ET")
+    assert walk(s) == (["pre", "post"], [(10.0, 20.0, 2.0, 3.0)])
 
 
 def test_form_xobject_extracts_identically():
@@ -1078,6 +1082,47 @@ def test_form_xobject_translation_places_content():
         assert (round(gx1 - x1), round(gy1 - y1)) == (5, 9)
 
 
+def test_self_invoking_form_xobject_is_left_out(monkeypatch):
+    """A form XObject that lists itself in its own /Resources (directly,
+    under several names, or through another form) is left out where it
+    is already being built: its ``Do`` draws nothing, so each stream is
+    parsed once instead of once per path through the cycle (about 5**8
+    form parses for a form that calls itself under five names)."""
+    from ocr_spark.functions import pdfx
+
+    page = [{"kind": "text", "x": 72, "y": 700, "lines": ["top"]}]
+    doc = pdfx.write_pdf_pages([page], form_xobject=True)
+    assert b"/XObject << /Fm1 5 0 R >>" in doc
+
+    def stream(content: bytes, head: bytes = b"") -> bytes:
+        return b"<< %s/Length %d >>\nstream\n%s\nendstream" % (
+            head, len(content), content)
+
+    def form(text: bytes, y: int, names: bytes) -> bytes:
+        return stream(b"BT 1 0 0 1 72 %d Tm (%s) Tj ET /Fm1 Do /Fa Do"
+                      % (y, text),
+                      b"/Type /XObject /Subtype /Form /Resources "
+                      b"<< /XObject << %s >> >> " % names)
+
+    top = stream(b"BT 1 0 0 1 72 700 Tm (top) Tj ET q 1 0 0 1 0 0 cm "
+                 b"/Fm1 Do Q")
+    direct = {4: top, 5: form(b"hi", 600, b"/Fm1 5 0 R /Fa 5 0 R")}
+    via = {4: top, 5: form(b"hi", 600, b"/Fm1 6 0 R"),
+           6: form(b"ho", 500, b"/Fm1 5 0 R /Fa 5 0 R")}
+    parse, calls = pdfx._parse_content, []
+
+    def counted(*a, **kw):
+        calls.append(a[0])
+        return parse(*a, **kw)
+
+    monkeypatch.setattr(pdfx, "_parse_content", counted)
+    for objs, want in ((direct, ["top", "hi"]), (via, ["top", "hi", "ho"])):
+        calls.clear()
+        got = [b.text for b in pdfx.extract_pdf_blocks(_update(doc, objs))]
+        assert got == want
+        assert len(calls) == len(want)  # the page, then each form once
+
+
 def test_quote_show_operators_advance_line():
     """' (next-line + show) and " (spacing + next-line + show) must each
     advance by the leading and emit the string — real producers use them
@@ -1087,7 +1132,7 @@ def test_quote_show_operators_advance_line():
 
     content = ('BT /F1 12 Tf 14 TL 72 700 Td (first line here) Tj '
                '0.25 0.1 (second via quote) " (third) \' ET')
-    runs, _ = _parse_content(content, [], [], DEFAULT)
+    runs, _ = _parse_content(content, DEFAULT)
     assert [(r.y, r.text) for r in runs] == [
         (700.0, "first line here"),
         (686.0, "second via quote"),
@@ -1816,7 +1861,7 @@ def test_one_literal_string_rule():
     import zlib
 
     from ocr_spark.functions.pdfcrypt import encrypt_pdf_rc4
-    from ocr_spark.functions.pdfx import (_Doc, _lit_bytes, _strip_artifacts,
+    from ocr_spark.functions.pdfx import (_Doc, _lit_bytes, _parse_content,
                                           _unescape, extract_pdf_blocks,
                                           write_pdf, write_pdf_pages)
 
@@ -1868,11 +1913,35 @@ def test_one_literal_string_rule():
         assert [b.text for b in extract_pdf_blocks(frag)] == [
             "hello there"], note
 
-    # the artifact scan reads operator words, not any letter after a
+    # the artifact span reads operator words, not any letter after a
     # delimiter (a latin-1 letter there used to raise)
-    r = _strip_artifacts("/Artifact BMC \xe9 EMC (b) Tj")
-    assert "\xe9" not in r and "(b) Tj" in r
+    runs, _ = _parse_content("BT /Artifact BMC \xe9 EMC (b) Tj ET", DEFAULT)
+    assert [r.text for r in runs] == ["b"]
 
+
+def test_one_content_stream_grammar():
+    """A content stream is read by one walk of the object parser's token
+    grammar: inline images and /Artifact spans are read in that walk, a
+    stray ``<`` is no hex string (it used to hide an inline image from
+    the pre-pass, so the payload read as text, or to swallow an
+    artifact's EMC, so the body was lost), a ``%`` comment runs to the
+    end of the line, and ``INLIMG`` is no operator."""
+    from ocr_spark.functions.pdfx import extract_pdf_blocks
+
+    def blocks(content: bytes):
+        frag = b"stream\n" + content + b"\nendstream"
+        return [(b.kind, b.text) for b in extract_pdf_blocks(frag)]
+
+    img = b"BI /W 6 /H 1 /BPC 8 /CS /G ID (ph)Tj EI"
+    assert blocks(b"BT 1 0 0 1 72 700 Tm (top) Tj < " + img + b" ET") == [
+        ("text-block", "top")]
+    assert blocks(b"BT 1 0 0 1 72 700 Tm /Artifact BMC (hdr) Tj < EMC "
+                  b"(body) Tj ET") == [("text-block", "body")]
+    assert blocks(b"BT 1 0 0 1 72 700 Tm (shown) Tj % note (hidden) Tj\n"
+                  b"ET") == [("text-block", "shown")]
+    assert blocks(b"BT 1 0 0 1 72 700 Tm (text) Tj ET "
+                  b"q 10 0 0 10 100 400 cm INLIMG Q") == [
+        ("text-block", "text")]
 
 def test_lazy_load_images_both_parsers():
     """data-src / data-srcset lazy-loading images resolve to the same
@@ -2452,7 +2521,7 @@ def test_artifact_marked_content_stripped():
     ``keep_artifacts=True``, and the scanner is string-aware: prose
     mentioning the operators is never treated as a span."""
     from ocr_spark.config import ExtractConfig
-    from ocr_spark.functions.pdfx import (_strip_artifacts,
+    from ocr_spark.functions.pdfx import (_parse_content,
                                           extract_pdf_blocks, write_pdf)
 
     blocks = [
@@ -2476,24 +2545,38 @@ def test_artifact_marked_content_stripped():
                                   ["body line one", "body line two"])], kw
         assert spans(tagged, keep_artifacts=True) == spans(untagged), kw
 
-    # scanner edge cases -------------------------------------------------
+    # edge cases of the walk ---------------------------------------------
+    def texts(content, cfg=DEFAULT):
+        return [r.text for r in _parse_content(f"BT {content} ET", cfg)[0]]
+
+    keep = ExtractConfig(keep_artifacts=True)
     # prose mentioning the operators inside a literal string: untouched
-    c = "BT (see the /Artifact <<x>> BDC marker) Tj ET"
-    assert _strip_artifacts(c) == c
+    assert texts("(see the /Artifact <<x>> BDC marker) Tj") == [
+        "see the /Artifact <<x>> BDC marker"]
     # nested marked content inside an artifact ends at the MATCHING EMC
-    r = _strip_artifacts("/Artifact <</Type /Pagination>> BDC (hdr) Tj "
-                         "/Span <<>> BDC (in) Tj EMC (hdr2) Tj EMC "
-                         "(body) Tj")
-    assert "hdr" not in r and "(in)" not in r and "(body) Tj" in r
+    c = ("/Artifact <</Type /Pagination>> BDC (hdr) Tj /Span <<>> BDC "
+         "(in) Tj EMC (hdr2) Tj EMC (body) Tj")
+    assert texts(c) == ["body"]
+    assert texts(c, keep) == ["hdr", "in", "hdr2", "body"]
     # unterminated artifact: remainder dropped, earlier content kept
-    r = _strip_artifacts("(keep) Tj /Artifact <<>> BDC (gone) Tj")
-    assert "(keep) Tj" in r and "gone" not in r
-    # BMC (no property list) form
-    r = _strip_artifacts("/Artifact BMC (w) Tj EMC (b) Tj")
-    assert "(w)" not in r and "(b) Tj" in r
+    assert texts("(keep) Tj /Artifact <<>> BDC (gone) Tj") == ["keep"]
+    # BMC (no property list) form, and a tag named by a property name
+    assert texts("/Artifact BMC (w) Tj EMC (b) Tj") == ["b"]
+    assert texts("/Artifact /Prop1 BDC (w) Tj EMC (b) Tj") == ["b"]
+    # true/false/null in the property list are values, not operators
+    assert texts("/Artifact <</Open true>> BDC (w) Tj EMC (b) Tj") == ["b"]
+    # the tag is the operator's own operand: an earlier /Artifact is not
+    assert texts("/Artifact BMC EMC <<>> BDC (in) Tj EMC") == ["in"]
     # non-artifact marked content passes through untouched
-    r = _strip_artifacts("/Artifact BMC EMC /P <</MCID 0>> BDC (para) Tj EMC")
-    assert "(para) Tj" in r and "/P" in r
+    assert texts("/Artifact BMC EMC /P <</MCID 0>> BDC (para) Tj EMC") == [
+        "para"]
+    # an inline image inside an artifact: its payload (here ``EMC``)
+    # ends nothing, and it is no figure unless artifacts are kept
+    c = ("/Artifact BMC q 5 0 0 5 1 1 cm BI /W 3 /H 1 /BPC 8 ID EMC EI Q "
+         "EMC BT (b) Tj ET")
+    for cfg, figs in ((DEFAULT, []), (keep, [(1.0, 1.0, 5.0, 5.0)])):
+        runs, got = _parse_content(c, cfg)
+        assert ([r.text for r in runs], got) == (["b"], figs)
 
 
 def test_artifact_corpus_spark_pipeline_drops_tagged_watermark(spark):
@@ -2548,26 +2631,23 @@ def test_graphics_state_q_Q_save_restore():
 
     xobjs = {"Im1": ("image",), "Im2": ("image",)}
 
-    runs, figs = [], []
-    _parse_content("q 2 0 0 2 10 20 cm /Im1 Do Q /Im2 Do",
-                   runs, figs, DEFAULT, None, xobjs)
+    _, figs = _parse_content("q 2 0 0 2 10 20 cm /Im1 Do Q /Im2 Do",
+                             DEFAULT, None, xobjs)
     assert figs == [(10.0, 20.0, 2.0, 2.0), (0.0, 0.0, 1.0, 1.0)]
 
-    runs, figs = [], []
-    _parse_content("q 2 0 0 2 0 0 cm q 1 0 0 1 5 5 cm /Im1 Do Q Q /Im2 Do",
-                   runs, figs, DEFAULT, None, xobjs)
+    _, figs = _parse_content(
+        "q 2 0 0 2 0 0 cm q 1 0 0 1 5 5 cm /Im1 Do Q Q /Im2 Do",
+        DEFAULT, None, xobjs)
     assert figs == [(10.0, 10.0, 2.0, 2.0), (0.0, 0.0, 1.0, 1.0)]
 
     cfg = ExtractConfig(keep_invisible_text=False)
-    runs, figs = [], []
-    _parse_content("q BT 3 Tr (hidden) Tj ET Q BT (visible) Tj ET",
-                   runs, figs, cfg)
+    runs, _ = _parse_content("q BT 3 Tr (hidden) Tj ET Q BT (visible) Tj ET",
+                             cfg)
     assert [r.text for r in runs] == ["visible"]
 
     # corrupt shapes degrade, never raise: unbalanced Q, spammed q
-    runs, figs = [], []
-    _parse_content("Q Q (t) 0 0 1 1 re f " + "q " * 200 + "/Im1 Do",
-                   runs, figs, DEFAULT, None, xobjs)
+    _, figs = _parse_content("Q Q (t) 0 0 1 1 re f " + "q " * 200 + "/Im1 Do",
+                             DEFAULT, None, xobjs)
     assert figs[0] == (0.0, 0.0, 1.0, 1.0)
 
 

@@ -14,12 +14,10 @@ readable by anyone" web PDF — across every spec generation:
 Non-empty passwords stay out of scope; the reader falls back to the
 skip-encrypted path (emit nothing, never ciphertext garbage).
 
-Everything here is stdlib (hashlib + bytes): no crypto libs exist in
-this sandbox, and none are needed — RC4 is ~15 lines, AES lives in
-``functions/aes.py`` (FIPS-197, known-answer-tested), and PDF's key
-derivation is seeded MD5/SHA-2 chains.  Pure-Python cipher throughput
-only ever applies to documents that ARE encrypted, inside the
-already-Python Arrow extract stage.
+AES-CBC runs on the ``cryptography`` package (OpenSSL), which the
+engine needs the way it needs pyarrow: the R6 key check alone encrypts
+at least 64 × 2 KB.  RC4 is ~15 lines of Python, and PDF's key
+derivation is seeded MD5/SHA-2 chains (hashlib).
 
 Also provides ``encrypt_pdf_rc4`` / ``encrypt_pdf_aes`` — fixture-side
 transforms that turn any ``write_pdf`` output into a REAL
@@ -33,7 +31,8 @@ from __future__ import annotations
 import hashlib
 import re
 
-from ocr_spark.functions.aes import cbc_decrypt, cbc_encrypt
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
 from ocr_spark.functions.pdfx import _LIT, _lit_bytes
 
 # PDF 32000-1 §7.6.3.3 Algorithm 2: the 32-byte password pad constant
@@ -132,6 +131,36 @@ def obj_key(key: bytes, num: int, gen: int, aes: bool = False) -> bytes:
         + (b"sAlT" if aes else b"")
     ).digest()
     return h[:min(len(key) + 5, 16)]
+
+
+def cbc_encrypt(key: bytes, data: bytes, iv: bytes,
+                pad: bool = True) -> bytes:
+    """AES-CBC.  ``pad=True`` applies PKCS#7 (PDF's stream/string mode);
+    ``pad=False`` requires block-aligned input, else ``finalize`` raises
+    ValueError (the R6 hash rounds and the /UE //OE key wrapping use
+    exact 32/64-byte payloads)."""
+    if pad:
+        p = 16 - len(data) % 16
+        data = data + bytes([p]) * p
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    return enc.update(data) + enc.finalize()
+
+
+def cbc_decrypt(key: bytes, data: bytes, iv: bytes,
+                unpad: bool = True) -> bytes:
+    """AES-CBC decrypt; empty or misaligned ciphertext gives ``b""``.
+    With ``unpad``, PKCS#7 is stripped only when structurally valid — a
+    wrong key yields garbage padding, and the caller's downstream parse
+    (flate/lexer) must see the garbage rather than an exception escaping
+    the extract batch."""
+    if len(data) % 16 or not data:
+        return b""
+    dec = Cipher(algorithms.AES(key), modes.CBC(iv)).decryptor()
+    out = dec.update(data) + dec.finalize()
+    p = out[-1]
+    if unpad and 1 <= p <= 16 and out.endswith(bytes([p]) * p):
+        out = out[:-p]
+    return out
 
 
 def aes_decrypt_payload(key: bytes, data: bytes) -> bytes:

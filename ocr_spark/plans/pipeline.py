@@ -60,7 +60,6 @@ from ocr_spark.sources.formats import (
     ParquetManifestTable,
     checksum_hex,
     lineage_exprs,
-    open_table,
     wave_name,
 )
 
@@ -241,7 +240,7 @@ def run_extract(
     """
     run_id = _run_id(run_id)
     t0 = time.time()
-    tbl = open_table(out_table)
+    tbl = ParquetManifestTable(out_table)
     watermark = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
     committed = tbl.committed_buckets()

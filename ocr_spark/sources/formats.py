@@ -1,18 +1,12 @@
 """Table-format shim: a Parquet+manifest table shaped like Iceberg.
 
 Spec: BASELINE.json:6/:14 — read/write Iceberg tables with per-partition
-lineage enabling idempotent restart.  The sandbox has no Iceberg runtime
-jar and no network (SURVEY.md §0/§4.4), so the pipeline runs against
-``ParquetManifestTable`` only:
-
-  * ``ParquetManifestTable`` — a Parquet directory plus an atomically
-    swapped JSON manifest that provides the snapshot semantics lineage
-    needs: a (bucket, run) only exists for readers once its manifest
-    entry is committed, so partially-written runs are invisible and
-    restart is idempotent.
-  * ``IcebergTable`` — a plan-construction contract only: it builds the
-    production ``spark.read.format("iceberg")`` / ``writeTo`` plans, but
-    has no lineage, so ``run_extract`` refuses it before any write.
+lineage enabling idempotent restart.  No Iceberg runtime jar or catalog
+is available (SURVEY.md §0/§4.4), so ``ParquetManifestTable`` stands in
+for it: a Parquet directory plus an atomically swapped JSON manifest
+that provides the snapshot semantics lineage needs — a (bucket, run)
+only exists for readers once its manifest entry is committed, so
+partially-written runs are invisible and restart is idempotent.
 
 Both writers — run_extract's waves and stream_extract's increments —
 reach the table only through plans/pipeline.py:commit_wave (write_wave →
@@ -394,32 +388,3 @@ class ParquetManifestTable:
                 bad.append({"bucket": e["bucket"], "run_id": e["run_id"],
                             "expected": want, "actual": got})
         return bad
-
-
-class IcebergTable:
-    """Plan-construction contract for the production Iceberg path: it
-    builds the read and write plans, whose execution needs
-    iceberg-spark-runtime and a configured catalog (unavailable
-    in-sandbox — SURVEY.md §4.4).  It keeps no lineage, so run_extract
-    refuses it at committed_buckets() before any write."""
-
-    def __init__(self, identifier: str) -> None:
-        self.identifier = identifier
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.format("iceberg").load(self.identifier)
-
-    def write_plan(self, df: DataFrame):
-        """DataFrameWriterV2 for the append — split out so tests can
-        construct the production write plan without a live catalog
-        (plan construction needs no Iceberg jar; only execution does)."""
-        return df.writeTo(self.identifier).option("write-format", "parquet")
-
-    def committed_buckets(self) -> set[int]:  # via snapshot summary in prod
-        raise NotImplementedError("requires a live Iceberg catalog")
-
-
-def open_table(root_or_identifier: str):
-    if root_or_identifier.startswith("iceberg:"):
-        return IcebergTable(root_or_identifier[len("iceberg:"):])
-    return ParquetManifestTable(root_or_identifier)

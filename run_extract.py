@@ -24,10 +24,7 @@ import json
 def main() -> None:
     ap = argparse.ArgumentParser(description="interleaved-document extraction job")
     ap.add_argument("--input", required=True, help="parquet path or synthetic:N")
-    ap.add_argument("--output", required=True,
-                    help="output table root, or iceberg:<ident>, which "
-                         "needs a live Iceberg catalog (its manifest "
-                         "lineage is not implemented: NotImplementedError)")
+    ap.add_argument("--output", required=True, help="output table root")
     ap.add_argument("--partitions", type=int, default=None,
                     help="tasks per wave; default: one per "
                          "pipeline.TASK_BYTES of a parquet input, up to "

@@ -2262,15 +2262,16 @@ def test_rc4_corpus_twin_extracts_identically():
 
 
 def test_aes_fips197_known_answers():
-    """The from-scratch AES (functions/aes.py) pinned against the
-    FIPS-197 Appendix C example vectors for all three key sizes, both
-    directions, plus CBC chaining + PKCS#7 round-trip on a non-aligned
-    payload."""
-    from ocr_spark.functions.aes import (
-        _decrypt_block, _encrypt_block, _expand_key, cbc_decrypt,
-        cbc_encrypt)
+    """pdfcrypt's AES-CBC pinned against the FIPS-197 Appendix C example
+    vectors for all three key sizes, both directions (one block, zero
+    IV, no padding), plus CBC chaining + PKCS#7 round-trip on a
+    non-aligned payload and the padding contract the extract batch
+    relies on: bad input or a wrong key gives bytes, never an
+    exception."""
+    from ocr_spark.functions.pdfcrypt import cbc_decrypt, cbc_encrypt
 
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
+    zero = bytes(16)
     for keyhex, cthex in (
         ("000102030405060708090a0b0c0d0e0f",
          "69c4e0d86a7b0430d8cdb78070b4c55a"),
@@ -2280,18 +2281,29 @@ def test_aes_fips197_known_answers():
          "101112131415161718191a1b1c1d1e1f",
          "8ea2b7ca516745bfeafc49904b496089"),
     ):
-        rk = _expand_key(bytes.fromhex(keyhex))
-        ct = bytes.fromhex(cthex)
-        assert _encrypt_block(rk, pt) == ct, keyhex
-        assert _decrypt_block(rk, ct) == pt, keyhex
+        key, ct = bytes.fromhex(keyhex), bytes.fromhex(cthex)
+        assert cbc_encrypt(key, pt, iv=zero, pad=False) == ct, keyhex
+        assert cbc_decrypt(key, ct, iv=zero, unpad=False) == pt, keyhex
 
     key, iv = bytes(range(16)), bytes(range(16, 32))
     msg = b"seventeen bytes!!"  # forces a full PKCS#7 pad block split
     enc = cbc_encrypt(key, msg, iv=iv)
-    assert len(enc) % 16 == 0 and enc != msg
+    assert len(enc) == 32 and enc != msg
     assert cbc_decrypt(key, enc, iv=iv) == msg
     # wrong key must yield garbage, not raise (extract-batch contract)
     assert cbc_decrypt(bytes(16), enc, iv=iv) != msg
+
+    # empty or misaligned ciphertext decrypts to nothing
+    assert cbc_decrypt(key, b"", iv=iv) == b""
+    assert cbc_decrypt(key, enc[:-1], iv=iv) == b""
+    # an invalid pad is left in place: a short run, a zero, and a
+    # count over one block
+    for bad in (b"x" * 14 + b"\x01\x02", b"x" * 15 + b"\x00",
+                b"x" * 15 + b"\x11"):
+        ct = cbc_encrypt(key, bad, iv=iv, pad=False)
+        assert cbc_decrypt(key, ct, iv=iv) == bad, bad
+    with pytest.raises(ValueError):
+        cbc_encrypt(key, msg, iv=iv, pad=False)
 
 
 def test_pdf_aes_decrypt_roundtrip():

@@ -1,7 +1,6 @@
-"""Table-format shim gates: the Iceberg production branch must at least
-COMPILE (construct its read/write plans) even though the sandbox has no
-Iceberg runtime jar, so the prod path can't silently rot; plus
-open_table dispatch."""
+"""The Parquet+manifest table (sources/formats.py): compaction and
+vacuum, snapshot time travel and incremental reads, manifest history
+growth, the writer lock, and driver-side listing of the data files."""
 
 from __future__ import annotations
 
@@ -10,49 +9,7 @@ import os
 
 import pytest
 
-from ocr_spark.sources.formats import (
-    IcebergTable,
-    ParquetManifestTable,
-    open_table,
-)
-
-
-def test_open_table_dispatch(tmp_path):
-    t = open_table("iceberg:warehouse.db.spans")
-    assert isinstance(t, IcebergTable)
-    assert t.identifier == "warehouse.db.spans"
-    p = open_table(str(tmp_path / "t"))
-    assert isinstance(p, ParquetManifestTable)
-
-
-def test_iceberg_write_plan_constructs(spark):
-    """Dry-run the production write path up to (but not including)
-    execution: DataFrameWriterV2 construction resolves the API surface
-    (writeTo + options) with no catalog present."""
-    df = spark.createDataFrame([("d1", [])],
-                               "doc_id string, spans array<int>")
-    w = IcebergTable("prod_cat.corpus.spans").write_plan(df)
-    # the v2 writer exists and carries the append/overwrite verbs the
-    # pipeline uses; executing would need the catalog, which this
-    # sandbox lacks — execution raises, construction must not
-    assert hasattr(w, "append") and hasattr(w, "overwritePartitions")
-
-
-def test_iceberg_append_needs_catalog(spark):
-    df = spark.createDataFrame([("d1",)], "doc_id string")
-    with pytest.raises(Exception):
-        IcebergTable("prod_cat.corpus.spans").write_plan(df).append()
-
-
-def test_run_extract_to_iceberg_raises_not_implemented(spark):
-    """The Iceberg table has no manifest lineage yet, so the job must
-    refuse it up front, whatever its wave size."""
-    from ocr_spark.plans.pipeline import run_extract
-
-    df = spark.createDataFrame([], _SPAN_SCHEMA)
-    for wave_size in (None, 4):
-        with pytest.raises(NotImplementedError):
-            run_extract(spark, df, "iceberg:db.t", wave_size=wave_size)
+from ocr_spark.sources.formats import ParquetManifestTable
 
 
 # -- compaction / vacuum (small-files maintenance) ---------------------------

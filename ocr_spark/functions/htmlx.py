@@ -34,15 +34,31 @@ independent test oracle implement):
     (separators excluded) >= html_min_words
   - emitted text is whitespace-collapsed
 
-Pure Python / stdlib html.parser — vectorized over Arrow batches in
-mapInPandas; no Spark imports here.
+Tokenizer: one regex scanner (``_scan``) reads the markup and drives
+the block model's ``handle_*`` methods.  It reads tags the way the
+standard library's HTML parser does; the tests drive the same block
+model from that parser as the reference and compare item for item:
+  - attributes follow the stdlib parser's ``attrfind_tolerant``: names
+    are lowercased, values are quoted or bare, charrefs in values are
+    decoded; a bare value keeps a trailing ``/`` (``<img src=a.png/>``
+    is ``a.png/`` and not self-closing); of duplicate attributes the
+    first wins, as in the HTML standard
+  - ``</`` followed by a letter, after optional whitespace, is an end
+    tag; any other ``</…>`` (``</>``, ``</ 1>``) is a bogus comment and
+    is ignored
+  - markup that never closes (``<a b="x>`` with no closing quote, an
+    unterminated comment) and a stray ``<`` are text
+  - ``script``/``style`` content is raw text up to its end tag
+
+Pure Python — vectorized over Arrow batches in mapInPandas; no Spark
+imports here.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from html.parser import HTMLParser
+from html import unescape
 
 from ocr_spark.config import DEFAULT, ExtractConfig
 
@@ -63,16 +79,18 @@ MEDIA_TAGS = {"img", "video", "audio", "source"}
 _WS = re.compile(r"\s+")
 
 
-def _media_ref(attrs: dict) -> str:
+def _media_ref(attrs: list[tuple[str, str | None]]) -> str:
     """src, else data-src (the lazy-loading idiom — real pages park the
     URL there and let JS promote it, so an src-only reader drops every
-    below-the-fold image), else the first srcset / data-srcset
-    candidate URL ('url 640w, ...')."""
-    src = attrs.get("src") or attrs.get("data-src") or ""
+    below-the-fold image), else the first non-empty srcset /
+    data-srcset candidate URL ('url 640w, ...').  Of duplicate
+    attributes the first wins."""
+    a = dict(reversed(attrs))
+    src = a.get("src") or a.get("data-src")
     if src:
         return src
-    srcset = (attrs.get("srcset") or attrs.get("data-srcset") or "").strip()
-    return srcset.split(",")[0].split()[0] if srcset else ""
+    srcset = a.get("srcset") or a.get("data-srcset") or ""
+    return next((c.split()[0] for c in srcset.split(",") if c.strip()), "")
 
 
 @dataclass
@@ -86,11 +104,13 @@ class HtmlItem:
     label: str             # 'content' | 'boilerplate' | 'media'
 
 
-class _BlockParser(HTMLParser):
-    """Streaming block extractor; document order = block-open order."""
+class _BlockParser:
+    """Streaming block extractor; document order = block-open order.
+    A tokenizer drives it through the ``handle_*`` methods (the names
+    and arguments of the stdlib HTML parser's hooks), then calls
+    ``finish``."""
 
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
         self.items: list[tuple[int, str, str | None]] = []  # (seq, type, payload)
         self._seq = 0
         self._skip = 0
@@ -140,9 +160,9 @@ class _BlockParser(HTMLParser):
             return
         n_chars = t["chars"]
         link_ratio = (t["link_chars"] / n_chars) if n_chars else 0.0
-        self.items.append((t["seq"], "table", (text, link_ratio)))
+        self.items.append((t["seq"], "block", ("table", text, link_ratio)))
 
-    # -- HTMLParser hooks --
+    # -- tokenizer events --
     def handle_starttag(self, tag, attrs):
         if tag in SKIP_TAGS:
             self._skip += 1
@@ -152,7 +172,7 @@ class _BlockParser(HTMLParser):
         if tag == "a":
             self._link += 1
         if tag in MEDIA_TAGS:
-            ref = _media_ref(dict(attrs))
+            ref = _media_ref(attrs)
             if ref or tag == "img":
                 self.items.append((self._seq, "media", ref))
                 self._seq += 1
@@ -184,7 +204,7 @@ class _BlockParser(HTMLParser):
 
     def handle_startendtag(self, tag, attrs):
         self.handle_starttag(tag, attrs)
-        if tag not in SKIP_TAGS and tag not in ("img", "source"):
+        if tag not in SKIP_TAGS:
             self.handle_endtag(tag)
 
     def handle_endtag(self, tag):
@@ -231,113 +251,98 @@ class _BlockParser(HTMLParser):
         if self._link:
             b["link_chars"] += len(_WS.sub(" ", data).strip())
 
-    def close(self):
-        super().close()
+    def finish(self) -> None:
+        """Close the tables and blocks still open at the end of input."""
         while self._tables:
             self._close_table()
         while self._blocks:
             self._close_block()
 
 
-# Fast path: regex scanner emitting the same start/end/data event stream
-# as html.parser drives into _BlockParser.  The stdlib parser was 65% of
-# total extraction CPU (profiled); this scanner is ~6x faster on the
-# same fragments.  tokenize_html_stdlib below keeps the stdlib path for
-# cross-validation (tests assert identical items on every corpus doc).
+# The tokenizer.  Every "<" starts one _SCAN match, so the text between
+# two matches holds no "<" and is one data event, as in the stdlib HTML
+# parser.  Start tags and attributes use that parser's grammar
+# (attrfind_tolerant), read without backtracking as it reads them.
+# Markup that does not close is text up to the next ">" (else up to the
+# next "<"), and a stray "<" is text on its own.  On the corpus
+# fragments tokenize_html runs about twice as fast as the stdlib parser
+# driving the same block model.
+_ATTR = re.compile(r"""(?<=['"\s/])([^\s/>][^\s/=>]*)"""
+                   r"""(?:\s*=+\s*('[^']*'|"[^"]*"|(?!['"])[^>\s]*))?""")
+_SEP = r"(?:\s|/(?!>))*"
 _SCAN = re.compile(
-    r"<!--.*?-->"                                   # comments
-    r"|<!\[CDATA\[.*?\]\]>"                          # CDATA
-    r"|<![^>]*>|<\?[^>]*>"                           # doctype / PI
-    r"|<(/?)([a-zA-Z][^\s/>]*)((?:\"[^\"]*\"|'[^']*'|[^>])*?)(/?)>",
+    r"<(?:!--.*?--\s*>"                                       # comment
+    r"|!\[(?:(?i:cdata|temp|ignore|include|rcdata)(?![-_.a-zA-Z0-9]).*?\]\s*\]"
+    r"|(?i:if|else|endif)(?![-_.a-zA-Z0-9]).*?\])\s*>"        # marked section
+    r"|!(?!--|\[)[^>]*>|\?[^>]*>"                             # doctype, bogus comment, PI
+    r"|/(?:\s*(?P<end>[a-zA-Z][-.a-zA-Z0-9:_]*)\s*"           # end tag
+    r"|(?P<end2>[a-zA-Z][^\t\n\r\f />\x00]*)[^>]*|[^>]*)>"    # ... with junk; </>: ignored
+    r"|(?P<tag>[a-zA-Z][^\t\n\r\f />\x00]*+)"                 # start tag
+    rf"(?P<attrs>(?>{_SEP}(?:{_ATTR.pattern}{_SEP})*))(?P<selfclose>/?)>"
+    r"|(?P<text>[a-zA-Z/!?](?:[^>]*>|[^<>]*(?=<))|))",        # unclosed markup, stray <
     re.S,
 )
-# (?<![-\w]) keeps plain src= from matching inside data-src= — the two
-# attributes must stay distinct or the fast path would disagree with
-# the stdlib parser's attribute dict on lazy-loaded images
-_SRC = re.compile(
-    r"""(?<![-\w])src\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+))""", re.I)
-_SRCSET = re.compile(
-    r"""(?<![-\w])srcset\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+))""", re.I)
-_DATASRC = re.compile(
-    r"""\bdata-src\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+))""", re.I)
-_DATASRCSET = re.compile(
-    r"""\bdata-srcset\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]+))""", re.I)
+_RAWTEXT_END = {t: re.compile(rf"</\s*{t}\s*>", re.I) for t in ("script", "style")}
 
 
-def _scan_events(fragment: str, sink: "_BlockParser") -> None:
-    """Drive sink's handle_* hooks from the regex scanner, mirroring
-    html.parser's convert_charrefs=True behavior."""
-    from html import unescape
+def _attrs(fragment: str, start: int, end: int) -> list[tuple[str, str | None]]:
+    """(name, value) pairs of the attributes in fragment[start:end]."""
+    out = []
+    for m in _ATTR.finditer(fragment, start, end):
+        name, value = m.groups()
+        if value and value[0] in "'\"":
+            value = value[1:-1]
+        out.append((name.lower(), unescape(value) if value else value))
+    return out
 
-    pos = 0
-    for m in _SCAN.finditer(fragment):
-        s, e = m.span()
+
+def _scan(fragment: str, sink: _BlockParser) -> None:
+    """Drive sink's handle_* methods over the fragment's markup."""
+    pos, n = 0, len(fragment)
+    while pos < n:
+        m = _SCAN.search(fragment, pos)
+        s = m.start() if m else n
         if s > pos:
             data = fragment[pos:s]
             sink.handle_data(unescape(data) if "&" in data else data)
-        pos = e
-        closing, tag, attrs_s, selfclose = m.group(1, 2, 3, 4)
+        if m is None:
+            return
+        pos = m.end()
+        tag = m["tag"]
         if tag is None:
-            continue  # comment/doctype/CDATA — ignored, like the stdlib hooks
+            if m["text"] is not None:
+                data = m.group()
+                sink.handle_data(unescape(data) if "&" in data else data)
+            elif end := m["end"] or m["end2"]:
+                sink.handle_endtag(end.lower())
+            continue   # comment, declaration, PI: ignored
         tag = tag.lower()
-        attrs_s = attrs_s or ""
-        if closing:
+        attrs = _attrs(fragment, *m.span("attrs")) if tag in MEDIA_TAGS else []
+        if m["selfclose"]:
+            sink.handle_startendtag(tag, attrs)
+            continue
+        sink.handle_starttag(tag, attrs)
+        if tag in _RAWTEXT_END:
+            # script/style content is never markup (skipped unread); left
+            # open, it runs to the end of the input
+            close = _RAWTEXT_END[tag].search(fragment, pos)
+            if close is None:
+                return
             sink.handle_endtag(tag)
-        else:
-            # attrs parsed lazily: only media tags need any (src/srcset
-            # + their data- lazy-load twins)
-            attrs = []
-            if tag in MEDIA_TAGS and "src" in attrs_s.lower():
-                for name, rx in (("src", _SRC), ("srcset", _SRCSET),
-                                 ("data-src", _DATASRC),
-                                 ("data-srcset", _DATASRCSET)):
-                    a = rx.search(attrs_s)
-                    if a:
-                        attrs.append(
-                            (name, a.group(1) or a.group(2) or a.group(3)))
-            if selfclose:
-                sink.handle_startendtag(tag, attrs)
-            else:
-                sink.handle_starttag(tag, attrs)
-    if pos < len(fragment):
-        data = fragment[pos:]
-        sink.handle_data(unescape(data) if "&" in data else data)
+            pos = close.end()
 
 
-def tokenize_html(fragment: str, cfg: ExtractConfig = DEFAULT,
-                  use_stdlib: bool = False) -> list[HtmlItem]:
-    """E4+E5+E6 for one HTML payload → ordered classified items."""
-    p = _BlockParser()
-    try:
-        if use_stdlib:
-            p.feed(fragment)
-            p.close()
-        else:
-            _scan_events(fragment, p)
-            while p._tables:
-                p._close_table()
-            while p._blocks:
-                p._close_block()
-    except Exception:
-        pass
+def _classify(items, cfg: ExtractConfig) -> list[HtmlItem]:
+    """The block model's items in document order, scored and labelled."""
     out: list[HtmlItem] = []
-    for _seq, typ, payload in sorted(p.items, key=lambda t: t[0]):
+    for _seq, typ, payload in sorted(items, key=lambda t: t[0]):
         if typ == "media":
             out.append(HtmlItem("media", "", None, payload or None, 0, 0.0, "media"))
             continue
-        if typ == "table":
-            text, link_ratio = payload
-            # word count excludes the cell/row separator tokens
-            words = sum(1 for w in text.split() if w not in ("|", ";"))
-            keep = (link_ratio <= cfg.html_max_link_ratio
-                    and words >= cfg.html_min_words)
-            out.append(HtmlItem(
-                "text", "table", text or None, None, words, link_ratio,
-                "content" if keep else "boilerplate",
-            ))
-            continue
         tag, text, link_ratio = payload
-        words = len(text.split()) if text else 0
+        # a table's word count excludes the cell/row separator tokens
+        words = (sum(1 for w in text.split() if w not in ("|", ";"))
+                 if tag == "table" else len(text.split()))
         keep = (link_ratio <= cfg.html_max_link_ratio and words >= cfg.html_min_words) or (
             tag in HEADING_TAGS and words >= cfg.html_heading_min_words
         )
@@ -346,6 +351,17 @@ def tokenize_html(fragment: str, cfg: ExtractConfig = DEFAULT,
             "content" if keep else "boilerplate",
         ))
     return out
+
+
+def tokenize_html(fragment: str, cfg: ExtractConfig = DEFAULT) -> list[HtmlItem]:
+    """E4+E5+E6 for one HTML payload → ordered classified items."""
+    p = _BlockParser()
+    try:
+        _scan(fragment, p)
+        p.finish()
+    except Exception:
+        pass
+    return _classify(p.items, cfg)
 
 
 def extract_html_items(fragment: str, cfg: ExtractConfig = DEFAULT) -> list[HtmlItem]:

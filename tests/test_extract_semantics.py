@@ -94,9 +94,29 @@ def test_partitioning_invariance(spark):
     assert _spark_extraction(spark, 1) == _spark_extraction(spark, 17)
 
 
+def _stdlib_tokenize(fragment: str, cfg=DEFAULT):
+    """The reference tokenizer: stdlib html.parser drives the same block
+    model that the production scanner drives, and the items are
+    classified the same way.  Only the reading of the markup differs."""
+    from html.parser import HTMLParser
+
+    from ocr_spark.functions.htmlx import _BlockParser, _classify
+
+    model = _BlockParser()
+    parser = HTMLParser(convert_charrefs=True)
+    for hook in ("handle_starttag", "handle_startendtag", "handle_endtag",
+                 "handle_data"):
+        setattr(parser, hook, getattr(model, hook))
+    parser.feed(fragment)
+    parser.close()
+    model.finish()
+    return _classify(model.items, cfg)
+
+
 def test_fast_html_tokenizer_equals_stdlib():
-    # the regex scanner is the hot path; the stdlib html.parser drive is
-    # kept as a second implementation and must agree item-for-item
+    # the regex scanner is the only production tokenizer; html.parser
+    # driving the same block model is the reference it must equal
+    # item-for-item
     from ocr_spark.functions.htmlx import tokenize_html
 
     frags = [
@@ -105,7 +125,7 @@ def test_fast_html_tokenizer_equals_stdlib():
     ]
     assert frags, "corpus produced no html payloads"
     for f in frags:
-        assert tokenize_html(f, DEFAULT) == tokenize_html(f, DEFAULT, use_stdlib=True)
+        assert tokenize_html(f, DEFAULT) == _stdlib_tokenize(f)
 
 
 # ---------------------------------------------------------------------------
@@ -281,9 +301,64 @@ def test_fast_html_tokenizer_fuzz_equals_stdlib(fragment):
     # produce the same item stream
     from ocr_spark.functions.htmlx import tokenize_html
 
-    assert tokenize_html(fragment, DEFAULT) == tokenize_html(
-        fragment, DEFAULT, use_stdlib=True
-    )
+    assert tokenize_html(fragment, DEFAULT) == _stdlib_tokenize(fragment)
+
+
+#: media tags with 0-4 attributes, quoted or bare values, charrefs, a
+#: "src=" inside another attribute's value, a trailing "/", duplicate
+#: attributes and empty srcset candidates
+_media_attr = st.builds(
+    lambda name, value, quote, eq: (
+        name if quote is None else f"{name}{eq}{quote}{value}{quote}"),
+    st.sampled_from(["src", "srcset", "data-src", "data-srcset", "alt",
+                     "title", "class", "SRC"]),
+    st.sampled_from(["a.png", "img://x/1.png", "a.png?x=1&amp;y=2", "src=x",
+                     "a.png/", "x.png 2x, y.png 1x", ", x.png 2x", ",", "",
+                     "q&lt;r", "two words", "data-src=z.png"]),
+    st.sampled_from(['"', "'", "", None]),
+    st.sampled_from(["=", " = "]),
+)
+_media_tag = st.builds(
+    lambda tag, attrs, sep, end: (
+        f"<{tag}{sep if attrs else ''}{sep.join(attrs)}{end}"),
+    st.sampled_from(["img", "source", "video", "audio", "IMG"]),
+    st.lists(_media_attr, max_size=4),
+    st.sampled_from([" ", "\n"]),
+    st.sampled_from([">", "/>", " />"]),
+)
+
+
+@given(st.lists(_media_tag, min_size=1, max_size=3))
+@settings(max_examples=2000, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_html_media_attribute_fuzz_equals_stdlib(tags):
+    # the attribute grammar: every media_ref (and every item around the
+    # tags) must equal the stdlib parser drive's
+    from ocr_spark.functions.htmlx import tokenize_html
+
+    frag = ("<p>lead words here</p><div>before " + " ".join(tags)
+            + " after text</div><p>tail words</p>")
+    assert tokenize_html(frag) == _stdlib_tokenize(frag)
+
+
+@given(st.lists(st.sampled_from([
+    "<p>", "</p>", "<div>", "</div>", "<a href='x'>", "</a>", "</ ", "</>",
+    "</ p>", "<", ">", "word ", "more words ", "&amp;", "&", '"', "'",
+    "<img src=", "a.png", "/>", "=", " ", "<!--", "-->", "<!", "<?",
+    "<table>", "<td>", "</td>", "<tr>", "</table>", "<nav>", "</nav>",
+    "<script>", "</script>", "a<b", "<h1>", "</h1>", "<li>", "/",
+    "<!doctype html>", "<![CDATA[", "]]>", "<style>", "</style>", "\n",
+    "<P>", "</P >", "<a b=\"x\"c>", "<br/>", "<p/>", "<nav/>",
+]), max_size=40))
+@settings(max_examples=500, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_html_tag_soup_fuzz_equals_stdlib(pieces):
+    # markup pieces in any order: unclosed quotes and comments, stray
+    # "<", bogus end tags, script content holding "<"
+    from ocr_spark.functions.htmlx import tokenize_html
+
+    frag = "".join(pieces)
+    assert tokenize_html(frag) == _stdlib_tokenize(frag)
 
 
 def test_manifest_verify_detects_tampering(spark, tmp_path):
@@ -1170,7 +1245,12 @@ def test_form_xobject_corpus_extracts_identically(spark):
 def test_html_media_tags_emit_refs():
     """video/audio/source emit media items (src, else first srcset
     candidate); bare containers add nothing; skip subtrees still
-    suppress; fast scanner ≡ stdlib parser on media-rich fragments."""
+    suppress; fast scanner ≡ stdlib parser on media-rich fragments.
+    Attributes: charrefs are decoded, a "src=" inside another value is
+    no attribute, a bare value keeps its trailing "/", the first
+    non-empty srcset candidate and the first duplicate win; the text
+    after the tag survives.  Bogus end tags, a stray "<" and script
+    content read as the stdlib parser reads them."""
     from ocr_spark.functions.htmlx import tokenize_html
 
     frag = (
@@ -1185,10 +1265,47 @@ def test_html_media_tags_emit_refs():
         '</body></html>'
     )
     items = tokenize_html(frag)
-    assert items == tokenize_html(frag, use_stdlib=True)
+    assert items == _stdlib_tokenize(frag)
     media = [it.media_ref for it in items if it.kind == "media"]
     assert media == ["vid://a.mp4", "aud://b.ogg", "img://big.png",
                      "img://fallback.png", "vid://c.webm"]
+
+    for tag, ref in {
+        '<img src="a.png?x=1&amp;y=2">': "a.png?x=1&y=2",
+        '<img alt="src=x" src="real.png">': "real.png",
+        "<img src=a.png/>": "a.png/",
+        '<img srcset=", x.png 2x">': "x.png",
+        '<img srcset=",">': None,
+        '<img src="one.png" SRC="two.png">': "one.png",
+    }.items():
+        frag = (f"<p>lead words</p><div>text before {tag} text after</div>"
+                f"<p>tail words</p>")
+        items = tokenize_html(frag)
+        assert items == _stdlib_tokenize(frag), tag
+        assert [(it.kind, it.text, it.media_ref) for it in items] == [
+            ("text", "lead words", None),
+            ("text", "text before text after", None),
+            ("media", None, ref),
+            ("text", "tail words", None),
+        ], tag
+
+    # "</" then a letter, after optional whitespace, is an end tag (the
+    # stdlib parser reads "</ p>" as "</p>"); any other "</…>" is
+    # ignored; a stray "<" is text; script content is never markup, so
+    # "a<b" in a script hides nothing after it
+    for frag, want in {
+        "<p>alpha beta</ p>gamma</p>": [("p", "alpha beta")],
+        "<p>delta</>epsilon</p>": [("p", "deltaepsilon")],
+        "<p>zeta</ 1>eta</p>": [("p", "zetaeta")],
+        '<p><a href="/x">a < b</a> plain words</p>': [
+            ("p", "a < b plain words")],
+        "<script>if (a<b) go();</script><p>after the script</p>": [
+            ("p", "after the script")],
+        "<p>kept</p><script>open <p>never closed": [("p", "kept")],
+    }.items():
+        items = tokenize_html(frag)
+        assert items == _stdlib_tokenize(frag), frag
+        assert [(it.tag, it.text) for it in items] == want, frag
 
 
 def test_rotated_pages_extract_identically():
@@ -1292,7 +1409,7 @@ def test_html_table_linearized_and_classified():
         "</body></html>"
     )
     items = tokenize_html(frag)
-    assert items == tokenize_html(frag, use_stdlib=True)
+    assert items == _stdlib_tokenize(frag)
     tables = [it for it in items if it.tag == "table"]
     assert len(tables) == 3, [(t.tag, t.text) for t in items]
     data, linkfarm, nested = tables
@@ -1316,7 +1433,7 @@ def test_html_table_block_tags_bind_to_cell():
     frag = ("<table><tr><td><p>first para words</p><p>second para here</p>"
             "</td><td>plain cell text words</td></tr></table>")
     items = tokenize_html(frag)
-    assert items == tokenize_html(frag, use_stdlib=True)
+    assert items == _stdlib_tokenize(frag)
     assert [it.tag for it in items] == ["table"]
     assert items[0].text == (
         "first para words second para here | plain cell text words")
@@ -1335,8 +1452,7 @@ def test_html_table_corpus_extracts_identically(spark):
              if s["kind"] == "html"]
     assert any("<table>" in f for f in frags), "knob produced no tables"
     for f in frags:
-        assert tokenize_html(f, DEFAULT) == tokenize_html(
-            f, DEFAULT, use_stdlib=True)
+        assert tokenize_html(f, DEFAULT) == _stdlib_tokenize(f)
 
     want = {}
     for d in docs:
@@ -1958,12 +2074,12 @@ def test_lazy_load_images_both_parsers():
         '<img data-srcset="https://cdn.example/lazyset.png 640w, x 1x"/>'
         "</div></body></html>"
     )
-    for stdlib in (False, True):
-        items = tokenize_html(frag, DEFAULT, use_stdlib=stdlib)
+    for tokenize in (tokenize_html, _stdlib_tokenize):
+        items = tokenize(frag, DEFAULT)
         refs = [i.media_ref for i in items if i.kind == "media"]
         assert refs == ["https://cdn.example/lazy.png",
                         "https://cdn.example/eager.png",
-                        "https://cdn.example/lazyset.png"], (stdlib, refs)
+                        "https://cdn.example/lazyset.png"], (tokenize, refs)
 
 
 def test_dehyphenation_config():
@@ -1989,30 +2105,41 @@ def test_dehyphenation_config():
 
 def test_html_corruption_never_raises():
     """HTML twin of the PDF corruption gate: truncated / bit-flipped
-    fragments must never raise in EITHER parser path (regex fast path
-    and stdlib html.parser) — malformed markup degrades to partial
-    extraction.  (A/B equality is only promised on well-formed markup;
-    here the contract is graceful degradation.)"""
+    fragments must never raise in the scanner or the block model —
+    malformed markup degrades to partial extraction, the same as the
+    stdlib parser drive's.  Driven without tokenize_html's guard, so a
+    raise fails the test."""
     import random
 
-    from ocr_spark.functions.htmlx import tokenize_html
+    from ocr_spark.functions.htmlx import _BlockParser, _classify, _scan
+
+    def tokenize(fragment):
+        model = _BlockParser()
+        _scan(fragment, model)
+        model.finish()
+        items = _classify(model.items, DEFAULT)
+        assert items == _stdlib_tokenize(fragment)
+        return items
 
     frags = [s["text"] for d in make_docs(40, seed=3, mega_every=30,
                                           html_table_every=2)
              for s in d["spans"] if s["kind"] == "html"]
     assert frags
+    # an empty first srcset candidate once raised and lost every item
+    # after the tag
+    srcset = ('<p>lead words</p><div>text <img srcset=", x.png 2x"> more'
+              '</div><p>tail words</p>')
+    assert [it.text or it.media_ref for it in tokenize(srcset)] == [
+        "lead words", "text more", "x.png", "tail words"]
     rng = random.Random(11)
-    for f in frags:
+    for f in frags + [srcset]:
         for cut in (1, len(f) // 3, 2 * len(f) // 3, len(f) - 2):
-            for stdlib in (False, True):
-                tokenize_html(f[:cut], DEFAULT, use_stdlib=stdlib)
+            tokenize(f[:cut])
         for _ in range(2):
             b = list(f)
             for _ in range(6):
                 b[rng.randrange(len(b))] = chr(rng.randrange(32, 127))
-            m = "".join(b)
-            for stdlib in (False, True):
-                tokenize_html(m, DEFAULT, use_stdlib=stdlib)
+            tokenize("".join(b))
 
 
 def test_pdf_outline_bookmarks_lead_document():
